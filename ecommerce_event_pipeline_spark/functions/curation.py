@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import shingle_sets
+from .dedup import shingle_sets, word_kgrams
 
 
 def contamination_check(
@@ -471,16 +471,13 @@ def doc_repetition(docs: DataFrame, k: int = 3) -> DataFrame:
     earlier k-gram in the same document. Boilerplate and degenerate
     generations score high; natural prose scores near zero.
 
-    Pure row-local array expressions — the corpus streams through one
-    codegen'd projection, no shuffle.
+    Pure row-local array expressions (tokens, then k-grams) — no
+    shuffle.
     """
-    toks = F.split(F.lower(F.col("text")), " ")
-    n = F.size(toks)
-    starts = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    grams = F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
+    grams = F.col("_grams")
     total = F.size(grams)
     distinct = F.size(F.array_distinct(grams))
-    return docs.select(
+    return word_kgrams(docs, k).select(
         "doc_id",
         total.alias("total_ngrams"),
         distinct.alias("distinct_ngrams"),

@@ -39,21 +39,55 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _shingles(text_col: str, k: int = 5) -> F.Column:
-    """Word k-shingles as strings (distinct), from lowercase whitespace
-    tokens. Built-ins only: slice over a sequence of start offsets."""
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    n = F.size(toks)
-    starts = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.array_distinct(
-        F.transform(starts, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
+def word_kgrams(docs: DataFrame, k: int, gram=None) -> DataFrame:
+    """``docs`` plus ``_toks``, the lowercase whitespace tokens of
+    ``text``, and ``_grams``, one word k-gram per start position (a
+    document shorter than ``k`` gives its one truncated gram), each
+    mapped through ``gram`` when given. Built-ins only.
+
+    The split is its own projection and every gram slices the projected
+    token column, so a document is lowered and split once. Inside the
+    per-start lambda the split would re-run at every start position
+    (higher-order functions get no subexpression elimination) and make
+    each document quadratic in its length. CollapseProject keeps the
+    token projection because the gram expression reads it twice."""
+    toks = docs.withColumn("_toks", F.split(F.lower(F.col("text")), " "))
+    starts = F.sequence(
+        F.lit(1), F.greatest(F.size("_toks") - (k - 1), F.lit(1))
+    )
+    to_gram = gram or (lambda g: g)
+    return toks.withColumn(
+        "_grams",
+        F.transform(
+            starts,
+            lambda i: to_gram(F.concat_ws(" ", F.slice("_toks", i, k))),
+        ),
     )
 
 
 def shingle_sets(docs: DataFrame, k: int = 5) -> DataFrame:
-    return docs.select(
-        "doc_id", _shingles("text", k).alias("shingles")
+    """Distinct word k-shingles per document, with their count."""
+    return word_kgrams(docs, k).select(
+        "doc_id", F.array_distinct("_grams").alias("shingles")
     ).withColumn("shingle_count", F.size("shingles"))
+
+
+def pinned_shingle_sets(docs: DataFrame, k: int = 5) -> DataFrame:
+    """:func:`shingle_sets` materialized once (``pin_frame``), for plans
+    that read the sets from several branches (df counts, capped sets,
+    both sides of a self-join, the verify join). Lazy sets would not be
+    shared: Spark pushes each branch's own filters (``size(shingles) >
+    0`` from ``explode``, ``isnotnull(doc_id)`` from the joins) into the
+    shingle projection, so no two branches plan the same subtree, no
+    exchange is reused, and every branch re-runs the transform. Against
+    the pinned ``ExistingRDD`` scan those filters are cheap.
+
+    ``docs`` is hash-partitioned on ``doc_id`` first so the transform
+    runs in shuffle-partition tasks (AQE coalesces them on small
+    inputs) rather than in one task per input file."""
+    from ..operators.windows import pin_frame
+
+    return pin_frame(shingle_sets(docs.repartition("doc_id"), k))
 
 
 def ngram_jaccard_pairs(
@@ -84,16 +118,12 @@ def ngram_jaccard_pairs(
     Stop-shingles carry no near-dup signal, so threshold-grade pairs are
     unaffected (on the fixtures the cap never binds: max df ≈ 7 at
     sf0.01 vs cap 50)."""
-    # Cost barrier (same reason as minhash_signatures): the shingle
-    # expression is the dominant per-row cost and this plan references
-    # sets_df from up to four branches (stop-list build, capped sets, and
-    # both sides of the self-join). Without an exchange each branch
-    # re-evaluates the whole shingle transform; with it, Spark's exchange
-    # reuse serves every branch from one materialized pass — measured 4×
-    # on dedup_corpus_stats at sf0.1. Callers running several
-    # shingle-consuming queries can pass a shared (cached) ``sets_df``.
+    # This plan reads sets_df from up to four branches (stop-list build,
+    # capped sets, both sides of the self-join), so the fallback is the
+    # pinned base: one shingle stage per query, where the lazy sets ran
+    # the transform in three separate stages (see pinned_shingle_sets).
     if sets_df is None:
-        sets_df = shingle_sets(docs, k).repartition("doc_id")
+        sets_df = pinned_shingle_sets(docs, k)
     exploded = sets_df.select(
         "doc_id", "shingle_count", F.explode("shingles").alias("shingle")
     )
@@ -203,7 +233,7 @@ def jaccard_prefix_pairs(
     if not (0 < num <= den):
         raise ValueError("threshold must be a rational in (0, 1]")
     if sets_df is None:
-        sets_df = shingle_sets(docs, k).repartition("doc_id")
+        sets_df = pinned_shingle_sets(docs, k)
     exploded = sets_df.select(
         "doc_id", "shingle_count", F.explode("shingles").alias("shingle")
     )
@@ -817,25 +847,28 @@ def cross_doc_span_stats(
     grading run, and both engines hash identically so the comparison
     stays bit-exact regardless.
     """
-    toks = F.split(F.lower(F.col("text")), " ")
-    n = F.size(toks)
-    starts = F.sequence(F.lit(1), F.greatest(n - (span - 1), F.lit(1)))
-    spans = F.transform(
-        starts,
-        lambda i: F.conv(
-            F.substring(F.md5(F.concat_ws(" ", F.slice(toks, i, span))), 1, 15),
-            16,
-            10,
-        ).cast("long"),
+    spans = word_kgrams(
+        docs,
+        span,
+        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
     )
-    g = docs.select("doc_id", F.explode(spans).alias("span_h"))
-    # total span count is positional — size(starts) = max(n − span + 1, 1)
-    # — so it computes row-locally from the token count alone: no md5, no
+    # explode_OUTER + null guard: plain explode infers `size(_grams) > 0`
+    # and Spark pushes it below the token projection, where it runs the
+    # gram transform again with the split inlined at every start. The
+    # outer form infers no filter; gram hashes are never NULL, so the
+    # guard only drops the row of a NULL text, as plain explode would.
+    g = spans.select(
+        "doc_id", F.explode_outer("_grams").alias("span_h")
+    ).where(F.col("span_h").isNotNull())
+    # total span count is positional — max(n − span + 1, 1) — so it
+    # computes row-locally from the token count alone: no md5, no
     # explode, no shuffle for this leg (the r6 form aggregated the
     # exploded table a third time).
-    totals = docs.select(
+    totals = spans.select(
         "doc_id",
-        F.greatest(n - (span - 1), F.lit(1)).cast("long").alias("total_spans"),
+        F.greatest(F.size("_toks") - (span - 1), F.lit(1))
+        .cast("long")
+        .alias("total_spans"),
     )
     # Single-materialization form: one (span, doc) multiplicity
     # aggregate, then docs-per-span as a COUNT window over the span

@@ -366,8 +366,12 @@ def _lloyd_partials(embeddings: DataFrame, cents: np.ndarray) -> DataFrame:
     the row-order partial aggregation of the previous posexplode →
     groupBy formulation — on a single-split scan the sums are
     bit-identical to it, and across tasks the driver folds partials in
-    collect (partition) order, which is deterministic for a fixed input
-    layout where shuffle-fetch merge order was not."""
+    collect (partition) order. The sums are therefore deterministic only
+    for a fixed input layout whose per-partition row order is also
+    deterministic: a shuffle-fed ``embeddings`` frame can reorder rows
+    within a partition from run to run, and the float sums can then
+    differ at the ulp level (the same exposure as the old shuffle-merge
+    sum)."""
     k, dim = cents.shape
 
     def partials(pdfs):

@@ -53,6 +53,10 @@ def grouped_exact_percentiles(
     Every intermediate is group-partitioned; nothing is ever globally
     sorted or single-task. ``percentiles`` maps output column name → p.
     """
+    if not percentiles:
+        raise ValueError(
+            "percentiles must map at least one output column name to a p"
+        )
     if num_partitions is None:
         num_partitions = int(
             df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")

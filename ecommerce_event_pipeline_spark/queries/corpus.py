@@ -863,10 +863,11 @@ def lsh_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both tiers reuse the shared shingle scan; the agreement join runs on
     pair keys. This evaluates the same code paths minhash_near_dupes and
     ngram_jaccard_pairs execute — no re-implementation drift."""
-    truth = _ngram_pairs_shared(spark, sf_dir).select(
+    sets_df = _shingle_sets_shared(spark, sf_dir, 3)
+    truth = _ngram_pairs_shared(spark, sf_dir, sets_df).select(
         "doc_id_1", "doc_id_2"
     )
-    cand = _minhash_candidates_shared(spark, sf_dir).select(
+    cand = _minhash_candidates_shared(spark, sf_dir, sets_df).select(
         "doc_id_1", "doc_id_2"
     )
     tp = truth.join(cand, ["doc_id_1", "doc_id_2"], "left_semi")

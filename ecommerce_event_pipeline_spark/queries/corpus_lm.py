@@ -617,10 +617,9 @@ def doc_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny high-df head, the same skew profile as the stop-shingle list
     the dedup family already caps."""
     docs = read_table(spark, sf_dir, "documents")
-    # shared k=3 sets (repartition barrier → the exploded base's exchange
-    # is reused across the three consuming branches: src totals, df
-    # counts, and the per-doc rollup — without it the shingle transform
-    # re-evaluates per branch, the CollapseProject trap dedup.py documents)
+    # shared k=3 sets, pinned: the three consuming branches (src totals,
+    # df counts, the per-doc rollup) scan the materialized rows instead
+    # of each re-running the shingle transform
     sets_df = _shingle_sets_shared(spark, sf_dir, 3)
     ex = sets_df.join(
         docs.select("doc_id", "source"), "doc_id"

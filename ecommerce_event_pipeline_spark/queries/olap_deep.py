@@ -30,24 +30,33 @@ ORDER BY 1
 """
 
 
+def _round_signed(x, scale: int):
+    """``round(x, scale)`` that keeps the sign of a negative value which
+    rounds to zero, as DuckDB's ROUND does (-0.0). Spark rounds through
+    BigDecimal, which has no negative zero, so it returns 0.0 there."""
+    r = F.round(x, scale)
+    return F.when((r == 0) & (x < 0), F.lit(-0.0)).otherwise(r)
+
+
 @register("lineitem_stats_by_flag", _LINEITEM_STATS_ORACLE)
 def lineitem_stats_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-moment statistical aggregates per group: Pearson correlation,
     population covariance/variance/stddev — single map-side-combinable
     hash aggregate (co-moment partials merge associatively, so the shuffle
     carries |groups| rows). ROUND bounds the partition-order float drift
-    (relative error ~1e-11, far inside 2-4 decimals)."""
+    (relative error ~1e-11, far inside 2-4 decimals); the signed
+    statistics round with ``_round_signed``."""
     li = read_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
             F.count("*").alias("n_lines"),
-            F.round(F.corr("l_quantity", "l_extendedprice"), 4).alias(
+            _round_signed(F.corr("l_quantity", "l_extendedprice"), 4).alias(
                 "qty_price_corr"
             ),
-            F.round(F.covar_pop("l_quantity", "l_extendedprice"), 2).alias(
-                "qty_price_covar"
-            ),
+            _round_signed(
+                F.covar_pop("l_quantity", "l_extendedprice"), 2
+            ).alias("qty_price_covar"),
             F.round(F.stddev_pop("l_extendedprice"), 2).alias("price_stddev"),
             F.round(F.var_pop("l_quantity"), 4).alias("qty_var"),
         )

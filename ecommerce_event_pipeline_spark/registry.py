@@ -1132,10 +1132,11 @@ def minhash_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays signatures, buckets, AND the verification — the whole T3
     pipeline is value-hash graded, with spark.ml MinHashLSH recall
     cross-checked in tests/test_ml_crosscheck.py."""
+    sets_df = _shingle_sets_shared(spark, sf_dir, 3)
     return dedup.minhash_near_dupes(
         read_table(spark, sf_dir, "documents"), num_hashes=64, bands=16, k=3,
-        threshold=0.2, sets_df=_shingle_sets_shared(spark, sf_dir, 3),
-        cands_df=_minhash_candidates_shared(spark, sf_dir),
+        threshold=0.2, sets_df=sets_df,
+        cands_df=_minhash_candidates_shared(spark, sf_dir, sets_df),
     )
 
 
@@ -1435,6 +1436,10 @@ def json_order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     # product_daily, same shape). The outer variant infers no filter;
     # the payloads here are built from a non-empty collect_list so no
     # NULL item row ever exists, and the guard keeps that airtight.
+    # The guard is NOT row-identical to plain explode in general: plain
+    # explode emits a NULL array ELEMENT as a row (a NULL product_id
+    # group), while the filter drops it with the empty-array rows. Only
+    # the non-null collect_list payload makes the two forms agree here.
     items = with_payload.select(
         "l_orderkey",
         F.explode_outer(

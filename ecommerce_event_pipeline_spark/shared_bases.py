@@ -26,11 +26,14 @@ _SHINGLE_CACHE: dict[tuple, DataFrame] = {}
 
 
 def _shingle_sets_shared(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """Shared shingle scan for the dedup family: the shingle transform is
-    the dominant per-doc cost and three registered queries (exact Jaccard,
-    corpus dedup, MinHash) consume the same k=3 sets — with
-    ``SPARK_GRAFT_CACHE_EVENTS=1`` (bench) it is computed once and served
-    from cache, the same sharing the reference applies across its marts."""
+    """Shared shingle base for the dedup family: the shingle transform is
+    the dominant per-doc cost and every consuming query reads the sets
+    from several plan branches. The base is pinned
+    (``dedup.pinned_shingle_sets``), so each query runs the transform in
+    one stage and every branch scans the materialized rows. With
+    ``SPARK_GRAFT_CACHE_EVENTS=1`` (bench) one pin per (session, dir) is
+    served to every query, the same sharing the reference applies across
+    its marts."""
     import os
 
     from .sources.readers import session_key
@@ -39,18 +42,17 @@ def _shingle_sets_shared(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFr
     key = session_key(spark, sf_dir, str(k))
     if cache_on and key in _SHINGLE_CACHE:
         return _SHINGLE_CACHE[key]
-    sets_df = dedup.shingle_sets(read_table(spark, sf_dir, "documents"), k)
-    # barrier for exchange reuse when several plan branches consume it
-    sets_df = sets_df.repartition("doc_id")
+    sets_df = dedup.pinned_shingle_sets(read_table(spark, sf_dir, "documents"), k)
     if cache_on:
-        _SHINGLE_CACHE[key] = sets_df.cache()
-        return _SHINGLE_CACHE[key]
+        _SHINGLE_CACHE[key] = sets_df
     return sets_df
 
 _NGRAM_PAIRS_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _ngram_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ngram_pairs_shared(
+    spark: SparkSession, sf_dir: str, sets_df: DataFrame | None = None
+) -> DataFrame:
     """Shared exact-Jaccard pair table (k=3, df≤50 universe, θ=0.2 — the
     lowest threshold any registry consumer uses): eight queries re-derive
     this same shingle-self-join + group-by, so under
@@ -66,7 +68,10 @@ def _ngram_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     13–15 s vs 10–13 s (fresh sessions, min over repeats) — the cache
     materialization barrier breaks partial-agg fusion into each consumer.
     Rule of thumb (docs/SCALING.md "Cross-query base sharing"): don't
-    extend this pattern below ≈5 consumers without new measurements."""
+    extend this pattern below ≈5 consumers without new measurements.
+
+    A query that also reads the shingle sets elsewhere passes its
+    ``sets_df`` so the base is pinned once per query."""
     import os
 
     from .sources.readers import session_key
@@ -75,9 +80,11 @@ def _ngram_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = session_key(spark, sf_dir, "ngram-pairs-3-50-02")
     if cache_on and key in _NGRAM_PAIRS_CACHE:
         return _NGRAM_PAIRS_CACHE[key]
+    if sets_df is None:
+        sets_df = _shingle_sets_shared(spark, sf_dir, 3)
     pairs = dedup.ngram_jaccard_pairs(
         read_table(spark, sf_dir, "documents"), k=3, threshold=0.2,
-        max_df=50, sets_df=_shingle_sets_shared(spark, sf_dir, 3),
+        max_df=50, sets_df=sets_df,
     )
     if cache_on:
         _NGRAM_PAIRS_CACHE[key] = pairs.cache()
@@ -87,12 +94,15 @@ def _ngram_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MINHASH_CAND_CACHE: dict[tuple, DataFrame] = {}
 
 
-def _minhash_candidates_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _minhash_candidates_shared(
+    spark: SparkSession, sf_dir: str, sets_df: DataFrame | None = None
+) -> DataFrame:
     """Shared LSH candidate-pair table (64 hashes × 16 bands, k=3): the
     signature scan dominates both consumers (the verify pipeline and the
     precision/recall audit), so under ``SPARK_GRAFT_CACHE_EVENTS=1``
     (bench) it is computed once — same sharing as
-    ``_shingle_sets_shared`` / ``_ngram_pairs_shared``."""
+    ``_shingle_sets_shared`` / ``_ngram_pairs_shared``, including the
+    optional ``sets_df``."""
     import os
 
     from .sources.readers import session_key
@@ -101,9 +111,11 @@ def _minhash_candidates_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = session_key(spark, sf_dir, "minhash-cands-64-16-3")
     if cache_on and key in _MINHASH_CAND_CACHE:
         return _MINHASH_CAND_CACHE[key]
+    if sets_df is None:
+        sets_df = _shingle_sets_shared(spark, sf_dir, 3)
     cands = dedup.minhash_lsh_candidates(
         read_table(spark, sf_dir, "documents"), num_hashes=64, bands=16,
-        k=3, sets_df=_shingle_sets_shared(spark, sf_dir, 3),
+        k=3, sets_df=sets_df,
     )
     if cache_on:
         _MINHASH_CAND_CACHE[key] = cands.cache()

@@ -89,14 +89,44 @@ def test_embedding_near_dupes_broadcasts_candidates(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_jaccard_self_join_reuses_one_shingle_pass(spark):
-    # the shingle transform must be computed once and served to every
-    # branch (stop-list, capped sets, both join sides) via exchange reuse —
-    # AQE only marks the reuse in the final (post-execution) plan
-    df = registry.queries()["ngram_jaccard_pairs"](spark, SF_DIR)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan or "InMemoryTableScan" in plan, plan[:2000]
+#: the k-gram lambda of functions/dedup.word_kgrams as it prints in a
+#: physical plan; every place a plan evaluates the shingle transform
+#: carries it
+_SHINGLE_TRANSFORM = "lambdafunction(concat_ws("
+
+
+def _final_plan(df) -> str:
+    """The executed physical plan, without the initial plan that an
+    adaptive plan also prints."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_pair_queries_evaluate_the_shingle_transform_once(spark, monkeypatch):
+    # Count the transform across every executed plan of the query: its
+    # own plan and the plan of each frame it pinned. One is the contract:
+    # a lazy or repartitioned base lets Spark push each branch's filters
+    # into the shingle projection, and every branch then re-runs it.
+    from ecommerce_event_pipeline_spark.operators import windows
+
+    pinned = []
+    pin = windows.pin_frame
+
+    def recording_pin(df):
+        pinned.append(df)
+        return pin(df)
+
+    monkeypatch.setattr(windows, "pin_frame", recording_pin)
+    for name in ("jaccard_prefix_pairs", "ngram_jaccard_pairs"):
+        pinned.clear()
+        df = registry.queries()[name](spark, SF_DIR)
+        df.collect()
+        counts = [
+            _final_plan(d).count(_SHINGLE_TRANSFORM) for d in (df, *pinned)
+        ]
+        assert sum(counts) == 1, (name, counts)
 
 
 def test_doc_chunks_is_shuffle_free(spark):
@@ -211,6 +241,10 @@ def test_span_stats_explodes_the_corpus_once(spark):
     the O(tokens) md5 explode itself)."""
     plan = plan_of("span_dedup_stats", spark)
     assert plan.count("Generate") == 1, plan[:2000]
+    # the digests slice the projected token column (split once per doc),
+    # and no filter inferred from the explode re-runs the transform
+    assert "slice(_toks" in plan, plan[:2000]
+    assert plan.count("md5(cast(concat_ws(") == 1, plan[:2000]
     # and the window is keyed — partitioned by the span digest, not global
     m = re.search(r"Window.*\[span_h", plan)
     assert m or "windowspecdefinition(span_h" in plan, plan[:2000]

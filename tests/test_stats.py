@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from ecommerce_event_pipeline_spark.functions import stats
@@ -122,6 +123,45 @@ def test_grouped_exact_percentiles_matches_builtin(spark):
         .collect()
     }
     assert got == exp  # exact equality, not approx — bit parity is the point
+
+
+def test_grouped_exact_percentiles_rejects_empty_dict(spark):
+    from ecommerce_event_pipeline_spark.functions.stats import (
+        grouped_exact_percentiles,
+    )
+
+    df = spark.createDataFrame([("a", 1.0)], "g string, v double")
+    with pytest.raises(ValueError, match="percentiles"):
+        grouped_exact_percentiles(df, "v", {}, ["g"])
+
+
+def test_lineitem_stats_keep_sign_of_negative_values_rounded_to_zero(
+    spark, tmp_path
+):
+    """A correlation in (-0.00005, 0) rounds to -0.0 in DuckDB's ROUND
+    and to 0.0 in Spark's; the query must give the oracle's -0.0 (and
+    likewise for a covariance in (-0.005, 0))."""
+    import duckdb
+
+    from ecommerce_event_pipeline_spark import registry
+
+    rows = [("A", 1.0, 1000.0), ("A", 2.0, 0.0), ("A", 3.0, 999.99)]
+    spark.createDataFrame(
+        rows, "l_returnflag string, l_quantity double, l_extendedprice double"
+    ).coalesce(1).write.parquet(f"{tmp_path}/lineitem.parquet")
+    got = registry.queries()["lineitem_stats_by_flag"](
+        spark, str(tmp_path)
+    ).collect()[0]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet/*.parquet'"
+    )
+    exp = con.execute(registry.oracle_sql()["lineitem_stats_by_flag"]).fetchone()
+    assert -0.00005 < con.execute(
+        "SELECT corr(l_quantity, l_extendedprice) FROM lineitem"
+    ).fetchone()[0] < 0
+    assert repr(got["qty_price_corr"]) == repr(exp[2]) == "-0.0"
+    assert repr(got["qty_price_covar"]) == repr(exp[3]) == "-0.0"
 
 
 def test_value_percentiles_null_and_all_null_groups(spark):
