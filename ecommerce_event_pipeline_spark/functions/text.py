@@ -122,26 +122,6 @@ def _char_ngrams(col: F.Column, n: int = 3) -> F.Column:
     )
 
 
-def build_language_profiles(docs: DataFrame, top_n: int = 200) -> DataFrame:
-    """Offline profile builder: top-N trigrams per language from a LABELED
-    corpus. This is a training-time job, not a query-time one — run it once
-    (or via tools/build_lang_profiles.py, which commits the result as a
-    static table) and broadcast the output at scoring time."""
-    from pyspark.sql import Window
-
-    freqs = (
-        docs.select("lang", F.explode(_char_ngrams(F.col("text"))).alias("gram"))
-        .groupBy("lang", "gram")
-        .agg(F.count("*").alias("gram_freq"))
-    )
-    w = Window.partitionBy("lang").orderBy(F.desc("gram_freq"), "gram")
-    return (
-        freqs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= top_n)
-        .select("lang", "gram")
-    )
-
-
 def language_id_ngram(docs: DataFrame, profiles: DataFrame | None = None) -> DataFrame:
     """Character-trigram language-ID, score-only: each document's trigram
     occurrences are matched against a small STATIC profile table

@@ -123,22 +123,8 @@ def running_user_spend(events: DataFrame, amount_type: str = "purchase") -> Data
 def pin_frame(df: DataFrame) -> DataFrame:
     """Eagerly materialize a bounded intermediate that fans out into
     several consumer branches (``localCheckpoint`` — the guide-§5
-    persist-when-reused trade the query call sites opted into in r13),
-    with a PLAN-ONLY escape hatch: when ``SPARK_GRAFT_PLAN_ONLY=1`` the
-    frame is returned lazy, so tooling that only builds plans (explain
-    audits over every registered query) triggers zero data jobs at query
-    construction (ADVICE r13). The hatch trades plan fidelity for
-    laziness — the audited plan shows the full subtree instead of the
-    ``ExistingRDD`` scan — which is the right trade for invariant scans
-    (no unpartitioned window, join strategies) but NOT for timing.
-    Iterative fixed-point queries keep raw ``localCheckpoint`` on
-    purpose: without lineage truncation their plan itself grows
-    exponentially in the iteration count, and a plan-only consumer
-    would hang in the optimizer instead."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_PLAN_ONLY") == "1":
-        return df
+    persist-when-reused trade), so the branches scan its rows instead of
+    each re-running the subtree that builds them."""
     return df.localCheckpoint()
 
 

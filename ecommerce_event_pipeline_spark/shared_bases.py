@@ -1,4 +1,4 @@
-"""Shared dedup base tables and their session caches.
+"""Shared dedup base tables.
 
 Split from registry.py (round-10 review fix): queries/corpus.py and
 queries/sampling.py consume these, and importing them from the registry
@@ -8,10 +8,11 @@ _reorder_registry() before that submodule had registered anything, and
 silently corrupt the graded front-50 order. This module imports nothing
 from registry, so any import order is safe.
 
-The caches follow the bench sharing convention: with
-``SPARK_GRAFT_CACHE_EVENTS=1`` each base is computed once per
-(session, dir) and served from cache (see the r7/r8 measurements quoted
-in the docstrings; don't extend the pattern below ~5 consumers).
+Sharing follows the one session memo in ``sources.readers``: under its
+one gate, ``SPARK_GRAFT_CACHE_EVENTS=1``, each base is built once per
+(session, dir) and served to every query, and ``clear_memo()`` drops
+them all (see the r7/r8 measurements quoted in the docstrings; don't
+extend the pattern below ~5 consumers).
 """
 
 from __future__ import annotations
@@ -19,10 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .functions import dedup
-from .sources.readers import read_table
-
-
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
+from .sources.readers import memo, read_table, shared_base, sharing_on
 
 
 def _shingle_sets_shared(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
@@ -30,24 +28,14 @@ def _shingle_sets_shared(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFr
     the dominant per-doc cost and every consuming query reads the sets
     from several plan branches. The base is pinned
     (``dedup.pinned_shingle_sets``), so each query runs the transform in
-    one stage and every branch scans the materialized rows. With
-    ``SPARK_GRAFT_CACHE_EVENTS=1`` (bench) one pin per (session, dir) is
-    served to every query, the same sharing the reference applies across
-    its marts."""
-    import os
+    one stage and every branch scans the materialized rows. Under
+    ``sharing_on()`` one pin per (session, dir) is served to every query;
+    the pin already materializes, so it is memoized without a cache."""
 
-    from .sources.readers import session_key
+    def build() -> DataFrame:
+        return dedup.pinned_shingle_sets(read_table(spark, sf_dir, "documents"), k)
 
-    cache_on = os.environ.get("SPARK_GRAFT_CACHE_EVENTS") == "1"
-    key = session_key(spark, sf_dir, str(k))
-    if cache_on and key in _SHINGLE_CACHE:
-        return _SHINGLE_CACHE[key]
-    sets_df = dedup.pinned_shingle_sets(read_table(spark, sf_dir, "documents"), k)
-    if cache_on:
-        _SHINGLE_CACHE[key] = sets_df
-    return sets_df
-
-_NGRAM_PAIRS_CACHE: dict[tuple, DataFrame] = {}
+    return memo(spark, ("shingles", sf_dir, k), build) if sharing_on() else build()
 
 
 def _ngram_pairs_shared(
@@ -55,12 +43,11 @@ def _ngram_pairs_shared(
 ) -> DataFrame:
     """Shared exact-Jaccard pair table (k=3, df≤50 universe, θ=0.2 — the
     lowest threshold any registry consumer uses): eight queries re-derive
-    this same shingle-self-join + group-by, so under
-    ``SPARK_GRAFT_CACHE_EVENTS=1`` (bench) it is computed once and
-    higher-threshold consumers (0.5 leakage, 0.6 corpus dedup) filter
-    the cached rounded ``jaccard`` — bit-identical to filtering inside
-    the join, since the threshold predicate is the last step either
-    way.
+    this same shingle-self-join + group-by, so as a ``shared_base`` it is
+    computed once under the bench gate and higher-threshold consumers
+    (0.5 leakage, 0.6 corpus dedup) filter the cached rounded ``jaccard``
+    — bit-identical to filtering inside the join, since the threshold
+    predicate is the last step either way.
 
     Sharing pays HERE (11 consumers; family ~48 s → ~28 s, r7) but the
     r8 A/B proved it is a LOSS at 2–3 consumers: the shared HLL register
@@ -72,26 +59,15 @@ def _ngram_pairs_shared(
 
     A query that also reads the shingle sets elsewhere passes its
     ``sets_df`` so the base is pinned once per query."""
-    import os
 
-    from .sources.readers import session_key
+    def build() -> DataFrame:
+        sets = _shingle_sets_shared(spark, sf_dir, 3) if sets_df is None else sets_df
+        return dedup.ngram_jaccard_pairs(
+            read_table(spark, sf_dir, "documents"), k=3, threshold=0.2,
+            max_df=50, sets_df=sets,
+        )
 
-    cache_on = os.environ.get("SPARK_GRAFT_CACHE_EVENTS") == "1"
-    key = session_key(spark, sf_dir, "ngram-pairs-3-50-02")
-    if cache_on and key in _NGRAM_PAIRS_CACHE:
-        return _NGRAM_PAIRS_CACHE[key]
-    if sets_df is None:
-        sets_df = _shingle_sets_shared(spark, sf_dir, 3)
-    pairs = dedup.ngram_jaccard_pairs(
-        read_table(spark, sf_dir, "documents"), k=3, threshold=0.2,
-        max_df=50, sets_df=sets_df,
-    )
-    if cache_on:
-        _NGRAM_PAIRS_CACHE[key] = pairs.cache()
-        return _NGRAM_PAIRS_CACHE[key]
-    return pairs
-
-_MINHASH_CAND_CACHE: dict[tuple, DataFrame] = {}
+    return shared_base(spark, ("ngram-pairs-3-50-02", sf_dir), build)
 
 
 def _minhash_candidates_shared(
@@ -99,28 +75,19 @@ def _minhash_candidates_shared(
 ) -> DataFrame:
     """Shared LSH candidate-pair table (64 hashes × 16 bands, k=3): the
     signature scan dominates both consumers (the verify pipeline and the
-    precision/recall audit), so under ``SPARK_GRAFT_CACHE_EVENTS=1``
-    (bench) it is computed once — same sharing as
-    ``_shingle_sets_shared`` / ``_ngram_pairs_shared``, including the
-    optional ``sets_df``."""
-    import os
+    precision/recall audit), so as a ``shared_base`` it is computed once
+    under the bench gate — same sharing as ``_ngram_pairs_shared``,
+    including the optional ``sets_df``."""
 
-    from .sources.readers import session_key
+    def build() -> DataFrame:
+        sets = _shingle_sets_shared(spark, sf_dir, 3) if sets_df is None else sets_df
+        return dedup.minhash_lsh_candidates(
+            read_table(spark, sf_dir, "documents"), num_hashes=64, bands=16,
+            k=3, sets_df=sets,
+        )
 
-    cache_on = os.environ.get("SPARK_GRAFT_CACHE_EVENTS") == "1"
-    key = session_key(spark, sf_dir, "minhash-cands-64-16-3")
-    if cache_on and key in _MINHASH_CAND_CACHE:
-        return _MINHASH_CAND_CACHE[key]
-    if sets_df is None:
-        sets_df = _shingle_sets_shared(spark, sf_dir, 3)
-    cands = dedup.minhash_lsh_candidates(
-        read_table(spark, sf_dir, "documents"), num_hashes=64, bands=16,
-        k=3, sets_df=sets_df,
-    )
-    if cache_on:
-        _MINHASH_CAND_CACHE[key] = cands.cache()
-        return _MINHASH_CAND_CACHE[key]
-    return cands
+    return shared_base(spark, ("minhash-cands-64-16-3", sf_dir), build)
+
 
 _DEDUP_CLUSTERS_ORACLE = """
 WITH RECURSIVE t AS (

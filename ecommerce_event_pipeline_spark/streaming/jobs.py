@@ -28,15 +28,18 @@ from pyspark.sql import functions as F
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the fixture events parquet.
 
-    The file stream source requires an explicit schema, so we resolve it
-    from the actual parquet footer via the SAME helper the batch reader
-    uses (``sources.readers.events_ts_layout``) and apply the ns→µs repair
-    only when ``ts`` resolved as raw INT64 nanos — a micros fixture streams
-    straight through as TimestampType. Sharing the helper keeps the two
+    The file stream source requires an explicit schema, so we take the
+    SAME memoized schema the batch reader uses
+    (``sources.readers.table_schema``) and apply the ns→µs repair only
+    when ``ts`` resolved as raw INT64 nanos — a micros fixture streams
+    straight through as TimestampType. Sharing the schema keeps the two
     paths from diverging on the layout branch (the round-2 regression)."""
-    from ..sources.readers import _repair_ns_ts, events_ts_layout
+    from ..sources.readers import _repair_ns_ts, table_schema, ts_is_long
 
-    schema, ts_is_long = events_ts_layout(spark, sf_dir)
+    base = f"{sf_dir.rstrip('/')}/events.parquet"
+    schema = table_schema(spark, sf_dir, "events")
+    if "ts" not in schema.fieldNames():
+        raise ValueError(f"malformed events fixture (no ts column): {base}")
     # the file stream source requires a DIRECTORY basePath. Two fixture
     # layouts exist: the driver testdata ships events.parquet as a single
     # FILE (point the stream at sf_dir + a name glob), while Spark-written
@@ -45,7 +48,6 @@ def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # leaves are part-*.parquet), so stream from the directory itself.
     import os
 
-    base = f"{sf_dir.rstrip('/')}/events.parquet"
     if os.path.isdir(base):
         raw = spark.readStream.schema(schema).parquet(base)
     else:
@@ -54,7 +56,7 @@ def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir.rstrip("/"))
         )
-    if ts_is_long:
+    if ts_is_long(schema):
         return _repair_ns_ts(raw)
     # a micros fixture resolves as TIMESTAMP_NTZ, which EventTimeWatermark
     # rejects; with the session timezone pinned UTC the cast to TIMESTAMP

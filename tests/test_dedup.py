@@ -255,19 +255,24 @@ def test_triangle_counts_canonical_edges(spark):
 
 class TestBenchCacheCoherence:
     """The bench runs with SPARK_GRAFT_CACHE_EVENTS=1, which routes the
-    dedup family through three shared cached tables (shingle sets, the
-    θ=0.2 Jaccard pair table, the LSH candidate table) while the
-    correctness gate runs uncached — so a cache-keying or
-    threshold-filter bug would corrupt only the benchmarked plans.
-    Pin cached == uncached on representative consumers of all three."""
+    dedup family through four shared bases in the session memo (shingle
+    sets, the θ=0.2 Jaccard pair table, the LSH candidate table, the
+    SimHash fingerprints) while the correctness gate runs unshared — so a
+    memo-keying or threshold-filter bug would corrupt only the benchmarked
+    plans. Pin cached == uncached on representative consumers of all four."""
 
     @pytest.mark.parametrize(
         "name",
-        ["ngram_jaccard_pairs", "dedup_corpus_stats", "lsh_eval_report"],
+        [
+            "ngram_jaccard_pairs",
+            "dedup_corpus_stats",
+            "lsh_eval_report",
+            "simhash_near_dupes",
+        ],
     )
     def test_cached_results_match_uncached(self, spark, monkeypatch, name):
         import __spark_entry__ as e
-        from ecommerce_event_pipeline_spark import registry
+        from ecommerce_event_pipeline_spark.sources.readers import clear_memo
 
         sf = "/root/testdata/sf0.001"
         fn = e.queries()[name]
@@ -279,13 +284,6 @@ class TestBenchCacheCoherence:
             again = [tuple(r) for r in fn(spark, sf).collect()]  # cache hit
         finally:
             # unpersist so the session fixture carries no cached state
-            for store in (
-                registry._SHINGLE_CACHE,
-                registry._NGRAM_PAIRS_CACHE,
-                registry._MINHASH_CAND_CACHE,
-            ):
-                for df in store.values():
-                    df.unpersist()
-                store.clear()
+            clear_memo()
         assert sorted(map(str, cached)) == sorted(map(str, plain))
         assert sorted(map(str, again)) == sorted(map(str, plain))

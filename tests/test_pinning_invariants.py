@@ -104,9 +104,7 @@ def _lineage_has_pin(
         return False
     for node in ast.walk(expr):
         # a raw .localCheckpoint() call, a pin_frame(...) call, or
-        # .transform(pin_frame) — all three spell the same pin (pin_frame
-        # is the env-hatched wrapper; plan-only tooling may disable it,
-        # which is exactly the reviewed trade)
+        # .transform(pin_frame) — all three spell the same pin
         if isinstance(node, ast.Call) and _called_name(node) in (
             "localCheckpoint",
             "pin_frame",
