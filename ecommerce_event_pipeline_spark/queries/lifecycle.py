@@ -14,12 +14,19 @@ repo's cross-engine exactness discipline:
   composed in one fixed expression tree;
 - PageRank runs entirely in BIGINT fixed-point (1e12 scale): per-edge
   contributions use exact integer division and the per-node sum is an
-  order-independent BIGINT sum, so five distributed iterations produce
+  order-independent integer sum, so its five iterations produce
   byte-identical ranks in any partitioning — no float accumulation ever.
+
+The integer fixed points (PageRank, HITS, the Markov stationary
+distribution) iterate over catalog-bounded state: each collects its
+edge or transition-count table once and runs every step as an int64
+numpy fold on the driver, then hands the result back as a small frame.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -342,52 +349,68 @@ ORDER BY pagerank_fp DESC, product_id
 """
 
 
+def _div(num, den):
+    """Spark's ``div`` on int64 arrays. Spark truncates and numpy floors;
+    the two agree because every operand here is non-negative."""
+    assert (np.asarray(num) >= 0).all() and (np.asarray(den) > 0).all()
+    return num // den
+
+
+def _collect_edges(edges: DataFrame):
+    """(node ids, src index, dst index) of a ``src``/``dst`` edge table,
+    collected once; indices point into the sorted node ids."""
+    e = edges.toPandas()
+    ends = np.concatenate([e["src"], e["dst"]]).astype(np.int64)
+    nodes, idx = np.unique(ends, return_inverse=True)
+    return nodes, idx[: len(e)], idx[len(e) :]
+
+
 def pagerank_fixed_point(
     edges: DataFrame, iters: int = _PR_ITERS, scale: int = _PR_SCALE
 ) -> DataFrame:
-    """Distributed PageRank in BIGINT fixed-point (damping 0.85).
+    """PageRank in BIGINT fixed-point (damping 0.85).
 
     ``edges`` columns: ``src``, ``dst`` (directed, pre-deduplicated).
     Per-iteration: contribution = r_src div outdeg (exact integer
-    division), incoming sum is an order-independent BIGINT sum, and
+    division), incoming sum is an order-independent integer sum, and
     r' = base + (85·Σ) div 100 — every arithmetic op is exact integer
     math, so results are byte-identical in any partitioning/engine
     (a float formulation would hash-drift: grouped double sums
-    accumulate in partition order). Requires every node to have an
-    out-edge (true for symmetric co-occurrence graphs); N and the two
-    derived constants are bounded driver-side scalars.
+    accumulate in partition order). The ranked nodes start as those
+    with an out-edge (N of them, r = scale div N); after each step they
+    are the nodes that received a contribution, as in the oracle's
+    join-and-group form. An empty graph ranks nothing.
 
-    Scale shape: each iteration is one shuffle join of the (static,
-    checkpointed) edge table against the rank table keyed by src plus
-    one groupBy dst — the textbook distributed PageRank; iteration
-    count is a constant, and localCheckpoint truncates the growing
-    lineage."""
-    # checkpoint the (possibly expensive) edge derivation FIRST: deg,
-    # the e join, the node count, and the rank init all consume it — an
-    # un-materialized edges plan would re-run its derivation per job
-    # (review r10: ~3x the co-view self-join cost at sf0.1+)
-    edges = edges.localCheckpoint()
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg")).localCheckpoint()
-    e = edges.join(deg, "src").localCheckpoint()  # consumed by all 5 iterations
-    n = deg.count()  # bounded scalar: node count, not data
-    base = (15 * scale // 100) // n
-    ranks = deg.select(F.col("src").alias("k"), F.lit(scale // n).alias("r"))
-    for _ in range(iters):
-        ranks = (
-            e.join(ranks, e["src"] == ranks["k"])
-            .select("dst", F.expr("r div deg").alias("contrib"))
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("s"))
-            .select(
-                F.col("dst").alias("k"),
-                (F.lit(base) + F.expr("(85 * s) div 100")).alias("r"),
-            )
+    Scale shape: the edge table is collected once; the iterations are
+    int64 numpy folds over it on the driver (O(edges) each, no Spark
+    job). The state is one score per node, so the edge table must fit
+    in driver memory: node pairs, bounded by catalog², not by events."""
+    nodes, src, dst = _collect_edges(edges)
+    deg = np.bincount(src, minlength=len(nodes))
+    ranked = deg > 0
+    r = np.zeros(len(nodes), np.int64)
+    if len(nodes):  # an empty graph has no N to divide by
+        n = int(ranked.sum())
+        base = _div(15 * scale // 100, n)
+        r[ranked] = _div(scale, n)
+        for _ in range(iters):
+            live = ranked[src]
+            s = np.zeros(len(nodes), np.int64)
+            np.add.at(s, dst[live], _div(r[src[live]], deg[src[live]]))
+            ranked = np.bincount(dst[live], minlength=len(nodes)) > 0
+            r = np.where(ranked, base + _div(85 * s, 100), 0)
+    pdf = pd.DataFrame({"product_id": nodes[ranked], "pagerank_fp": r[ranked]})
+    return (
+        edges.sparkSession.createDataFrame(pdf, "product_id long, pagerank_fp long")
+        .select(
+            "product_id",
+            "pagerank_fp",
+            F.round(F.col("pagerank_fp").cast("double") / float(scale), 6).alias(
+                "pagerank"
+            ),
         )
-    return ranks.select(
-        F.col("k").alias("product_id"),
-        F.col("r").alias("pagerank_fp"),
-        F.round(F.col("r").cast("double") / float(scale), 6).alias("pagerank"),
-    ).orderBy(F.desc("pagerank_fp"), "product_id")
+        .orderBy(F.desc("pagerank_fp"), "product_id")
+    )
 
 
 @register("item_pagerank", _PAGERANK_ORACLE)
@@ -501,47 +524,36 @@ ORDER BY authority_fp DESC, hub_fp DESC, product_id
 
 
 def hits_fixed_point(
-    edges: DataFrame,
-    nodes: DataFrame,
-    iters: int = _HITS_ITERS,
-    scale: int = _HITS_SCALE,
+    edges: DataFrame, iters: int = _HITS_ITERS, scale: int = _HITS_SCALE
 ) -> DataFrame:
-    """HITS hubs & authorities in BIGINT fixed-point. Per half-step the
-    raw score is an order-independent BIGINT sum over edges, then
-    normalized to [0, scale] by an exact integer ``v·scale div max(v)``
-    (a float L2 normalization would hash-drift). Max is a broadcast
-    1-row aggregate; nodes missing a side's edges score 0 via the left
-    join. Bounds: raw ≤ scale·max_degree, so the rescale product stays
-    < 2⁶³ for degrees below ~9·10⁶ at scale 10⁶. The score/raw tables
-    are node-grain (catalog-bounded), hence broadcast into the edge
-    join; for catalogs too wide to broadcast, drop the hints and the
-    same plan runs as shuffle joins.
+    """HITS hubs & authorities in BIGINT fixed-point over the nodes of
+    ``edges`` (``src``, ``dst``; directed, pre-deduplicated). Per
+    half-step the raw score is an order-independent integer sum over
+    edges, then normalized to [0, scale] by an exact integer
+    ``v·scale div max(v)`` (a float L2 normalization would hash-drift).
+    Nodes missing a side's edges score 0. Bounds: raw ≤ scale·max_degree,
+    so the rescale product stays < 2⁶³ for degrees below ~9·10⁶ at
+    scale 10⁶.
 
-    Scale shape: each half-step is one edge-table join keyed on one
-    endpoint plus one groupBy on the other — same distributed shape as
-    PageRank; iteration count constant."""
-    h = nodes.select("k", F.lit(scale).cast("long").alias("h"))
-    a = None
+    Scale shape: the edge table is collected once and the half-steps run
+    as int64 numpy folds on the driver (O(edges) each, no Spark job),
+    with the same catalog²-bounded edge table as ``pagerank_fixed_point``."""
+    nodes, src, dst = _collect_edges(edges)
+    h = np.full(len(nodes), scale, np.int64)
     for _ in range(iters):
-        # each half-step references its raw sum twice (max + rejoin), so
-        # an unmaterialized chain would double per step — 2^(2·iters)
-        # plan blowup. Score tables are nodes-sized (catalog-bounded),
-        # so the half-steps broadcast them (no shuffle per join) and one
-        # localCheckpoint per iteration keeps the lineage flat
-        # (measured 51 s → ~4 s at sf0.01).
-        # checkpoint a BEFORE h consumes it — the other order materializes
-        # h with a's un-truncated lineage embedded and then re-executes
-        # a's half-step from scratch for a's own checkpoint (review r10)
-        a = _hits_half(edges, nodes, h, "src", "dst", "h", "a", scale).localCheckpoint()
-        h = _hits_half(edges, nodes, a, "dst", "src", "a", "h", scale).localCheckpoint()
+        a = _hits_half(h, src, dst, scale)
+        h = _hits_half(a, dst, src, scale)
+    pdf = pd.DataFrame({"product_id": nodes, "hub_fp": h, "authority_fp": a})
     return (
-        h.join(a.withColumnRenamed("k", "ak"), F.col("k") == F.col("ak"))
+        edges.sparkSession.createDataFrame(
+            pdf, "product_id long, hub_fp long, authority_fp long"
+        )
         .select(
-            F.col("k").alias("product_id"),
-            F.col("h").alias("hub_fp"),
-            F.col("a").alias("authority_fp"),
-            F.round(F.col("h").cast("double") / float(scale), 6).alias("hub"),
-            F.round(F.col("a").cast("double") / float(scale), 6).alias(
+            "product_id",
+            "hub_fp",
+            "authority_fp",
+            F.round(F.col("hub_fp").cast("double") / float(scale), 6).alias("hub"),
+            F.round(F.col("authority_fp").cast("double") / float(scale), 6).alias(
                 "authority"
             ),
         )
@@ -549,29 +561,15 @@ def hits_fixed_point(
     )
 
 
-def _hits_half(edges, nodes, scores, from_col, to_col, in_name, out_name, scale):
-    """One HITS half-step: push ``scores[in_name]`` along ``from_col`` →
-    ``to_col`` edges, sum per target, integer-renormalize to [0, scale]."""
-    raw = (
-        edges.join(F.broadcast(scores), edges[from_col] == scores["k"])
-        .groupBy(to_col)
-        .agg(F.sum(in_name).alias("v"))
-    )
-    mx = raw.agg(F.max("v").alias("mx"))
-    return (
-        nodes.join(
-            F.broadcast(raw.withColumnRenamed(to_col, "rk")),
-            F.col("k") == F.col("rk"),
-            "left",
-        )
-        .crossJoin(F.broadcast(mx))
-        .select(
-            "k",
-            F.coalesce(
-                F.expr(f"v * {scale} div mx"), F.lit(0).cast("long")
-            ).alias(out_name),
-        )
-    )
+def _hits_half(scores, frm, to, scale):
+    """One HITS half-step: push ``scores`` along ``frm`` → ``to`` edges,
+    sum per target, integer-renormalize to [0, scale]. When every sum is
+    0, ``v·scale div 0`` is NULL in Spark and the oracle, which they
+    coalesce to 0."""
+    v = np.zeros(len(scores), np.int64)
+    np.add.at(v, to, scores[frm])
+    mx = v.max(initial=0)
+    return _div(v * scale, mx) if mx else v
 
 
 @register("hits_scores", _HITS_ORACLE)
@@ -604,14 +602,8 @@ def hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("src") != F.col("dst"))
         .select("src", "dst")
         .distinct()
-        .localCheckpoint()
     )
-    nodes = (
-        edges.select(F.col("src").alias("k"))
-        .union(edges.select("dst"))
-        .distinct()
-    )
-    return hits_fixed_point(edges, nodes)
+    return hits_fixed_point(edges)
 
 
 # ---------------------------------------------------------------------------
@@ -689,62 +681,56 @@ ORDER BY event_type
     return chain + tail
 
 
-def _stationary_parts(events: DataFrame):
-    """(π, transition counts, row totals) of the within-session
+def _stationary_parts(events: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+    """(transition counts, π, number of states) of the within-session
     event-type chain — the shared integer fixed-point machinery behind
     `transition_stationary` and `markov_entropy_rate` (see the former's
-    docstring for the exactness and scale argument)."""
-    from pyspark.sql import Window
+    docstring for the exactness and scale argument).
 
+    The counts ``cnt`` (``a``, ``b``, ``c``) are collected once; π is a
+    small frame with one row per non-NULL state ``s`` (a type with an
+    outgoing transition): its out-transition total ``r`` and stationary mass
+    ``v`` in parts-per-billion. ``v`` is NULL for every state when a
+    step's raw mass sums to 0 or to nothing (no transition between two
+    states), as the oracle's ``div`` by a NULL or 0 sum gives."""
     w = Window.partitionBy("user_id", "event_date").orderBy("ts", "event_id")
     seq = events.select(
         "event_type", F.lead("event_type").over(w).alias("next_type")
     )
-    cnt = (
+    counts = (
         seq.where(F.col("next_type").isNotNull())
         .groupBy(F.col("event_type").alias("a"), F.col("next_type").alias("b"))
         .agg(F.count("*").cast("long").alias("c"))
-        .localCheckpoint()  # consumed by rowtot, p, and the final joins
+        .toPandas()
     )
-    rowtot = cnt.groupBy("a").agg(F.sum("c").cast("long").alias("r"))
-    states = rowtot.select(F.col("a").alias("s"))
-    p = (
-        cnt.join(F.broadcast(rowtot), "a")
-        .join(
-            F.broadcast(states), F.col("b") == F.col("s"), "left_semi"
-        )
-        .select("a", "b", F.expr(f"c * {_STAT_PSCALE} div r").alias("p"))
-        .localCheckpoint()
+    # a NULL event type counts as a state but, as in the oracle's joins,
+    # is never reached, never passes mass on, and is never reported
+    known = counts[counts["a"].notna()]
+    states, a = np.unique(known["a"].to_numpy(object), return_inverse=True)
+    n_states = len(states) + int(len(known) < len(counts))
+    b = pd.Index(states).get_indexer(known["b"])  # -1: b has no out-transition
+    c = known["c"].to_numpy(np.int64)
+    r = np.zeros(len(states), np.int64)
+    np.add.at(r, a, c)
+    pa, pb = a[b >= 0], b[b >= 0]
+    p = _div(c[b >= 0] * _STAT_PSCALE, r[pa])
+    pi = None
+    if n_states:  # no transitions: no states, and no N to divide by
+        pi = np.full(len(states), _div(_STAT_SCALE, n_states))
+        for _ in range(_STAT_ITERS):
+            raw = np.zeros(len(states), np.int64)
+            np.add.at(raw, pb, _div(pi[pa] * p, _STAT_PSCALE))
+            if not raw.sum():
+                pi = None
+                break
+            pi = _div(raw * _STAT_SCALE, raw.sum())
+    spark = events.sparkSession
+    cnt = spark.createDataFrame(counts, "a string, b string, c long")
+    v = [None] * len(states) if pi is None else pi.tolist()
+    pi = spark.createDataFrame(
+        list(zip(states.tolist(), r.tolist(), v)), "s string, r long, v long"
     )
-    n_states = states.count()
-    pi = states.select(
-        "s", F.lit(_STAT_SCALE // n_states).cast("long").alias("v")
-    ).localCheckpoint()
-    for _ in range(_STAT_ITERS):
-        raw = (
-            pi.join(F.broadcast(p), F.col("s") == F.col("a"))
-            .groupBy(F.col("b"))
-            .agg(
-                F.sum(F.expr(f"v * p div {_STAT_PSCALE}"))
-                .cast("long")
-                .alias("rv")
-            )
-        )
-        tot = raw.agg(F.sum("rv").alias("tot"))
-        pi = (
-            states.join(
-                F.broadcast(raw), F.col("s") == F.col("b"), "left"
-            )
-            .crossJoin(F.broadcast(tot))
-            .select(
-                "s",
-                F.expr(f"coalesce(rv, 0) * {_STAT_SCALE} div tot")
-                .cast("long")
-                .alias("v"),
-            )
-            .localCheckpoint()
-        )
-    return pi, cnt, rowtot
+    return cnt, pi, n_states
 
 
 @register("transition_stationary", _stationary_oracle())
@@ -758,24 +744,17 @@ def transition_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts-per-billion with sum-renormalization each step — π·p ≤
     10⁹·10⁶ and π·SCALE ≤ 10⁹·10⁹ both stay far under 2⁶³ at ANY
     corpus size because the matrix is normalized before iterating.
+    Events without a within-session transition give no rows.
     Scale shape: one lead-window pass over events (the only full-data
-    stage), then everything is event-type-grain (≤ catalog² rows);
-    each step is a broadcast join + tiny aggregate, lineage kept flat
-    with one localCheckpoint per step (same discipline that fixed the
-    HITS plan-doubling, commit 572f80b)."""
-    pi, cnt, rowtot = _stationary_parts(read_events(spark, sf_dir))
-    return (
-        pi.join(F.broadcast(rowtot), F.col("s") == F.col("a"))
-        .select(
-            F.col("s").alias("event_type"),
-            F.col("r").alias("out_transitions"),
-            F.col("v").cast("long").alias("stationary_ppb"),
-            F.round(F.col("v").cast("double") / _STAT_SCALE, 6).alias(
-                "stationary"
-            ),
-        )
-        .orderBy("event_type")
-    )
+    stage) collects the ≤ types² transition counts; the power iteration
+    is an int64 numpy fold over them on the driver."""
+    _, pi, _ = _stationary_parts(read_events(spark, sf_dir))
+    return pi.select(
+        F.col("s").alias("event_type"),
+        F.col("r").alias("out_transitions"),
+        F.col("v").alias("stationary_ppb"),
+        F.round(F.col("v").cast("double") / _STAT_SCALE, 6).alias("stationary"),
+    ).orderBy("event_type")
 
 
 # ---------------------------------------------------------------------------
@@ -938,13 +917,18 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     `transition_stationary` (shared `_stationary_parts`); each term is
     a fixed tree over one π division and one count division, summed by
     an ordered fold over the (from, to)-sorted pair list (≤ catalog²
-    elements — a scalar expression, not a data pass)."""
-    events = read_events(spark, sf_dir)
-    pi, cnt, rowtot = _stationary_parts(events)
+    elements — a scalar expression, not a data pass). Events without a
+    within-session transition raise ``ValueError``: the chain has no
+    states, so the rate is undefined (the oracle fails on ln 0)."""
+    cnt, pi, n_states = _stationary_parts(read_events(spark, sf_dir))
+    if not n_states:
+        raise ValueError(
+            "markov_entropy_rate: the events have no within-session "
+            "transitions (no user-day with two or more events)"
+        )
     pr = F.col("c").cast("double") / F.col("r").cast("double")
     terms = (
-        cnt.join(F.broadcast(rowtot), "a")
-        .join(F.broadcast(pi), F.col("s") == F.col("a"))
+        cnt.join(F.broadcast(pi), F.col("s") == F.col("a"))
         .select(
             "a",
             "b",
@@ -959,11 +943,11 @@ def markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sort_array(F.collect_list(F.struct("a", "b", "term"))).alias("tl"),
         F.count("*").cast("long").alias("n_pairs"),
     )
-    nn = rowtot.agg(F.count("*").cast("long").alias("n_states"))
     hr = -F.aggregate("tl", F.lit(0.0), lambda x, e: x + e["term"])
     return (
-        arr.crossJoin(F.broadcast(nn))
-        .select("n_states", "n_pairs", hr.alias("hr"))
+        arr.select(
+            F.lit(n_states).cast("long").alias("n_states"), "n_pairs", hr.alias("hr")
+        )
         .select(
             "n_states",
             "n_pairs",

@@ -157,10 +157,10 @@ def _infer_schema(spark: SparkSession, path: str, name: str) -> StructType:
     TIMESTAMP(MICROS) (read natively as a timestamp) or TIMESTAMP(NANOS),
     which Spark's parquet reader rejects outright (PARQUET_TYPE_ILLEGAL).
     For events, only that error earns a retry with
-    ``spark.sql.legacy.parquet.nanosAsLong`` set session-wide, which gets
-    ``ts`` back as raw INT64 ns for ``_repair_ns_ts``; a missing file or
-    corrupt footer re-raises untouched rather than flip a session-wide
-    conf on its way out.
+    ``spark.sql.legacy.parquet.nanosAsLong`` set for the one inference
+    call, which gets ``ts`` back as raw INT64 ns for ``_repair_ns_ts``
+    (the later read passes that schema explicitly and needs no flag); a
+    missing file or corrupt footer re-raises untouched.
     """
     try:
         return spark.read.parquet(path).schema
@@ -170,8 +170,13 @@ def _infer_schema(spark: SparkSession, path: str, name: str) -> StructType:
             "PARQUET_TYPE_ILLEGAL" not in msg and "TIMESTAMP(NANOS" not in msg
         ):
             raise
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
         return spark.read.parquet(path).schema
+    finally:
+        spark.conf.set(key, prev)
 
 
 def _repair_ns_ts(df: DataFrame) -> DataFrame:

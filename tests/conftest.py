@@ -23,6 +23,26 @@ def spark() -> SparkSession:
     yield s
 
 
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)``: the Spark jobs ``fn`` runs, read from the status
+    store under a fresh job group per call (the tracker keeps every
+    earlier job of a reused group)."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4()}"
+        sc.setJobGroup(group, "count the jobs of one call")
+        try:
+            fn()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+
+    return count
+
+
 _TYPE_DEFAULTS = {
     "page_view": {"page_url": "https://shop.example/p/1", "page_type": "product"},
     "click": {

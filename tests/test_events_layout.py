@@ -39,20 +39,7 @@ def _ts(df) -> list:
     return [r[0] for r in rows]
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs ``fn`` runs, read from the status store."""
-    sc = spark.sparkContext
-    group = "events-layout-test"
-    sc.setJobGroup(group, "count the jobs of one call")
-    try:
-        fn()
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setJobGroup(None, None)
-
-
-def test_nanos_and_micros_layouts_read_identically(spark, tmp_path):
+def test_nanos_and_micros_layouts_read_identically(spark, tmp_path, count_jobs):
     prev = spark.conf.get(NANOS_AS_LONG, "false")
     nanos, micros = tmp_path / "nanos", tmp_path / "micros"
     _write_events(nanos, "ns")
@@ -64,11 +51,13 @@ def test_nanos_and_micros_layouts_read_identically(spark, tmp_path):
         assert len(expected) > 0
         for d in (nanos, micros):
             assert _ts(read_table(spark, str(d), "events")) == expected
+            # the nanos retry leaves the caller's flag as it found it
+            assert spark.conf.get(NANOS_AS_LONG) == "false"
             assert _ts(read_events(spark, str(d))) == expected
             ts = streaming_events(spark, str(d)).schema["ts"].dataType
             assert isinstance(ts, TimestampType)
             # the schema is memoized: a repeat read infers nothing
-            assert _jobs(spark, lambda: read_table(spark, str(d), "events")) == 0
+            assert count_jobs(lambda: read_table(spark, str(d), "events")) == 0
 
         # a fixture rewritten in the other layout re-resolves after clear_memo
         _write_events(nanos, "us")

@@ -236,6 +236,45 @@ def test_hits_authority_and_hub_on_engineered_graph(spark, tmp_path):
     assert by_k[2]["authority_fp"] > by_k[3]["authority_fp"]
 
 
+@pytest.mark.parametrize("types", [["cart"], ["view", "cart"]])
+def test_fixed_points_on_degenerate_events_match_the_oracle(
+    spark, tmp_path, types
+):
+    import datetime as dt
+
+    import duckdb
+
+    # no view→purchase or co-view edge, so HITS and PageRank are empty.
+    # One cart event has no within-session transition: no chain states.
+    # view → cart has one state (view) that no transition re-enters:
+    # every power step's mass sums to nothing, so π is NULL.
+    rows = [
+        (i, dt.datetime(2024, 1, 1, 9 + i), 1, t, None, f'{{"k": {i}}}')
+        for i, t in enumerate(types)
+    ]
+    _write_events(spark, str(tmp_path), rows)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/events.parquet/*.parquet')"
+    )
+    names = ["hits_scores", "item_pagerank", "transition_stationary"]
+    oracles = registry.oracle_sql()
+    if len(types) == 1:
+        # no states: the entropy rate is undefined and both engines refuse it
+        with pytest.raises(ValueError, match="no within-session transitions"):
+            registry.queries()["markov_entropy_rate"](spark, str(tmp_path))
+        with pytest.raises(duckdb.OutOfRangeException, match="logarithm of zero"):
+            con.sql(oracles["markov_entropy_rate"]).fetchall()
+    else:
+        names.append("markov_entropy_rate")
+    for name in names:
+        sdf = registry.queries()[name](spark, str(tmp_path))
+        rel = con.sql(oracles[name])
+        assert sdf.columns == rel.columns, name
+        assert sdf.collect() == rel.fetchall(), name
+
+
 def test_time_decay_attribution_exact_integer_split(spark, tmp_path):
     import datetime as dt
 

@@ -2,7 +2,10 @@
 
 Times a list of registered queries standalone in one session — bench
 methodology (`collect()` wall time, shared bases pre-warmed) — reporting
-cold + min-of-N warm seconds, and optionally dumps
+cold + min-of-N warm seconds and the cold rep's Spark job counts per
+phase (``build_jobs``: the query function, ``exec_jobs``: its
+``collect()``; each phase runs under its own job group and is counted
+from the status tracker), and optionally dumps
 ``explain('formatted')`` per query to ``plans/<round>/<q>_<tag>.txt``.
 
 Usage:
@@ -64,18 +67,27 @@ def main() -> None:
         base(spark, args.sf_dir).count()
 
     qs = registry.queries()
+    sc = spark.sparkContext
     out = {}
     for name in names:
         fn = qs[name]
         times = []
         for i in range(max(1, args.reps)):
-            spark.sparkContext.setJobDescription(f"opt_probe:{name}#{i}")
             t0 = time.perf_counter()
-            fn(spark, args.sf_dir).collect()
+            sc.setJobGroup(f"opt_probe:{name}#{i}:build", f"build {name}")
+            df = fn(spark, args.sf_dir)
+            sc.setJobGroup(f"opt_probe:{name}#{i}:exec", f"execute {name}")
+            df.collect()
             times.append(round(time.perf_counter() - t0, 3))
-        spark.sparkContext.setJobDescription(None)
-        out[name] = {"cold": times[0], "warm_min": min(times[1:] or times)}
-        print(f"{name}: cold={times[0]:.2f} warm_min={out[name]['warm_min']:.2f} all={times}", flush=True)
+        sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = {
+            f"{phase}_jobs": len(sc.statusTracker().getJobIdsForGroup(f"opt_probe:{name}#0:{phase}"))
+            for phase in ("build", "exec")
+        }
+        out[name] = {"cold": times[0], "warm_min": min(times[1:] or times), **jobs}
+        print(f"{name}: cold={times[0]:.2f} warm_min={out[name]['warm_min']:.2f} all={times} "
+              f"build_jobs={jobs['build_jobs']} exec_jobs={jobs['exec_jobs']}", flush=True)
         if args.tag:
             plan_dir = os.path.join(REPO, "plans", args.round_dir)
             os.makedirs(plan_dir, exist_ok=True)
