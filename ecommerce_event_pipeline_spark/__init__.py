@@ -14,7 +14,7 @@ Layout
 ------
 - ``session``    : SparkSession builder tuned for local[N] and cluster use
 - ``schemas``    : explicit schemas (event log, purchase payload, fixtures)
-- ``sources``    : readers/writers (JSONL, Parquet, CSV, JDBC-shaped)
+- ``sources``    : readers/writers (JSONL, Parquet) and the event generator
 - ``operators``  : mart queries + relational (join/agg/window) operators
 - ``quality``    : the 7 data-quality checks as single-pass DataFrame aggs
 - ``functions``  : text analysis, dedup, similarity search, multimodal

@@ -12,8 +12,8 @@ the I/O boundary made injectable: callers (and tests) pass a ``transport``
 callable, so the engine never opens a network connection on its own — the
 default transport is constructed lazily and only when a URL is configured.
 
-Payload/prompt CONSTRUCTION stays in ``reports.py``
-(`build_slack_payload`, `build_llm_prompt`); this module only moves bytes.
+Prompt CONSTRUCTION stays in ``reports.py`` (`build_llm_prompt`); the
+DAG builds its own webhook text payloads. This module only moves bytes.
 """
 
 from __future__ import annotations

@@ -640,78 +640,13 @@ def simhash_dupes(
     )
 
 
-def dedup_clusters(
-    docs: DataFrame, pairs: DataFrame, max_iters: int = 15
-) -> DataFrame:
-    """Connected components over a near-dup pair graph → canonical cluster
-    ids (min doc_id per component) for EVERY document — the assignment a
-    dedup pipeline actually materializes (keep cluster_id == doc_id, drop
-    the rest).
-
-    Min-label propagation as a driver-side BSP loop: each round joins the
-    current labels across the undirected edge list and keeps the per-node
-    minimum; convergence needs diameter(graph) rounds, and near-dup
-    components are shallow (dup chains, not long paths). The edge list is
-    localCheckpoint-ed once (it feeds every round) and each round's labels
-    are checkpointed to truncate the exponentially-growing self-join
-    lineage — the standard shape for iterative DataFrame algorithms.
-
-    Raises if the graph does not converge within ``max_iters`` — a
-    truncated propagation would silently mislabel deep components (a
-    diameter-D chain needs D rounds). For deep graphs use
-    ``dedup_clusters_star`` (O(log n) rounds) instead."""
-    edges = pairs.select(
-        F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
-    )
-    und = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = docs.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    for _ in range(max_iters):
-        prop = und.join(
-            labels, und["src"] == labels["doc_id"]
-        ).select(
-            F.col("dst").alias("doc_id"),
-            "cluster_id",
-            F.lit(None).cast("long").alias("own_id"),
-        )
-        # carry each node's previous label through the same aggregation
-        # (min over propagated ∪ own, plus the own label re-derived via
-        # min(own_id)) so the convergence check below is a scan of the
-        # just-checkpointed 1-row-per-doc result instead of a second
-        # shuffle join of new×old labels — one heavy job per round, not two
-        new = (
-            labels.withColumn("own_id", F.col("cluster_id"))
-            .unionByName(prop)
-            .groupBy("doc_id")
-            .agg(
-                F.min("cluster_id").alias("cluster_id"),
-                F.min("own_id").alias("prev_cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        changed = new.where(
-            F.col("cluster_id") != F.col("prev_cluster_id")
-        ).count()
-        labels = new.select("doc_id", "cluster_id")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"dedup_clusters did not converge in {max_iters} rounds — the "
-            "pair graph has diameter > max_iters; use dedup_clusters_star "
-            "(O(log n) star contraction) for deep graphs"
-        )
-    return labels.orderBy("doc_id")
-
-
 def dedup_clusters_star(
     docs: DataFrame, pairs: DataFrame, max_iters: int = 20
 ) -> tuple[DataFrame, int]:
     """Connected components via alternating large-star / small-star
-    contraction — the O(log n)-round scale path for DEEP dup graphs where
-    min-label propagation (``dedup_clusters``, O(diameter) rounds) would
-    loop too long. Returns ``(labels, rounds)``.
+    contraction — O(log n) rounds even on DEEP dup graphs, where min-label
+    propagation (O(diameter) rounds) would loop too long. Returns
+    ``(labels, rounds)``.
 
     Each round is two grouped aggregations over the edge list:
 

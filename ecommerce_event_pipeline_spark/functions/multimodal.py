@@ -1,11 +1,9 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
 The Spark-side plumbing is real and tested — schema, partitioning, Arrow
-batch shape, ``mapInPandas`` signatures; the codec layer (PIL/ffmpeg/
-torchaudio) is not in this environment, so decode is gated behind an
-import-try with a clearly marked deterministic fake, and the real-decoder
-entry points raise ``NotImplementedError`` telling the operator what to
-install.
+batch shape, ``mapInPandas`` signatures; no codec layer (PIL/ffmpeg/
+torchaudio) is used, so every byte kernel here is a deterministic
+stand-in over the raw payload bytes.
 
 Design points for 100 TB of media:
 - media rows are (id, kind, metadata struct, payload binary) — metadata is
@@ -28,34 +26,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-try:  # the image codec is optional in this environment
-    from PIL import Image  # noqa: F401
-
-    HAS_PIL = True
-except Exception:  # pragma: no cover
-    HAS_PIL = False
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField(
-            "metadata",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType()),
-                    T.StructField("height", T.IntegerType()),
-                    T.StructField("sample_rate", T.IntegerType()),
-                    T.StructField("duration_ms", T.IntegerType()),
-                    T.StructField("codec", T.StringType()),
-                ]
-            ),
-        ),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
 
 FEATURE_SCHEMA = (
     "media_id long, kind string, payload_bytes long, byte_mean double, "
@@ -138,37 +108,6 @@ def extract_features(media: DataFrame) -> DataFrame:
     )
 
 
-def decode_image(media: DataFrame) -> DataFrame:
-    """Decode image payloads to (width, height, mode).
-
-    Real decode needs PIL, which is not installed here — the operator
-    raises with instructions rather than silently faking a decode.
-    Use ``extract_features``/``sample_frames`` for codec-free pipelines.
-    """
-    if not HAS_PIL:
-        raise NotImplementedError(
-            "image decode requires Pillow (pip install pillow); this "
-            "environment ships no codecs. The Arrow/mapInPandas plumbing "
-            "is identical to extract_features()."
-        )
-    # pragma: no cover — exercised only where PIL exists
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        from PIL import Image
-
-        for pdf in batches:
-            out = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                img = Image.open(io.BytesIO(p))
-                out.append((mid, img.width, img.height, img.mode))
-            yield pd.DataFrame(out, columns=["media_id", "width", "height", "mode"])
-
-    return media.where(F.col("kind") == "image").select(
-        "media_id", "payload"
-    ).mapInPandas(op, schema="media_id long, width int, height int, mode string")
-
-
 def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Frame sampling: 1 video row → N frame rows (deterministic fake
     frames: hash of payload + offset). Demonstrates the 1→N mapInPandas
@@ -194,20 +133,6 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
         "media_id", F.col("metadata.duration_ms").alias("duration_ms"), "payload"
     )
     return videos.mapInPandas(op, schema=FRAME_SCHEMA)
-
-
-def media_summary(media: DataFrame) -> DataFrame:
-    """Metadata-only rollup — payloads are pruned from the scan entirely
-    (check `.explain`: the parquet reader would read only kind/metadata)."""
-    return (
-        media.groupBy("kind")
-        .agg(
-            F.count("*").alias("media_count"),
-            F.avg(F.col("metadata.duration_ms")).alias("avg_duration_ms"),
-            F.avg(F.col("metadata.width")).alias("avg_width"),
-        )
-        .orderBy("kind")
-    )
 
 
 RESIZE_SCHEMA = "media_id long, orig_bytes int, resized array<int>, resized_sum long"
@@ -270,7 +195,7 @@ def perceptual_hashes(media: DataFrame, n_planted: int) -> DataFrame:
     re-encode makes, moving only the handful of bits whose byte sits
     within the shifted threshold — a near-dup by construction. A real
     deployment swaps the byte-threshold kernel for DCT-low-frequency
-    pHash over decoded pixels (codec gated, see module docstring); the
+    pHash over decoded pixels (no codec here, see module docstring); the
     Spark-side shape — narrow select, Arrow batches, 1→N emit, typed
     contract — is identical. Also emits the hash's 8 one-byte blocks
     for pigeonhole LSH blocking (Hamming ≤ 7 ⇒ at least one of 8

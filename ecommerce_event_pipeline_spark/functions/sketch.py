@@ -384,12 +384,11 @@ def log_bucket_exprs(value_col: str = "cents", m: int = 16) -> tuple[str, str]:
     (pure integer/string ops — no libm, so the JVM and DuckDB replay it
     bit-identically), and linear sub-bucket
     s = ((v − 2^p)·m) div 2^p ∈ [0, m), giving ≤ 1/m relative bucket
-    width at every magnitude. Shared by the batch quantile query
-    (``queries/sketches.ddsketch_value_quantiles``), its streaming twin
-    (``streaming/jobs.run_streaming_ddsketch``), and their pytest pins,
-    so the batch/streaming bit-equivalence can never silently diverge on
-    a one-sided retune of ``m``. The DuckDB oracle SQL spells the same
-    arithmetic out literally, as every oracle string does by design."""
+    width at every magnitude. Shared by the quantile query
+    (``queries/sketches.ddsketch_value_quantiles``) and its pytest pins,
+    so the two can never silently diverge on a one-sided retune of
+    ``m``. The DuckDB oracle SQL spells the same arithmetic out
+    literally, as every oracle string does by design."""
     p = f"length(bin({value_col})) - 1"
     pow2 = f"shiftleft(CAST(1 AS BIGINT), {p})"
     s = f"(({value_col} - {pow2}) * {m}) div {pow2}"

@@ -177,8 +177,8 @@ def grouped_ntile_histogram(
 
     Returns ``group_cols + [out_col, "n", "min_<value_col>",
     "max_<value_col>"]`` — bit-identical to aggregating the exact
-    per-row NTILE (pinned by tests/test_stats.py against
-    :func:`operators.windows.grouped_ntile`).
+    per-row NTILE (pinned by tests/test_stats.py against Spark's own
+    ``ntile`` window with the same tiebreak).
     """
     from pyspark.sql import Window as W
 

@@ -181,32 +181,15 @@ def language_id_ngram(docs: DataFrame, profiles: DataFrame | None = None) -> Dat
     )
 
 
-def doc_fingerprint(docs: DataFrame) -> DataFrame:
-    """Deterministic 64-bit content fingerprint (xxhash64 of normalized
-    text) + a positional rolling-style hash over tokens: hash each token
-    with its index and XOR-fold. All JVM-side."""
-    toks = _tokens(F.lower(F.col("text")))
-    indexed = F.transform(toks, lambda t, i: F.xxhash64(t, i))
-    folded = F.aggregate(
-        indexed, F.lit(0).cast("long"), lambda acc, h: acc.bitwiseXOR(h)
-    )
-    return docs.select(
-        "doc_id",
-        F.xxhash64(F.lower(F.col("text"))).alias("content_hash"),
-        folded.alias("rolling_hash"),
-    ).orderBy("doc_id")
-
-
 def doc_fingerprint_portable(docs: DataFrame) -> DataFrame:
-    """Engine-portable twin of :func:`doc_fingerprint`: same shape
-    (content hash + positional XOR-folded rolling hash) but built from
-    md5 prefixes instead of xxhash64, so a SQL oracle can recompute every
-    bit. 15 hex chars = 60 bits, always positive in a signed BIGINT.
+    """Per-document content hash + positional XOR-folded rolling hash,
+    built from md5 prefixes so a SQL oracle can recompute every bit.
+    15 hex chars = 60 bits, always positive in a signed BIGINT.
 
-    Production deployments should prefer :func:`doc_fingerprint`
-    (xxhash64 is one JVM intrinsic per row vs md5's digest + hex slice),
-    but both are row-local projections — no shuffle, scales linearly.
-    Token index is 1-based to match DuckDB's ``list_transform`` lambda.
+    An xxhash64 spelling would be cheaper (one JVM intrinsic per row vs
+    md5's digest + hex slice) but has no DuckDB twin; either way it is a
+    row-local projection — no shuffle, scales linearly. Token index is
+    1-based to match DuckDB's ``list_transform`` lambda.
     """
     toks = _tokens(F.lower(F.col("text")))
 

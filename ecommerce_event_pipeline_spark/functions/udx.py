@@ -1,4 +1,4 @@
-"""User-defined function surface: vectorized UDAF + UDTF machinery.
+"""User-defined function surface: vectorized pandas UDAF + scalar UDF.
 
 The reference has no UDF of any kind (SURVEY §2.11) and this engine's
 parity operators are deliberately UDF-free. This module demonstrates the
@@ -8,10 +8,8 @@ discipline as the rest of the package:
 - a GROUPED_AGG **pandas UDAF** (Arrow-vectorized: one numpy call per
   group partition, never per row) — the escape hatch for aggregates
   Catalyst lacks;
-- a Python **UDTF** (row-generating table function) — kept OUT of
-  registry/bench hot paths because UDTFs are row-at-a-time Python; the
-  production twin `bigrams_native` is the posexplode expression, and
-  tests/test_udx.py pins that both produce identical rows.
+- a SCALAR **pandas UDF** for batch model inference over an embedding
+  column (Arrow batches in, one vectorized numpy pass per batch out).
 """
 
 from __future__ import annotations
@@ -53,40 +51,6 @@ def value_median_by_type(events: DataFrame) -> DataFrame:
     )
     counts = vals.groupBy("event_type").agg(F.count("*").alias("n_values"))
     return medians.join(counts, "event_type").orderBy("event_type")
-
-
-def bigrams_native(docs: DataFrame, max_tokens: int = 30) -> DataFrame:
-    """Production path for bigram span extraction: slice + posexplode —
-    whole-stage codegen, no Python. Emits (doc_id, pos, bigram) for the
-    first ``max_tokens`` tokens of each document."""
-    toks = F.slice(F.split(F.lower(F.col("text")), " "), 1, max_tokens)
-    pairs = F.zip_with(
-        F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-        lambda a, b: F.concat(a, F.lit(" "), b),
-    )
-    return (
-        docs.select("doc_id", F.posexplode(pairs).alias("pos", "bigram"))
-        .select("doc_id", F.col("pos").cast("int").alias("pos"), "bigram")
-        .orderBy("doc_id", "pos")
-    )
-
-
-def make_bigram_udtf():
-    """The UDTF twin of :func:`bigrams_native` — registered lazily so
-    importing this module never touches the UDTF machinery on runtimes
-    that lack it. Returns the udtf-wrapped class; apply with
-    ``udtf_cls(lit(max_tokens), col("doc_id"), col("text"))``."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="doc_id bigint, pos int, bigram string")
-    class BigramUDTF:
-        def eval(self, max_tokens: int, doc_id: int, text: str):
-            toks = (text or "").lower().split(" ")[: int(max_tokens)]
-            for i in range(len(toks) - 1):
-                yield doc_id, i, toks[i] + " " + toks[i + 1]
-
-    return BigramUDTF
 
 
 #: Deterministic "model" weights for the batch-inference demo: a fixed

@@ -315,38 +315,6 @@ def promo_revenue_share(lineitem: DataFrame, part: DataFrame) -> DataFrame:
     )
 
 
-def large_orders(
-    lineitem: DataFrame,
-    orders: DataFrame,
-    customer: DataFrame,
-    min_quantity: float = 300.0,
-    top_n: int = 20,
-) -> DataFrame:
-    """TPC-H Q18-shaped: orders whose total quantity exceeds a threshold
-    (aggregate + HAVING), joined back to order/customer attributes, top-N
-    by quantity. The HAVING reduces the fact side to a tiny set before any
-    dimension join."""
-    big = (
-        lineitem.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_quantity"))
-        .where(F.col("total_quantity") > min_quantity)
-    )
-    return (
-        orders.join(F.broadcast(big), orders.o_orderkey == big.l_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .select(
-            "o_orderkey",
-            "c_custkey",
-            "c_name",
-            F.to_date("o_orderdate").alias("order_date"),
-            "o_totalprice",
-            "total_quantity",
-        )
-        .orderBy(F.desc("total_quantity"), "o_orderkey")
-        .limit(top_n)
-    )
-
-
 def rich_idle_customers(
     customer: DataFrame, orders: DataFrame, before: str = "1996-01-01"
 ) -> DataFrame:

@@ -370,8 +370,7 @@ def global_row_number(
     ``localCheckpoint`` spelling remains as the fallback for sort specs
     the boundary derivation can't express; its storage/fault-tolerance
     caveats are documented there and in docs/SCALING.md. Same structure
-    in :func:`global_ntile`, :func:`distributed_prefix_sum`, and
-    :func:`grouped_ntile`.
+    in :func:`global_ntile` and :func:`distributed_prefix_sum`.
     """
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     if num_partitions is None:
@@ -566,79 +565,4 @@ def distributed_prefix_sum(
     return out.drop(
         "_pid", *[f"_lcum{i}" for i in range(len(vcols))],
         *[f"_off{i}" for i in range(len(vcols))],
-    )
-
-
-def grouped_ntile(
-    df: DataFrame,
-    n_buckets: int,
-    group_cols,
-    order_cols,
-    out_col: str = "ntile",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact ``NTILE(n) OVER (PARTITION BY group ORDER BY ...)`` without
-    funneling any group through one task.
-
-    The classic partitioned window is fine for many small groups, but a
-    HOT group (one event type, one language) still lands on a single
-    reducer — the grouped twin of the global-window problem. Same cure:
-    range-partition on (group, order) so a big group spans partitions in
-    contiguous order ranges, take per-(partition, group) local row
-    numbers, prefix-sum the per-(group, partition) counts into offsets
-    (≤ P rows per group — a bounded partitioned window), and apply the
-    closed-form NTILE bucket arithmetic against the per-group total.
-    Bit-identical to the SQL window over a total per-group order
-    (include a tie-break in ``order_cols``).
-    """
-    if int(n_buckets) < 1:
-        # same guard as global_ntile: b = 0 reaches `_n % 0` / `_n div 0`
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    if not all(isinstance(c, str) for c in group_cols):
-        # group columns are reused as join keys by NAME; a Column object
-        # has no reliable name to rebind on the counts/offsets frames
-        raise TypeError("grouped_ntile group_cols must be column names")
-    gnames = list(group_cols)
-    gcols = [F.col(c) for c in gnames]
-    ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    part = pinned_range_partition(df, num_partitions, *gcols, *ocols)
-    local = part.withColumn(
-        "_lrn",
-        F.row_number().over(
-            Window.partitionBy("_pid", *gnames).orderBy(*ocols)
-        ),
-    )
-    cnts = part.groupBy(*gnames, "_pid").agg(F.count("*").alias("_cnt"))
-    # running offset AND group total in ONE window pass over cnts (r14
-    # fusion, same as functions/stats): `totals` as a separate groupBy
-    # branch re-executed the cnts subtree and fed a second join
-    pw = (
-        Window.partitionBy(*gnames)
-        .orderBy("_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    gw = Window.partitionBy(*gnames)
-    offs = cnts.select(
-        *gnames,
-        "_pid",
-        F.coalesce(F.sum("_cnt").over(pw), F.lit(0)).alias("_off"),
-        F.sum("_cnt").over(gw).alias("_n"),
-    )
-    b = int(n_buckets)
-    bucket = F.expr(
-        f"CASE WHEN _grk <= (_n % {b}) * (_n div {b} + 1) "
-        f"THEN (_grk - 1) div (_n div {b} + 1) + 1 "
-        f"ELSE (_n % {b}) "
-        f"  + (_grk - (_n % {b}) * (_n div {b} + 1) - 1) "
-        f"    div greatest(_n div {b}, 1) + 1 END"
-    )
-    return (
-        local.join(offs, [*gnames, "_pid"])
-        .withColumn("_grk", F.col("_off") + F.col("_lrn"))
-        .withColumn(out_col, bucket.cast("int"))
-        .drop("_pid", "_lrn", "_off", "_n", "_grk")
     )

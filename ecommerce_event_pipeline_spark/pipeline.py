@@ -193,44 +193,3 @@ def main() -> None:
 
 if __name__ == "__main__":
     main()
-
-
-def run_backfill(
-    spark: SparkSession,
-    dates: list[str],
-    output_dir: str,
-    n_users: int = 500,
-    force: bool = False,
-) -> dict[str, str]:
-    """Idempotent multi-date backfill: run the daily pipeline for every
-    date not already recorded SUCCESS in pipeline_run_log (the skip set an
-    operator expects from `airflow backfill`), re-running failed or
-    missing dates only. ``force=True`` reprocesses everything — safe
-    because every write in run_for_date is per-date dynamic-partition
-    overwrite, so a re-run REPLACES its own partitions and touches nothing
-    else.
-
-    Returns {ds: "SKIPPED" | final status}.
-    """
-    done: set[str] = set()
-    if not force:
-        try:
-            log = spark.read.parquet(f"{output_dir.rstrip('/')}/pipeline_run_log")
-            # partition-column inference reads ds back as DATE — compare
-            # in ISO-string space
-            done = {
-                r["ds"]
-                for r in log.where(F.col("status") == "SUCCESS")
-                .select(F.col("ds").cast("string").alias("ds"))
-                .distinct()
-                .collect()
-            }
-        except Exception:  # no log yet — backfill everything
-            done = set()
-    results: dict[str, str] = {}
-    for ds in dates:
-        if ds in done:
-            results[ds] = "SKIPPED"
-            continue
-        results[ds] = run_for_date(spark, ds, output_dir, n_users=n_users).status
-    return results

@@ -604,9 +604,9 @@ def value_quartiles_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     One map-side-combinable aggregate compresses events to (type, value)
     weights; the rank machinery then runs on the support, which
     SATURATES as volume grows (the same flat-at-100× shape as the exact
-    percentiles). Bit-identical to aggregating the per-row
-    ``grouped_ntile`` (pinned by tests/test_stats.py), which the oracle
-    replays as the plain SQL window."""
+    percentiles). Bit-identical to aggregating the per-row NTILE window
+    (pinned by tests/test_stats.py), which the oracle replays as the
+    plain SQL window."""
     from ..functions.stats import grouped_ntile_histogram
 
     ev = read_events(spark, sf_dir).where(F.col("value").isNotNull())

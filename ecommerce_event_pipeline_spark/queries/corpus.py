@@ -170,7 +170,7 @@ def dup_chain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by pairs² · diameter (polynomial), not path count
     (exponential). Note cluster-pruning would NOT fix this: every edge
     of the pair graph is cluster-internal by definition (clusters ARE
-    its connected components), so a semi-join against `dedup_clusters`
+    its connected components), so a semi-join against cluster
     labels is a no-op — the dedup has to happen inside the walk."""
     pairs = _ngram_pairs_shared(spark, sf_dir)
     # MATERIALIZE the edge list before the walk: a recursive CTE

@@ -108,24 +108,15 @@ def revenue_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     running-window aggregates — no ordered fold, no recursion, and the
     whole statistic stays exact BIGINT (dev_t = n·c_t − Σc, i.e. n×the
     mean deviation, clearing the division). The alarm threshold is the
-    classic h = 5σ with σ_dev = √(n·Σc² − (Σc)²); see
-    `cusum_from_daily` for the shared read-off and the overflow-safe σ.
-    Day-grain input ⇒ the windowed part is calendar-bounded; the only
-    full-data pass is the map-side-combinable daily aggregate.
+    classic h = 5σ with σ_dev = √(n·Σc² − (Σc)²), Σc² accumulated as an
+    ordered day-sorted DOUBLE fold: at 100 TB daily cents reach ~10¹³,
+    whose square overflows int64 (and (Σc)² does ~30× sooner) — DuckDB
+    would error while Spark silently wraps to a NaN σ (review r11
+    finding). Day-grain input ⇒ the fold and the windowed part are
+    calendar-bounded; the only full-data pass is the map-side-combinable
+    daily aggregate.
     """
-    return cusum_from_daily(_daily_revenue(spark, sf_dir))
-
-
-def cusum_from_daily(daily: DataFrame) -> DataFrame:
-    """The CUSUM read-off over a (event_date, cents) day table — ONE
-    definition site shared by `revenue_cusum` and the streaming twin
-    `streaming.jobs.run_streaming_cusum` (review r11: the two are
-    pytest-pinned to agree, so the arithmetic must not be duplicated).
-    σ_dev = √(n·Σc² − (Σc)²) with Σc² accumulated as an ordered
-    day-sorted DOUBLE fold: at 100 TB daily cents reach ~10¹³, whose
-    square overflows int64 (and (Σc)² does ~30× sooner) — DuckDB would
-    error while Spark silently wraps to a NaN σ (review r11 finding).
-    The fold is calendar-bounded, so it stays a scalar expression."""
+    daily = _daily_revenue(spark, sf_dir)
     sq = F.col("cents").cast("double") * F.col("cents").cast("double")
     tot = daily.agg(
         F.count("*").cast("long").alias("n"),

@@ -418,15 +418,6 @@ def bloom_pruned_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NOTE: jobs.run_streaming_user_state_tws (Spark 4 transformWithState,
-# typed ValueState) is implemented and unit-tested behind an import gate,
-# but NOT registered: the TWS python driver worker requires the
-# `google.protobuf` package (its state-server protocol), which this
-# container does not ship and cannot install. tests/test_streaming.py
-# skips the test when protobuf is absent; on a normal cluster the same
-# _STREAM_STATE_ORACLE grades it.
-
-
 _VARIANT_ORACLE = """
 SELECT event_type,
        CAST(COUNT(*) AS BIGINT) AS n,

@@ -1231,11 +1231,11 @@ def dedup_clusters_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the exact-Jaccard near-dup graph: every
     document mapped to its cluster representative (min doc_id reachable
     through ≥0.2-similarity pairs) — a recursive transitive-closure CTE in
-    the oracle. The Spark default is star contraction (O(log n) rounds,
-    Kiveris et al. SoCC'14) rather than min-label BSP (O(diameter) rounds,
-    `dedup.dedup_clusters`): on a 100 TB dup graph with a long chain the
-    diameter-bound loop is the scale-killer; the label outputs are
-    identical (tests/test_dedup.py parity)."""
+    the oracle. Spark runs star contraction (O(log n) rounds, Kiveris et
+    al. SoCC'14) rather than min-label BSP (O(diameter) rounds): on a
+    100 TB dup graph with a long chain the diameter-bound loop is the
+    scale-killer (tests/test_dedup.py checks the labels against a
+    union-find)."""
     docs = read_table(spark, sf_dir, "documents")
     pairs = _ngram_pairs_shared(spark, sf_dir)
     labels, _rounds = dedup.dedup_clusters_star(docs, pairs)
@@ -1265,14 +1265,13 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content hash + positional rolling hash per document, md5-portable
     variant (`text.doc_fingerprint_portable`) so DuckDB recomputes every
     bit: content = md5-prefix of the lowered text, rolling = bit_xor over
-    md5(token#index) prefixes. The xxhash64 production twin
-    (`text.doc_fingerprint`) keeps its own pytest coverage.
+    md5(token#index) prefixes.
 
     Recorded trade (r04→r05 standalone warm re-measure): the md5 form
-    costs ~1.15 s at sf0.1 vs ~0.40 s for xxhash64 — md5 is a Java
-    MessageDigest call per token while xxhash64 is codegen'd. Accepted:
-    the registered entry's job is cross-engine verifiability; production
-    pipelines should call `text.doc_fingerprint`."""
+    costs ~1.15 s at sf0.1 vs ~0.40 s for an xxhash64 form — md5 is a
+    Java MessageDigest call per token while xxhash64 is codegen'd.
+    Accepted: the registered entry's job is cross-engine
+    verifiability."""
     return text.doc_fingerprint_portable(read_table(spark, sf_dir, "documents"))
 
 

@@ -177,40 +177,3 @@ def build_llm_prompt(ds: str, kpis: dict, quality: list[dict], payments: list[di
         "Do not invent numbers.\n\n"
         f"{data_block}\n"
     )
-
-
-def build_slack_payload(ds: str, status: str, kpis: dict, quality: list[dict]) -> dict:
-    """Slack webhook payload (blocks form) the reference posts on success/
-    failure (reference: scripts/slack_alert.py _build_quality_blocks /
-    send_pipeline_success; the DAG calls those at
-    dags/event_pipeline_dag.py:446-451). Returns the JSON-serializable
-    dict; POSTing it is the caller's side effect.
-
-    The header derives from BOTH the run status and the quality rows — a
-    'SUCCESS' run with failing checks must not render a green header (the
-    reference likewise derives pass/fail from the quality data itself).
-    """
-    failed = [q["check_name"] for q in quality if q["status"] == "FAIL"]
-    all_clear = status == "SUCCESS" and not failed
-    emoji = ":white_check_mark:" if all_clear else ":rotating_light:"
-    fields = [
-        {"type": "mrkdwn", "text": f"*Events:*\n{kpis.get('total_events', 0):,}"},
-        {"type": "mrkdwn", "text": f"*Users:*\n{kpis.get('unique_users', 0):,}"},
-        {"type": "mrkdwn", "text": f"*Revenue:*\n{kpis.get('revenue', 0.0):,.0f}"},
-        {"type": "mrkdwn", "text": f"*Buyers:*\n{kpis.get('buyers', 0):,}"},
-    ]
-    blocks = [
-        {
-            "type": "header",
-            "text": {"type": "plain_text", "text": f"{emoji} Daily pipeline — {ds}: {status}"},
-        },
-        {"type": "section", "fields": fields},
-    ]
-    if failed:
-        blocks.append(
-            {
-                "type": "section",
-                "text": {"type": "mrkdwn", "text": "*Failed checks:* " + ", ".join(failed)},
-            }
-        )
-    return {"blocks": blocks}

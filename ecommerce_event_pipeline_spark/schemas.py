@@ -60,12 +60,6 @@ EVENT_SCHEMA = T.StructType(
     ]
 )
 
-#: DDL schema for the purchase ``extra_data`` JSON payload.
-EXTRA_DATA_DDL = (
-    "products ARRAY<STRUCT<product_id: STRING, quantity: INT, unit_price: DOUBLE>>, "
-    "discount_amount DOUBLE, shipping_fee DOUBLE, coupon_code STRING"
-)
-
 EXTRA_DATA_SCHEMA = T.StructType(
     [
         T.StructField(
@@ -86,22 +80,6 @@ EXTRA_DATA_SCHEMA = T.StructType(
     ]
 )
 
-#: Driver fixture tables (TPC-H-ish star schema + event stream + corpus);
-#: one parquet file per table under ``/root/testdata/sf*/``.
-FIXTURE_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 #: Event types of the driver fixture ``events`` table (distinct from the
 #: reference log's five types; funnel mapping view → click → purchase).
 FIXTURE_EVENT_TYPES = ("view", "click", "purchase", "signup", "error")
-FIXTURE_FUNNEL_STEPS = ("view", "click", "purchase")

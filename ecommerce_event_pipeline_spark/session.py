@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
@@ -27,7 +28,9 @@ def default_parallelism() -> int:
 #: machine because stateful streaming ops (applyInPandasWithState,
 #: dropDuplicatesWithinWatermark) get NO AQE coalescing — under an external
 #: session's 200-partition default a 150-user stateful op fans out over 200
-#: Python workers (the round-2 streaming_user_state 7x regression).
+#: Python workers (the round-2 streaming_user_state 7x regression). Arrow
+#: is on so ``toPandas``/``createDataFrame(pandas)`` convert the same way
+#: in a session we did not build as in one ``get_spark`` built.
 RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "false",
@@ -36,6 +39,7 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
     "spark.sql.shuffle.partitions": str(default_parallelism()),
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
 
@@ -96,7 +100,6 @@ def get_spark(
         # (~62 MB at sf0.1) — the headroom is for churn, not storage.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)

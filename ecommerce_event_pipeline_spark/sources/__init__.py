@@ -1,19 +1,16 @@
 from .readers import (
     load_events_jsonl,
-    load_fixture_tables,
     read_events,
     read_table,
     with_time_columns,
 )
-from .writers import write_csv_single, write_jsonl, write_partitioned_parquet
+from .writers import write_jsonl, write_partitioned_parquet
 
 __all__ = [
     "load_events_jsonl",
-    "load_fixture_tables",
     "read_events",
     "read_table",
     "with_time_columns",
-    "write_csv_single",
     "write_jsonl",
     "write_partitioned_parquet",
 ]

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
-from ..schemas import EVENT_SCHEMA, FIXTURE_TABLES
+from ..schemas import EVENT_SCHEMA
 
 T = TypeVar("T")
 
@@ -63,41 +63,6 @@ def load_events_jsonl(
         dates = [str(d) for d in dates]
         df = df.where(F.col("event_date").isin(dates))
     return df
-
-
-def load_events_jsonl_with_rejects(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame]:
-    """Structurally-tolerant JSONL ingest: returns (good, rejects).
-
-    Reads the files as TEXT and parses each line with ``from_json`` against
-    the explicit schema — a malformed line yields a NULL struct instead of
-    poisoning the scan, and the raw line is preserved on the reject side
-    for quarantine/replay. This avoids the PERMISSIVE-mode
-    ``_corrupt_record`` pitfall (filtering the corrupt column on the same
-    scan requires a cache since Spark 2.3); the text→from_json split is
-    one pass, no cache, and both outputs share the scan.
-
-    Validation layering: this handles STRUCTURAL failures (broken JSON);
-    semantic failures (bad enums, negative amounts, …) stay with the
-    quality suite (quality/checks.py), as in the reference where the
-    validator assumes parseable lines (reference:
-    scripts/validate_quality.py:367-377).
-    """
-    lines = spark.read.text(path)
-    parsed = lines.select(
-        F.col("value").alias("raw_line"),
-        F.from_json("value", EVENT_SCHEMA).alias("rec"),
-    )
-    # from_json yields a NULL struct for unparseable text and a struct of
-    # NULLs for valid-JSON-wrong-shape; event_id is required for every
-    # type, so rec.event_id IS NULL == structurally unusable
-    good = (
-        parsed.where(F.col("rec.event_id").isNotNull())
-        .select("rec.*")
-    )
-    rejects = parsed.where(F.col("rec.event_id").isNull()).select("raw_line")
-    return with_time_columns(good, "timestamp", is_string=True), rejects
 
 
 #: Every session-scoped value the package keeps: table schemas, the
@@ -264,9 +229,3 @@ def spread_small_scan(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df
-
-
-def load_fixture_tables(
-    spark: SparkSession, sf_dir: str, names: Iterable[str] | None = None
-) -> dict[str, DataFrame]:
-    return {name: read_table(spark, sf_dir, name) for name in (names or FIXTURE_TABLES)}

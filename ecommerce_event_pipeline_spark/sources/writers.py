@@ -1,4 +1,4 @@
-"""Writers: partitioned Parquet (idempotent per-date), CSV, JSONL, JDBC-shaped.
+"""Writers: partitioned Parquet (idempotent per-date) and JSONL.
 
 The reference achieves idempotent daily re-runs with DELETE+INSERT per date
 (reference: sql/marts/mart_user_daily.sql:7-9) and idempotent event loads
@@ -10,8 +10,8 @@ with ``ON CONFLICT (event_id) DO NOTHING``
   the partitions present in the batch — the cluster-scale idempotency
   primitive (no full-table rewrite at 100 TB).
 - ``dropDuplicates([key])`` before append gives within-batch exactly-once;
-  cross-run dedup needs an anti-join against the target partition (done
-  here) or a transactional table format's MERGE.
+  cross-run dedup needs an anti-join against the target partition or a
+  transactional table format's MERGE.
 """
 
 from __future__ import annotations
@@ -26,93 +26,8 @@ def write_partitioned_parquet(
     df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
 
 
-def write_csv_single(df: DataFrame, path: str) -> None:
-    """Debug-grade single-file CSV with header (reference:
-    scripts/spark_batch_processor.py:334-339). ``coalesce(1)`` funnels the
-    result through one task — only for small result sets, never raw data.
-    """
-    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-
-
 def write_jsonl(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").json(path)
-
-
-def write_orc(df: DataFrame, path: str, partition_col: str | None = None) -> None:
-    """ORC sink (built into Spark, zlib-compressed columnar like parquet)
-    — the interchange format for Hive-era warehouse consumers. Same
-    dynamic-partition-overwrite idempotency contract as the parquet sink
-    when ``partition_col`` is given."""
-    w = df.write.mode("overwrite")
-    if partition_col is not None:
-        w = w.partitionBy(partition_col)
-    w.orc(path)
-
-
-def append_dedup_by_key(df: DataFrame, existing: DataFrame | None, key: str) -> DataFrame:
-    """Exactly-once-shaped append: drop within-batch dups, anti-join rows
-    already present in the target (the Spark analog of
-    ``ON CONFLICT DO NOTHING``). Returns the rows that should be appended.
-    """
-    out = df.dropDuplicates([key])
-    if existing is not None:
-        out = out.join(existing.select(key), on=key, how="left_anti")
-    return out
-
-
-def compact_partitions(
-    spark,
-    path: str,
-    partition_col: str = "event_date",
-    target_rows_per_file: int = 1_000_000,
-    sort_cols: list[str] | None = None,
-    tasks_per_partition: int = 8,
-) -> int:
-    """Small-file compaction: rewrite a partitioned dataset with bounded
-    file counts and optional within-file clustering.
-
-    Streaming/incremental writers leave many small files per partition;
-    at 100 TB that destroys scan throughput (footer/open overhead per
-    file) and listing latency. ``maxRecordsPerFile`` bounds file sizes,
-    and — critically — each date partition is rewritten by MULTIPLE
-    parallel tasks, never hashed into a single task (repartition by the
-    partition column alone would serialize each date's rewrite):
-
-    - with ``sort_cols``: ``repartitionByRange(partition_col, *sort_cols)``
-      splits every date across range-contiguous tasks, so the rewrite is
-      parallel AND each output file covers a disjoint sort-key range —
-      parquet min/max stats then prune row groups for queries filtering
-      on those columns (poor man's Z-order for one dimension).
-    - without: a content-derived salt (xxhash64 over the row) fans each
-      date across ``tasks_per_partition`` tasks deterministically.
-
-    The compacted copy is written ALONGSIDE the input at
-    ``<path>__compacted`` — atomically swapping it in place of the
-    original is the caller's step (rename/alias/manifest update,
-    store-specific). Returns the number of files after compaction.
-    """
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(path)
-    if sort_cols:
-        out = df.repartitionByRange(
-            F.col(partition_col), *[F.col(c) for c in sort_cols]
-        ).sortWithinPartitions(partition_col, *sort_cols)
-    else:
-        salt = F.pmod(
-            F.xxhash64(*[F.col(c) for c in df.columns]),
-            F.lit(tasks_per_partition),
-        )
-        out = df.repartition(F.col(partition_col), salt)
-    (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", target_rows_per_file)
-        .partitionBy(partition_col)
-        .parquet(path + "__compacted")
-    )
-    # count via Spark's file index, not a local-FS glob — works for any
-    # Hadoop-compatible path (s3a://, hdfs://, file:)
-    return len(spark.read.parquet(path + "__compacted").inputFiles())
 
 
 def write_observed_parquet(

@@ -25,6 +25,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the fixture events parquet.
 
@@ -210,48 +211,6 @@ def run_streaming_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_streaming_to_parquet(
-    spark: SparkSession, sf_dir: str, output_path: str
-) -> DataFrame:
-    """Exactly-once-shaped streaming sink via ``foreachBatch``: each
-    micro-batch of the hourly aggregate is written with per-partition
-    dynamic overwrite keyed by the window date — re-processing a batch
-    rewrites the same partitions instead of duplicating rows (the
-    idempotent-sink pattern for non-transactional stores).
-    """
-    events = streaming_events(spark, sf_dir)
-    agg = (
-        events.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("event_count"), F.sum("value").alias("total_value"))
-        .select(
-            F.to_date(F.col("w.start")).alias("window_date"),
-            F.col("w.start").alias("window_start"),
-            "event_count",
-            "total_value",
-        )
-    )
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite")
-            .partitionBy("window_date")
-            .parquet(output_path)
-        )
-
-    with _bounded_state_partitions(spark):
-        q = (
-            agg.writeStream.outputMode("complete")
-            .foreachBatch(write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()  # a write_batch failure must not leak a running query
-    return spark.read.parquet(output_path).orderBy("window_start")
-
-
 def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact deduplication: ``dropDuplicatesWithinWatermark`` on
     the event key, state bounded by the watermark horizon — the streaming
@@ -363,134 +322,6 @@ def run_streaming_attribution_join(
     )
     table = _run_to_memory(joined, "append")
     return spark.table(table).orderBy("user_id", "view_ts", "purchase_ts")
-
-
-def run_streaming_token_cms(
-    spark: SparkSession,
-    depth: int = 4,
-    width: int = 64,
-    batch_rows: int = 200,
-    max_rows: int = 600,
-) -> DataFrame:
-    """Maintain a count-min sketch over a stream via ``foreachBatch``:
-    each micro-batch is sketched independently and merged into the running
-    sketch by cell-wise SUM — the mergeability that makes a CMS the right
-    frequency structure for unbounded streams (per-token exact counts
-    would need ever-growing state; the sketch is a constant d×w cells).
-
-    The source is the custom Python DataSource (``sources/pyds.py``) so
-    the merge path genuinely crosses micro-batch boundaries; the d×w cell
-    table is driver-merged (bounded, ≤ depth·width rows per batch — this
-    is sketch state, not data). Returns the final cells DataFrame, which
-    tests compare against a one-shot batch sketch of the same rows.
-    """
-    from collections import defaultdict
-
-    from ..functions.sketch import cms_build
-    from ..sources import pyds
-
-    if not pyds.register(spark):  # pragma: no cover - pyspark < 4
-        raise RuntimeError("Python DataSource API unavailable")
-
-    state: dict[tuple[int, int], int] = defaultdict(int)
-
-    def absorb(batch_df: DataFrame, epoch_id: int) -> None:
-        tokens = batch_df.select(F.col("event_type").alias("token"))
-        for row in cms_build(tokens, depth, width).cells.collect():
-            state[(row["row"], row["bucket"])] += row["cell"]
-
-    stream = (
-        spark.readStream.format("synthetic_events")
-        .option("batchRows", batch_rows)
-        .option("maxRows", max_rows)
-        .load()
-    )
-    with _bounded_state_partitions(spark):
-        q = stream.writeStream.foreachBatch(absorb).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()  # an absorb() failure must not leak a running query
-    return spark.createDataFrame(
-        [(r, b, c) for (r, b), c in sorted(state.items())],
-        "row int, bucket int, cell long",
-    )
-
-
-def run_streaming_cdc_upsert(
-    spark: SparkSession,
-    state_dir: str,
-    batch_rows: int = 200,
-    max_rows: int = 600,
-) -> DataFrame:
-    """Streaming MERGE INTO: each micro-batch of change rows folds into a
-    keyed state table with latest-seq-wins upsert/delete semantics
-    (``relational.cdc_merge``), state persisted as parquet between
-    batches — the foreachBatch idiom for maintaining a mutable table from
-    a CDC stream on stores without a native MERGE.
-
-    Fold correctness rests on cdc_merge being associative for unique,
-    monotone sequence numbers: fold(fold(S, b1), b2) = fold(S, b1 ∪ b2),
-    which tests/test_streaming.py asserts against a one-shot batch merge
-    of the same change set. State is rewritten per batch (read parquet →
-    merge → overwrite); at scale the rewrite is partition-aligned on the
-    merge key so only touched key-hash partitions rewrite.
-
-    Change derivation from the synthetic stream: key = user_id mod 50
-    (forces cross-batch collisions), DELETE when event_type='purchase',
-    else upsert carrying the event value; seq = event_id (monotone).
-    """
-    import os
-
-    from ..operators.relational import cdc_merge
-    from ..sources import pyds
-
-    if not pyds.register(spark):  # pragma: no cover - pyspark < 4
-        raise RuntimeError("Python DataSource API unavailable")
-
-    # versioned state dirs: each batch reads version N and writes N+1 —
-    # no read-overwrite race, no driver-side collect of data-sized state,
-    # and a crash mid-write leaves version N intact (poor man's
-    # copy-on-write table format)
-    latest: list[str] = []
-
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        changes = batch_df.select(
-            (F.col("user_id") % 50).alias("o_orderkey"),
-            F.col("event_type").alias("o_orderstatus"),
-            F.coalesce("value", F.lit(0.0)).alias("o_totalprice"),
-            F.when(F.col("event_type") == "purchase", F.lit("D"))
-            .otherwise(F.lit("U"))
-            .alias("op"),
-            F.col("event_id").alias("_seq"),
-        )
-        if latest:
-            base = batch_df.sparkSession.read.parquet(latest[-1])
-        else:
-            base = changes.sparkSession.createDataFrame(
-                [], "o_orderkey bigint, o_orderstatus string, o_totalprice double"
-            )
-        out = os.path.join(state_dir, f"state_v{epoch_id}")
-        cdc_merge(base, changes).write.mode("overwrite").parquet(out)
-        latest.append(out)
-
-    stream = (
-        spark.readStream.format("synthetic_events")
-        .option("batchRows", batch_rows)
-        .option("maxRows", max_rows)
-        .load()
-    )
-    with _bounded_state_partitions(spark):
-        q = stream.writeStream.foreachBatch(merge_batch).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    if not latest:  # zero micro-batches → empty state, not an IndexError
-        return spark.createDataFrame(
-            [], "o_orderkey bigint, o_orderstatus string, o_totalprice double"
-        )
-    return spark.read.parquet(latest[-1]).orderBy("o_orderkey")
 
 
 def split_gap_sessions(
@@ -638,96 +469,6 @@ def run_streaming_sliding_traffic(
     return spark.table(table).orderBy("window_start")
 
 
-def run_streaming_user_state_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user running (events_seen, total_value) on the
-    ``transformWithStateInPandas`` API (Spark 4's successor to
-    applyInPandasWithState): typed composite state via
-    ``handle.getValueState`` instead of one opaque tuple, per-state TTL,
-    timers, and multiple state variables per processor — the same
-    per-entity counter as ``run_streaming_user_state``, so the same
-    batch-groupBy oracle grades both APIs.
-
-    State is one (cnt, total) ValueState row per user; emission in
-    update mode, final row per user reduced by max_by exactly as the
-    older API's job does.
-
-    Runtime dependency: the TWS python driver worker speaks a protobuf
-    state-server protocol — ``google.protobuf`` must be importable on
-    driver and workers, and the RocksDB state store provider is required
-    (pinned below). Callers in protobuf-less environments get an
-    ImportError up front instead of a mid-query worker crash.
-    """
-    try:  # find_spec("google.protobuf") raises if the parent pkg is absent
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf "
-            "(state-server protocol); not available in this environment"
-        ) from exc
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserCounter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "counts", "cnt long, total double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            cnt, total = (
-                tuple(self._state.get()) if self._state.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                cnt += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((cnt, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "events_seen": [cnt],
-                    "total_value": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    events = streaming_events(spark, sf_dir).select("user_id", "value")
-    updated = events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserCounter(),
-        outputStructType="user_id long, events_seen long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-    # transformWithState requires the RocksDB state store provider (the
-    # default HDFS-backed store does not implement the new API); pin it
-    # for this run and restore after
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old_provider = spark.conf.get(provider_key)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        table = _run_to_memory(updated, "update")
-    finally:
-        spark.conf.set(provider_key, old_provider)
-    return (
-        spark.table(table)
-        .groupBy("user_id")
-        .agg(
-            F.max("events_seen").alias("events_seen"),
-            F.round(F.max_by("total_value", "events_seen"), 2).alias(
-                "total_value"
-            ),
-        )
-        .orderBy("user_id")
-    )
-
-
 def run_streaming_histogram_quantiles(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -784,194 +525,4 @@ def run_streaming_histogram_quantiles(
         cum.groupBy("day")
         .agg(F.max("total").alias("n_events"), _est(50), _est(95), _est(99))
         .orderBy("day")
-    )
-
-
-def run_streaming_kmv(
-    spark: SparkSession,
-    k: int = 64,
-    batch_rows: int = 200,
-    max_rows: int = 600,
-) -> DataFrame:
-    """Maintain per-day KMV (bottom-k) distinct-user sketches over a
-    stream via ``foreachBatch``: each micro-batch's bottom-k hash set is
-    computed in Spark and merged into the running per-day state by
-    sorted-union-truncate — EXACT mergeability (bottom-k of a union
-    equals bottom-k of the two bottom-k sets, the property
-    tests pin for the batch operator T131) is what makes the stream
-    fold equal a one-shot batch sketch of the same rows, byte for byte.
-
-    State is ≤ k hashes per open day — bounded sketch state, not data;
-    the per-batch driver transfer is ≤ k rows per day touched by that
-    batch. The source is the custom Python DataSource
-    (``sources/pyds.py``) so the merge genuinely crosses micro-batch
-    boundaries. Returns the final sketch as (event_date, r, hv) rows —
-    the same shape a batch bottom-k of all rows produces.
-    """
-    from ..functions.hashing import md5_prefix_long
-    from ..sources import pyds
-
-    if not pyds.register(spark):  # pragma: no cover - pyspark < 4
-        raise RuntimeError("Python DataSource API unavailable")
-
-    state: dict = {}
-
-    def absorb(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Window
-
-        h = batch_df.select(
-            F.to_date("ts").alias("event_date"),
-            md5_prefix_long("kmv", F.col("user_id")).alias("hv"),
-        ).distinct()
-        w = Window.partitionBy("event_date").orderBy("hv")
-        rows = (
-            h.withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= k)
-            .collect()
-        )
-        for row in rows:
-            day = row["event_date"]
-            cur = state.setdefault(day, [])
-            cur.append(row["hv"])
-        for day in {row["event_date"] for row in rows}:
-            state[day] = sorted(set(state[day]))[:k]
-
-    stream = (
-        spark.readStream.format("synthetic_events")
-        .option("batchRows", batch_rows)
-        .option("maxRows", max_rows)
-        .load()
-    )
-    with _bounded_state_partitions(spark):
-        q = stream.writeStream.foreachBatch(absorb).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()  # an absorb() failure must not leak a running query
-    out = [
-        (day, i + 1, hv)
-        for day, hashes in sorted(state.items())
-        for i, hv in enumerate(hashes)
-    ]
-    return spark.createDataFrame(out, "event_date date, r int, hv long")
-
-
-def run_streaming_cusum(
-    spark: SparkSession,
-    batch_rows: int = 200,
-    max_rows: int = 600,
-) -> DataFrame:
-    """Streaming twin of the batch CUSUM drift screen (T140): maintain
-    per-day purchase-cent sums over a stream via ``foreachBatch`` —
-    integer sums merge exactly under ANY batch boundary/arrival order,
-    so the read-off CUSUM equals the batch operator on the same rows
-    byte for byte (pytest-pinned, the KMV-twin discipline). State is
-    one BIGINT per open day — bounded monitoring state, not data; the
-    per-batch driver transfer is one row per day touched. The read-off
-    replays the batch operator's exact arithmetic: dev = n·c − Σc,
-    prefix/running-min windows, σ from the integer sums."""
-    from ..sources import pyds
-
-    if not pyds.register(spark):  # pragma: no cover - pyspark < 4
-        raise RuntimeError("Python DataSource API unavailable")
-
-    state: dict = {}
-
-    def absorb(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = (
-            batch_df.where(F.col("event_type") == "purchase")
-            .groupBy(F.to_date("ts").alias("event_date"))
-            .agg(
-                F.sum(F.round(F.col("value") * 100).cast("long"))
-                .cast("long")
-                .alias("cents")
-            )
-            .collect()
-        )
-        for row in rows:
-            day = row["event_date"]
-            state[day] = state.get(day, 0) + row["cents"]
-
-    stream = (
-        spark.readStream.format("synthetic_events")
-        .option("batchRows", batch_rows)
-        .option("maxRows", max_rows)
-        .load()
-    )
-    with _bounded_state_partitions(spark):
-        q = stream.writeStream.foreachBatch(absorb).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()  # an absorb() failure must not leak a running query
-
-    daily = spark.createDataFrame(
-        sorted(state.items()), "event_date date, cents long"
-    )
-    from ..queries.monitoring import cusum_from_daily
-
-    return cusum_from_daily(daily)
-
-
-def run_streaming_ddsketch(
-    spark: SparkSession,
-    batch_rows: int = 200,
-    max_rows: int = 600,
-) -> DataFrame:
-    """Streaming twin of the log-domain quantile sketch (T165,
-    ``queries/sketches.ddsketch_value_quantiles``): maintain per-
-    (event_type, octave, sub-bucket) counts over a stream via
-    ``foreachBatch``. The sketch merges by PLAIN ADDITION, so the folded
-    state is bit-identical to the batch bucket table under ANY micro-
-    batch boundary or arrival order — the same merge property that makes
-    the CUSUM (integer sums) and KMV (bottom-k) twins exact, pinned in
-    tests/test_sketch.py. State is ≤ 16·⌈log₂ range⌉ rows per event
-    type — bounded sketch state, not data; the per-batch driver transfer
-    is one row per bucket touched. Returns the merged bucket table
-    (event_type, p, s, cnt) — the mergeable artifact a serving layer
-    reads quantiles off (the read-off arithmetic lives in the batch
-    query and is oracle-graded there)."""
-    from ..sources import pyds
-
-    if not pyds.register(spark):  # pragma: no cover - pyspark < 4
-        raise RuntimeError("Python DataSource API unavailable")
-
-    state: dict = {}
-
-    from ..functions.sketch import log_bucket_exprs
-
-    def absorb(batch_df: DataFrame, epoch_id: int) -> None:
-        pexp, sexp = log_bucket_exprs("cents", m=16)
-        rows = (
-            batch_df.where(F.col("value").isNotNull())
-            .select(
-                "event_type",
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            )
-            .where(F.col("cents") >= 1)
-            .selectExpr("event_type", f"{pexp} AS p", f"{sexp} AS s")
-            .groupBy("event_type", "p", "s")
-            .agg(F.count("*").cast("long").alias("cnt"))
-            .collect()
-        )
-        for row in rows:
-            key = (row["event_type"], row["p"], row["s"])
-            state[key] = state.get(key, 0) + row["cnt"]
-
-    stream = (
-        spark.readStream.format("synthetic_events")
-        .option("batchRows", batch_rows)
-        .option("maxRows", max_rows)
-        .load()
-    )
-    with _bounded_state_partitions(spark):
-        q = stream.writeStream.foreachBatch(absorb).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()  # an absorb() failure must not leak a running query
-
-    return spark.createDataFrame(
-        [(t, p, s, c) for (t, p, s), c in sorted(state.items())],
-        "event_type string, p int, s int, cnt long",
     )

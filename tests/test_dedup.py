@@ -82,6 +82,24 @@ def test_simhash_dupes_rejects_radius_beyond_pigeonhole(spark, docs):
         dedup.simhash_dupes(docs, max_hamming=4)
 
 
+def _union_find_labels(doc_ids, edges):
+    """Reference components: doc_id -> min doc_id of its component, by a
+    plain union-find with path halving (no Spark involved)."""
+    parent = {d: d for d in doc_ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {d: find(d) for d in doc_ids}
+
+
 def test_dedup_clusters_min_label_over_chain(spark):
     docs = spark.createDataFrame(
         [(i,) for i in range(1, 8)], "doc_id long"
@@ -90,13 +108,14 @@ def test_dedup_clusters_min_label_over_chain(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], "doc_id_1 long, doc_id_2 long"
     )
-    from ecommerce_event_pipeline_spark.functions.dedup import dedup_clusters
-
-    got = [(r["doc_id"], r["cluster_id"]) for r in dedup_clusters(docs, pairs).collect()]
+    labels, _rounds = dedup.dedup_clusters_star(docs, pairs)
+    got = [(r["doc_id"], r["cluster_id"]) for r in labels.collect()]
     assert got == [(1, 1), (2, 1), (3, 1), (4, 4), (5, 5), (6, 5), (7, 7)]
 
 
 def test_star_contraction_matches_label_prop(spark):
+    """Star contraction gives the min-label components on a random
+    graph, checked against the union-find reference."""
     import random
 
     random.seed(7)
@@ -105,26 +124,23 @@ def test_star_contraction_matches_label_prop(spark):
     edges = [(a, b) for a, b in edges if a != b]
     docs_df = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
     pairs = spark.createDataFrame(edges, "doc_id_1 long, doc_id_2 long")
-    a = {r["doc_id"]: r["cluster_id"] for r in dedup.dedup_clusters(docs_df, pairs).collect()}
     star_df, rounds = dedup.dedup_clusters_star(docs_df, pairs)
-    b = {r["doc_id"]: r["cluster_id"] for r in star_df.collect()}
-    assert a == b
+    got = {r["doc_id"]: r["cluster_id"] for r in star_df.collect()}
+    assert got == _union_find_labels(range(n), edges)
     assert rounds <= 6  # O(log n), not O(diameter)
 
 
 def test_star_contraction_handles_deep_chain(spark):
-    # diameter-29 chain: label prop needs 29 rounds (and must REFUSE at a
-    # lower cap rather than mislabel); star contraction needs ~log n
+    # diameter-29 chain: min-label propagation would need 29 rounds; star
+    # contraction needs ~log n
+    edges = [(i, i + 1) for i in range(29)]
     docs_df = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(29)], "doc_id_1 long, doc_id_2 long"
-    )
+    pairs = spark.createDataFrame(edges, "doc_id_1 long, doc_id_2 long")
     star_df, rounds = dedup.dedup_clusters_star(docs_df, pairs)
-    assert {r["cluster_id"] for r in star_df.collect()} == {0}
+    got = {r["doc_id"]: r["cluster_id"] for r in star_df.collect()}
+    assert got == _union_find_labels(range(30), edges)
+    assert set(got.values()) == {0}
     assert rounds <= 7
-
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dedup_clusters(docs_df, pairs, max_iters=5)
 
 
 def test_jaccard_prefix_matches_brute_force(spark, docs):

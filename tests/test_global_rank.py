@@ -69,18 +69,12 @@ def test_global_ntile_empty_input(spark):
 
 def test_ntile_rejects_nonpositive_buckets(spark):
     """b = 0 would hit `_n % 0` in the bucket arithmetic — silent NULLs
-    in default mode, a runtime error under ANSI; both helpers must fail
+    in default mode, a runtime error under ANSI; the helper must fail
     loudly at the API boundary instead."""
-    import pytest
-
-    from ecommerce_event_pipeline_spark.operators.windows import grouped_ntile
-
     df = _frame(spark, 10)
     for b in (0, -3):
         with pytest.raises(ValueError, match="n_buckets"):
             global_ntile(df, b, ["k", "uid"])
-        with pytest.raises(ValueError, match="n_buckets"):
-            grouped_ntile(df, b, ["k"], ["uid"])
 
 
 def test_global_rank_plan_has_no_unpartitioned_window(spark):
@@ -193,34 +187,6 @@ def test_multi_column_prefix_sum_single_window_pin(spark):
     assert "v1" in windows[0] and "v2" in windows[0]
 
 
-def test_grouped_ntile_matches_partitioned_sql_ntile(spark):
-    """The grouped range-partition NTILE must be bit-identical to
-    NTILE(b) OVER (PARTITION BY g ORDER BY ...) — including groups
-    smaller than the bucket count and heavy in-group ties."""
-    from ecommerce_event_pipeline_spark.operators.windows import grouped_ntile
-
-    for n, b in [(211, 4), (9, 4), (40, 7)]:
-        df = spark.range(n).select(
-            (F.col("id") % 3).cast("string").alias("g"),
-            (F.col("id") * 7919 % 11).alias("k"),  # heavy ties
-            F.col("id").alias("uid"),
-        )
-        got = {
-            (r["g"], r["uid"], r["nt"])
-            for r in grouped_ntile(
-                df, b, ["g"], ["k", "uid"], out_col="nt"
-            ).collect()
-        }
-        exp = {
-            (r["g"], r["uid"], r["nt"])
-            for r in df.withColumn(
-                "nt",
-                F.ntile(b).over(Window.partitionBy("g").orderBy("k", "uid")),
-            ).collect()
-        }
-        assert got == exp, (n, b)
-
-
 def test_prefix_sum_consistent_over_shuffled_input(spark):
     """Round-11 regression: distributed_prefix_sum's ranged partition
     assignment fans out to two consumers; before the materialization
@@ -251,37 +217,6 @@ def test_prefix_sum_consistent_over_shuffled_input(spark):
         for k, c in rows:
             acc += c
             assert got[k] == acc, f"prefix mismatch at k={k}"
-
-
-def test_grouped_ntile_consistent_over_shuffled_input(spark):
-    """Round-12 extension of the materialize-once regression to
-    grouped_ntile, which has the identical fan-out shape (`part` feeds
-    both the local row_number window and the per-(group, partition)
-    counts groupBy). Feed it from a groupBy — nondeterministic
-    within-partition row order, so unmaterialized range boundaries can
-    differ per consumer — and check bit-identity with the SQL window,
-    several times."""
-    from ecommerce_event_pipeline_spark.operators.windows import grouped_ntile
-
-    base = spark.range(0, 20000).select(
-        (F.col("id") % 3).cast("string").alias("g"),
-        (F.col("id") % 4999).alias("k"),
-    )
-    shuffled = base.groupBy("g", "k").agg(F.count("*").alias("c"))
-    exp = {
-        (r["g"], r["k"], r["nt"])
-        for r in shuffled.withColumn(
-            "nt", F.ntile(4).over(Window.partitionBy("g").orderBy("k"))
-        ).collect()
-    }
-    for _ in range(3):
-        got = {
-            (r["g"], r["k"], r["nt"])
-            for r in grouped_ntile(
-                shuffled, 4, ["g"], ["k"], out_col="nt"
-            ).collect()
-        }
-        assert got == exp
 
 
 def test_grouped_percentiles_consistent_over_shuffled_input(spark):
@@ -327,7 +262,6 @@ def _fanout_outputs(spark, df):
         distributed_prefix_sum,
         global_ntile,
         global_row_number,
-        grouped_ntile,
     )
 
     return {
@@ -336,7 +270,6 @@ def _fanout_outputs(spark, df):
         "distributed_prefix_sum": distributed_prefix_sum(
             df, ["v", "uid"], "uid"
         ),
-        "grouped_ntile": grouped_ntile(df, 4, ["g"], ["v", "uid"]),
         "grouped_exact_percentiles": grouped_exact_percentiles(
             df, "v", {"p50": 0.5}, ["g"]
         ),

@@ -1,4 +1,4 @@
-"""Multimodal plumbing: binary columns, mapInPandas batch shape, stubs."""
+"""Multimodal plumbing: binary columns, mapInPandas batch shape."""
 
 from __future__ import annotations
 
@@ -46,19 +46,6 @@ def test_sample_frames_expands_videos(spark, media):
     for fs in by_media.values():
         idxs = sorted(f["frame_index"] for f in fs)
         assert idxs == list(range(len(idxs)))  # dense frame indexes
-
-
-def test_decode_image_raises_without_codec(spark, media):
-    if multimodal.HAS_PIL:
-        pytest.skip("PIL installed — decode would actually run")
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(media)
-
-
-def test_media_summary_metadata_only(spark, media):
-    out = {r["kind"]: r for r in multimodal.media_summary(media).collect()}
-    assert set(out) == {"image", "audio", "video"}
-    assert out["video"]["media_count"] >= 1
 
 
 def test_resize_payload_is_deterministic_nearest_neighbor(spark):

@@ -36,7 +36,6 @@ FANOUT_OPS = {
     "pinned_range_partition",
     "global_row_number",
     "global_ntile",
-    "grouped_ntile",
     "distributed_prefix_sum",
 }
 

@@ -124,48 +124,6 @@ def test_pipeline_reruns_are_idempotent_across_dates(spark, tmp_path):
     assert rlog.where("ds = '2026-02-11'").count() == 1
 
 
-def test_jsonl_rejects_split_structural_failures(spark, tmp_path):
-    from tests.conftest import make_event
-    import json as _json
-
-    from ecommerce_event_pipeline_spark.sources.readers import (
-        load_events_jsonl_with_rejects,
-    )
-
-    good1 = make_event("page_view")
-    good2 = make_event("purchase")
-    path = tmp_path / "events_20240101.jsonl"
-    path.write_text(
-        _json.dumps(good1)
-        + "\n"
-        + "{this is not json"
-        + "\n"
-        + _json.dumps(good2)
-        + "\n"
-        + '"a bare string, valid JSON, wrong shape"'
-        + "\n"
-    )
-    good, rejects = load_events_jsonl_with_rejects(spark, str(path))
-    assert good.count() == 2
-    assert {r["event_type"] for r in good.collect()} == {"page_view", "purchase"}
-    bad = [r["raw_line"] for r in rejects.collect()]
-    assert "{this is not json" in bad
-    assert len(bad) == 2
-    # derived time columns present on the good side
-    assert "event_date" in good.columns
-
-
-def test_backfill_skips_completed_dates(spark, tmp_path):
-    from ecommerce_event_pipeline_spark.pipeline import run_backfill
-
-    out = str(tmp_path / "pipe")
-    first = run_backfill(spark, ["2024-02-01"], out, n_users=40)
-    assert first == {"2024-02-01": "SUCCESS"}
-    second = run_backfill(spark, ["2024-02-01", "2024-02-02"], out, n_users=40)
-    assert second["2024-02-01"] == "SKIPPED"
-    assert second["2024-02-02"] == "SUCCESS"
-
-
 def test_observe_metrics_ride_the_mart_action(spark):
     """The Observation API collects per-action metrics (row counts, null
     counts) WITHOUT a second scan — the zero-cost instrumentation hook a

@@ -349,49 +349,6 @@ def test_contrastive_shortlist_covers_true_top_candidates(spark, seed, n):
 
 
 @given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=2),   # group
-            st.integers(min_value=0, max_value=9),   # order key (heavy ties)
-        ),
-        min_size=1,
-        max_size=40,
-    ),
-    n_buckets=st.integers(min_value=1, max_value=5),
-)
-@SETTINGS
-def test_grouped_ntile_always_matches_partitioned_sql_ntile(
-    spark, rows, n_buckets
-):
-    """For ANY (group, key) multiset and bucket count, the grouped
-    range-partition NTILE is bit-identical to NTILE(b) OVER (PARTITION
-    BY g ORDER BY k, uid) — groups smaller than the bucket count, empty
-    buckets, and heavy in-group ties included."""
-    from pyspark.sql import Window
-
-    df = spark.createDataFrame(
-        [(str(g), k, i) for i, (g, k) in enumerate(rows)],
-        "g string, k long, uid long",
-    )
-    got = {
-        (r["g"], r["uid"], r["nt"])
-        for r in windows.grouped_ntile(
-            df, n_buckets, ["g"], ["k", "uid"], out_col="nt"
-        ).collect()
-    }
-    exp = {
-        (r["g"], r["uid"], r["nt"])
-        for r in df.withColumn(
-            "nt",
-            F.ntile(n_buckets).over(
-                Window.partitionBy("g").orderBy("k", "uid")
-            ),
-        ).collect()
-    }
-    assert got == exp
-
-
-@given(
     vals=st.lists(
         st.integers(min_value=-1000, max_value=1000),
         min_size=1,

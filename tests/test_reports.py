@@ -72,18 +72,4 @@ def test_llm_prompt_and_slack_payload(spark):
     prompt = reports.build_llm_prompt("2026-03-04", kpis, quality, payments)
     assert "data analyst" in prompt and "Do not invent numbers" in prompt
     assert "## KPIs" in prompt  # the metrics block is embedded
-
-    import json
-
-    ok = reports.build_slack_payload("2026-03-04", "SUCCESS", kpis, quality)
-    assert ok["blocks"][0]["text"]["text"].startswith(":white_check_mark:")
-    json.dumps(ok)  # JSON-serializable
-
-    bad_quality = [dict(q, status="FAIL") for q in quality[:2]]
-    alert = reports.build_slack_payload("2026-03-04", "QUALITY_FAIL", kpis, bad_quality)
-    assert ":rotating_light:" in alert["blocks"][0]["text"]["text"]
-    assert "Failed checks" in alert["blocks"][-1]["text"]["text"]
-    # a 'SUCCESS' status with failing quality rows must NOT render green
-    mixed = reports.build_slack_payload("2026-03-04", "SUCCESS", kpis, bad_quality)
-    assert ":rotating_light:" in mixed["blocks"][0]["text"]["text"]
     ev.unpersist()

@@ -51,30 +51,6 @@ def test_cms_unknown_token_estimates_from_empty_cells(spark):
     assert est[0]["cms_estimate"] == 0
 
 
-def test_streaming_cms_equals_batch_sketch(spark):
-    from pyspark.sql import functions as F2
-
-    from ecommerce_event_pipeline_spark.sources import pyds
-    from ecommerce_event_pipeline_spark.streaming import jobs
-
-    if not pyds.HAS_DATASOURCE_API:
-        import pytest as _pytest
-
-        _pytest.skip("pyspark lacks the DataSource API")
-    streamed = jobs.run_streaming_token_cms(
-        spark, depth=4, width=64, batch_rows=200, max_rows=600
-    )
-    pyds.register(spark)
-    batch_tokens = (
-        spark.read.format("synthetic_events").option("rows", 600).load()
-        .select(F2.col("event_type").alias("token"))
-    )
-    whole = sketch.cms_build(batch_tokens, depth=4, width=64)
-    assert sorted(map(tuple, streamed.collect())) == sorted(
-        map(tuple, whole.cells.collect())
-    )
-
-
 def test_heavy_hitters_exact_and_partition_independent(spark):
     """The MG candidate set varies with partitioning, but the verified
     output must equal the brute-force GROUP BY/HAVING exactly for every
@@ -219,95 +195,6 @@ def test_hll_fine_grain_registers_fold_to_any_rollup(spark):
         assert rows_of(folded) == rows_of(direct), keys
 
 
-def test_streaming_kmv_equals_batch_bottom_k(spark):
-    """T131 streaming twin: the per-day bottom-k state folded across
-    micro-batches must equal a one-shot batch bottom-k of the same rows
-    — the exact-mergeability property made load-bearing in streaming."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F2
-
-    from ecommerce_event_pipeline_spark.functions.hashing import md5_prefix_long
-    from ecommerce_event_pipeline_spark.sources import pyds
-    from ecommerce_event_pipeline_spark.streaming import jobs
-
-    if not pyds.HAS_DATASOURCE_API:
-        import pytest as _pytest
-
-        _pytest.skip("pyspark lacks the DataSource API")
-    streamed = jobs.run_streaming_kmv(spark, k=64, batch_rows=200, max_rows=600)
-    pyds.register(spark)
-    batch = (
-        spark.read.format("synthetic_events").option("rows", 600).load()
-        .select(
-            F2.to_date("ts").alias("event_date"),
-            md5_prefix_long("kmv", F2.col("user_id")).alias("hv"),
-        )
-        .distinct()
-    )
-    w = Window.partitionBy("event_date").orderBy("hv")
-    whole = (
-        batch.withColumn("r", F2.row_number().over(w)).where(F2.col("r") <= 64)
-        .select("event_date", "r", "hv")
-    )
-    assert sorted(map(tuple, streamed.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-
-
-def test_streaming_cusum_equals_batch_fold(spark):
-    """T140 streaming twin: per-day cent sums folded across micro-batch
-    boundaries must reproduce the batch CUSUM byte for byte — integer
-    sums merge exactly under any arrival order, and the read-off
-    replays the batch operator's arithmetic."""
-    from pyspark.sql import functions as F2
-
-    from ecommerce_event_pipeline_spark.sources import pyds
-    from ecommerce_event_pipeline_spark.streaming import jobs
-
-    if not pyds.HAS_DATASOURCE_API:
-        import pytest as _pytest
-
-        _pytest.skip("pyspark lacks the DataSource API")
-    streamed = jobs.run_streaming_cusum(spark, batch_rows=200, max_rows=600)
-    rows = streamed.collect()
-    assert len(rows) > 0
-    # batch recomputation of the same 600 synthetic rows
-    pyds.register(spark)
-    daily = {
-        r["event_date"]: r["cents"]
-        for r in (
-            spark.read.format("synthetic_events").option("rows", 600).load()
-            .where(F2.col("event_type") == "purchase")
-            .groupBy(F2.to_date("ts").alias("event_date"))
-            .agg(
-                F2.sum(F2.round(F2.col("value") * 100).cast("long"))
-                .cast("long")
-                .alias("cents")
-            )
-            .collect()
-        )
-    }
-    assert {r["event_date"]: r["daily_cents"] for r in rows} == daily
-    # CUSUM fold over the day-sorted series must match exactly
-    import math
-
-    days = sorted(daily)
-    n, total = len(days), sum(daily.values())
-    sigma = math.sqrt(
-        n * sum(c * c for c in daily.values()) - total * total
-    )
-    s = 0
-    expect = {}
-    for d in days:
-        s = max(0, s + n * daily[d] - total)
-        expect[d] = s
-    for r in rows:
-        assert r["cusum_dev"] == expect[r["event_date"]]
-        assert r["drift_flag"] == (
-            1 if r["cusum_dev"] > 5.0 * sigma else 0
-        )
-
-
 def test_ddsketch_buckets_merge_by_addition_and_bound_error(spark):
     """T165 pins. (1) Merge invariance: per-day bucket counts summed
     across days must equal the buckets built directly from all rows —
@@ -342,38 +229,3 @@ def test_ddsketch_buckets_merge_by_addition_and_bound_error(spark):
         # relative error of reporting lo is bounded by width / 2^p ≤ 1/16
         # (+1 integer-truncation slack at tiny octaves)
         assert (r["cents"] - lo) <= (1 << r["p"]) // 16 + 1
-
-
-def test_streaming_ddsketch_equals_batch_buckets(spark):
-    """T165 streaming twin: per-(type, octave, sub-bucket) counts folded
-    across micro-batches must equal the one-shot batch bucket table of
-    the same rows — additive merge is exact under any batch boundary or
-    arrival order, the property the batch query's daily→type rollup and
-    this streaming fold both stand on."""
-    from pyspark.sql import functions as F2
-
-    from ecommerce_event_pipeline_spark.sources import pyds
-    from ecommerce_event_pipeline_spark.streaming import jobs
-
-    if not pyds.HAS_DATASOURCE_API:
-        import pytest as _pytest
-
-        _pytest.skip("pyspark lacks the DataSource API")
-    streamed = jobs.run_streaming_ddsketch(spark, batch_rows=200, max_rows=600)
-    pyds.register(spark)
-    pexp, sexp = sketch.log_bucket_exprs("cents", m=16)
-    whole = (
-        spark.read.format("synthetic_events").option("rows", 600).load()
-        .where(F2.col("value").isNotNull())
-        .select(
-            "event_type",
-            F2.round(F2.col("value") * 100).cast("long").alias("cents"),
-        )
-        .where(F2.col("cents") >= 1)
-        .selectExpr("event_type", f"{pexp} AS p", f"{sexp} AS s")
-        .groupBy("event_type", "p", "s")
-        .agg(F2.count("*").cast("long").alias("cnt"))
-    )
-    assert sorted(map(tuple, streamed.collect())) == sorted(
-        map(tuple, whole.collect())
-    )

@@ -9,7 +9,7 @@ from ecommerce_event_pipeline_spark.sources.readers import (
     load_events_jsonl,
     read_events,
 )
-from ecommerce_event_pipeline_spark.sources.writers import write_csv_single, write_jsonl
+from ecommerce_event_pipeline_spark.sources.writers import write_jsonl
 
 from .conftest import events_df, make_event
 
@@ -65,15 +65,6 @@ def test_jsonl_round_trip_with_explicit_schema(spark, tmp_path):
     assert load_events_jsonl(spark, path, dates=["2026-01-15"]).count() == 1
 
 
-def test_csv_single_file_sink(spark, tmp_path):
-    df = spark.range(5).selectExpr("id", "id * 2 AS double_id")
-    path = str(tmp_path / "csv_out")
-    write_csv_single(df, path)
-    back = spark.read.option("header", True).csv(path)
-    assert back.count() == 5
-    assert back.columns == ["id", "double_id"]
-
-
 def test_bucketed_join_has_no_exchange(spark):
     """bucketBy co-location: joining two tables bucketed on the join key
     plans a SortMergeJoin with NO Exchange on either side — the shuffle
@@ -111,26 +102,38 @@ def test_bucketed_join_has_no_exchange(spark):
 
 
 def test_sql_frontend_equals_dataframe_form(spark):
-    """large_orders is registered through spark.sql; the DataFrame operator
-    must produce identical rows — same Catalyst plan, two front-ends."""
+    """large_orders is registered through spark.sql; the same TPC-H
+    Q18-shaped query written with the DataFrame API must produce
+    identical rows — same Catalyst plan, two front-ends."""
     from ecommerce_event_pipeline_spark import registry
-    from ecommerce_event_pipeline_spark.operators import relational
     from ecommerce_event_pipeline_spark.sources.readers import read_table
 
     sql_rows = sorted(
         map(str, registry.queries()["large_orders"](spark, SF_DIR).collect())
     )
-    df_rows = sorted(
-        map(
-            str,
-            relational.large_orders(
-                read_table(spark, SF_DIR, "lineitem"),
-                read_table(spark, SF_DIR, "orders"),
-                read_table(spark, SF_DIR, "customer"),
-            ).collect(),
-        )
+    lineitem = read_table(spark, SF_DIR, "lineitem")
+    orders = read_table(spark, SF_DIR, "orders")
+    customer = read_table(spark, SF_DIR, "customer")
+    big = (
+        lineitem.groupBy("l_orderkey")
+        .agg(F.sum("l_quantity").alias("total_quantity"))
+        .where(F.col("total_quantity") > 300)
     )
-    assert sql_rows == df_rows
+    df_form = (
+        orders.join(big, orders.o_orderkey == big.l_orderkey)
+        .join(customer, orders.o_custkey == customer.c_custkey)
+        .select(
+            "o_orderkey",
+            "c_custkey",
+            "c_name",
+            F.to_date("o_orderdate").alias("order_date"),
+            "o_totalprice",
+            "total_quantity",
+        )
+        .orderBy(F.desc("total_quantity"), "o_orderkey")
+        .limit(20)
+    )
+    assert sql_rows == sorted(map(str, df_form.collect()))
 
 
 def test_parquet_schema_evolution_merge(spark, tmp_path):

@@ -1,5 +1,5 @@
-"""Source-scan pins for the round-12 nondeterminism sweep (VERDICT r12
-item 5).
+"""Source-scan pins: the round-12 nondeterminism sweep (VERDICT r12
+item 5) and package reachability.
 
 docs/SCALING.md's round-12 sweep asserts two package-wide invariants in
 prose:
@@ -18,17 +18,23 @@ consistent-_pid idiom. A NEW unsorted ``collect_list`` or bare
 ``F.first()`` fails the suite unless it is added to the allowlist below
 WITH a justification — the allowlist is the reviewed register of
 order-insensitive consumers, and stale entries fail too.
+
+The reachability pin (``test_every_package_name_is_reachable``) keeps
+code that only tests call out of the package: every top-level function,
+class and constant must be reachable from the engine's roots — the
+``@register``-ed queries, module-level statements (the pipeline CLI),
+``__spark_entry__.py``, ``bench.py``, the DAG, ``tools/`` and
+``perfbench/``.
 """
 
 from __future__ import annotations
 
 import ast
+import glob
 import os
 
-PKG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "ecommerce_event_pipeline_spark",
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "ecommerce_event_pipeline_spark")
 
 # (relative path, enclosing function) -> why collect_list order cannot
 # matter there. Reviewed in round 12 (SCALING.md sweep), pinned here.
@@ -56,6 +62,35 @@ BARE_FIRST_LAST_OK = {
     # r14: the percentile fusion removed the pivot (and its singleton
     # F.first cell) entirely — conditional min aggregates now.
 }
+
+
+# (relative path, top-level name) -> why the package keeps a name that
+# no root reaches.
+UNREACHED_OK = {
+    ("sources/readers.py", "clear_memo"):
+        "the documented memo API: a caller that rewrites an input path "
+        "inside one session must drop the memoized schema first",
+    ("functions/sketch.py", "hll_estimate_value"):
+        "reference HLL decoder; tests/test_analytics_marts.py checks the "
+        "registered HLL queries against it",
+    ("sources/writers.py", "write_observed_parquet"):
+        "the observed write ROADMAP item 3 wires into run_for_date",
+    ("functions/lang_profiles.py", "PROFILE_TOP_N"):
+        "generated data module (tools/build_lang_profiles.py): records "
+        "the profile depth the table was built with",
+    ("functions/pq_codebooks.py", "K"):
+        "generated data module (tools/build_pq_codebooks.py): records "
+        "the codebook shape beside M and SUB_DIM",
+}
+
+#: files outside the package whose every reference is a root
+ROOT_GLOBS = (
+    "__spark_entry__.py",
+    "bench.py",
+    "dags/event_pipeline_dag.py",
+    "tools/*.py",
+    "perfbench/*.py",
+)
 
 
 def _called_name(call: ast.Call) -> str | None:
@@ -200,3 +235,155 @@ def test_scanner_flags_seeded_counterexamples():
     found = scan_source(good)
     assert found["unsorted_collect_list"] == []
     assert found["bare_first_last"] == []
+
+
+class _Module:
+    """One package module: its top-level names, the statements that run
+    on import, and what each local alias (any import, any scope) binds."""
+
+    def __init__(self, path: str, modules: set[str]) -> None:
+        self.name = _module_name(path)
+        self.rel = os.path.relpath(path, PKG)
+        with open(path) as fh:
+            self.tree = ast.parse(fh.read())
+        is_pkg = path.endswith("__init__.py")
+        self.aliases = _aliases(self.tree, self.name, is_pkg, modules)
+        self.defs: dict[str, list[ast.stmt]] = {}
+        self.registered: list[str] = []
+        self.on_import: list[ast.stmt] = []
+        for stmt in self.tree.body:
+            if isinstance(stmt, (ast.FunctionDef, ast.ClassDef)):
+                self.defs.setdefault(stmt.name, []).append(stmt)
+                if any(_is_register(d) for d in stmt.decorator_list):
+                    self.registered.append(stmt.name)
+            elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                targets = (
+                    stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+                )
+                for t in targets:
+                    for n in ast.walk(t):
+                        if isinstance(n, ast.Name) and not n.id.startswith("__"):
+                            self.defs.setdefault(n.id, []).append(stmt)
+            elif isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                pass
+            elif not (
+                isinstance(stmt, ast.Expr) and isinstance(stmt.value, ast.Constant)
+            ):  # anything but a docstring runs on import
+                self.on_import.append(stmt)
+
+
+def _module_name(path: str) -> str:
+    parts = os.path.relpath(path, REPO)[: -len(".py")].split(os.sep)
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _is_register(dec: ast.expr) -> bool:
+    f = dec.func if isinstance(dec, ast.Call) else dec
+    return _dotted(f)[-1:] == ["register"]
+
+
+def _dotted(node: ast.AST) -> list[str]:
+    """``a.b.c`` -> ["a", "b", "c"]; [] for anything not a name chain."""
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    return [node.id, *parts[::-1]] if isinstance(node, ast.Name) else []
+
+
+def _aliases(tree, module: str, is_pkg: bool, modules: set[str]) -> dict:
+    """alias -> {("mod", module)} or {("name", module, name)}."""
+    out: dict[str, set] = {}
+    here = module.split(".") if is_pkg else module.split(".")[:-1]
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                # ``import a.b`` binds ``a``; ``import a.b as x`` binds a.b
+                bound = a.asname or a.name.split(".")[0]
+                target = a.name if a.asname else bound
+                out.setdefault(bound, set()).add(("mod", target))
+        elif isinstance(node, ast.ImportFrom):
+            src = node.module or ""
+            if node.level:
+                base = here[: len(here) - node.level + 1]
+                src = ".".join(base + ([node.module] if node.module else []))
+            for a in node.names:
+                sub = f"{src}.{a.name}"
+                target = ("mod", sub) if sub in modules else ("name", src, a.name)
+                out.setdefault(a.asname or a.name, set()).add(target)
+    return out
+
+
+def reachability() -> tuple[dict[str, _Module], set[tuple[str, str]]]:
+    """(package modules, the (module, name) pairs reachable from roots)."""
+    paths = glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)
+    names = {_module_name(p) for p in paths}
+    mods = {m.name: m for m in (_Module(p, names) for p in paths)}
+
+    def defined(module: str, name: str) -> set[tuple[str, str]]:
+        m = mods.get(module)
+        if m is None:
+            return set()
+        if name in m.defs:
+            return {(module, name)}
+        found = set()  # a package re-export: follow it to its definition
+        for kind, *rest in m.aliases.get(name, ()):
+            if kind == "name":
+                found |= defined(*rest)
+        return found
+
+    def refs(nodes, aliases: dict, module: _Module | None) -> set:
+        found = set()
+        for top in nodes:
+            for node in ast.walk(top):
+                chain = _dotted(node)
+                if not chain:
+                    continue
+                if module is not None and chain[0] in module.defs:
+                    found.add((module.name, chain[0]))
+                    continue
+                for kind, *rest in aliases.get(chain[0], ()):
+                    if kind == "name":
+                        found |= defined(*rest)
+                        continue
+                    target, tail = rest[0], chain[1:]
+                    while tail and f"{target}.{tail[0]}" in mods:
+                        target, tail = f"{target}.{tail[0]}", tail[1:]
+                    if tail:
+                        found |= defined(target, tail[0])
+        return found
+
+    frontier = set()
+    for m in mods.values():
+        frontier |= {(m.name, n) for n in m.registered}
+        frontier |= refs(m.on_import, m.aliases, m)
+    for pattern in ROOT_GLOBS:
+        for path in glob.glob(os.path.join(REPO, pattern)):
+            if os.path.basename(path).startswith("test_"):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            frontier |= refs([tree], _aliases(tree, "__main__", False, names), None)
+    live: set[tuple[str, str]] = set()
+    while frontier:
+        key = frontier.pop()
+        if key not in live:
+            live.add(key)
+            m = mods[key[0]]
+            frontier |= refs(m.defs[key[1]], m.aliases, m) - live
+    return mods, live
+
+
+def test_every_package_name_is_reachable():
+    mods, live = reachability()
+    unreached = {
+        (m.rel, n) for m in mods.values() for n in m.defs if (m.name, n) not in live
+    }
+    rogue = unreached - set(UNREACHED_OK)
+    assert not rogue, (
+        "package names that no query, pipeline, DAG, tool or benchmark "
+        "reaches — delete them with their tests, or justify them here: "
+        + ", ".join(f"{p}:{n}" for p, n in sorted(rogue))
+    )
+    stale = set(UNREACHED_OK) - unreached
+    assert not stale, f"allowlist entries reachable or gone: {sorted(stale)}"

@@ -188,15 +188,17 @@ def test_value_percentiles_null_and_all_null_groups(spark):
 
 def test_grouped_ntile_histogram_matches_per_row_ntile(spark):
     """The value-support histogram (r13 opt) must be bit-identical to
-    aggregating the exact per-row grouped_ntile: heavy exact-value ties
-    straddling bucket boundaries, group sizes not divisible by the
-    bucket count, and a group smaller than the bucket count."""
+    aggregating the exact per-row NTILE(4) OVER (PARTITION BY g ORDER BY
+    v, rid): heavy exact-value ties straddling bucket boundaries, group
+    sizes not divisible by the bucket count, and a group smaller than
+    the bucket count."""
     import random
+
+    from pyspark.sql import Window
 
     from ecommerce_event_pipeline_spark.functions.stats import (
         grouped_ntile_histogram,
     )
-    from ecommerce_event_pipeline_spark.operators.windows import grouped_ntile
 
     rnd = random.Random(13)
     rows = []
@@ -218,8 +220,9 @@ def test_grouped_ntile_histogram_matches_per_row_ntile(spark):
             df.select("g", "v"), 4, ["g"], "v", num_partitions=5
         ).collect()
     }
-    per_row = grouped_ntile(df, 4, ["g"], ["v", "rid"], out_col="q",
-                            num_partitions=5)
+    per_row = df.withColumn(
+        "q", F.ntile(4).over(Window.partitionBy("g").orderBy("v", "rid"))
+    )
     expect = {
         (r["g"], r["q"]): (r["n"], r["mn"], r["mx"])
         for r in per_row.groupBy("g", "q")

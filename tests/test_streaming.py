@@ -56,21 +56,6 @@ def test_streaming_user_state_equals_batch_groupby(spark):
     assert s == b
 
 
-def test_foreach_batch_parquet_sink_is_idempotent(spark, tmp_path):
-    out = str(tmp_path / "stream_hourly")
-    first = jobs.run_streaming_to_parquet(spark, SF_DIR, out).collect()
-    # re-running the whole stream (reprocessing every batch) must not
-    # duplicate rows — dynamic overwrite rewrites the same partitions
-    second = jobs.run_streaming_to_parquet(spark, SF_DIR, out).collect()
-    assert sorted(map(str, first)) == sorted(map(str, second))
-    batch = (
-        read_events(spark, SF_DIR)
-        .groupBy(F.date_trunc("hour", "ts").alias("window_start"))
-        .count()
-    )
-    assert len(first) == batch.count()
-
-
 def test_streaming_dedup_equals_batch_distinct(spark):
     stream = jobs.run_streaming_dedup(spark, SF_DIR)
     batch = (
@@ -149,41 +134,6 @@ def test_streaming_attribution_join_equals_batch_interval_join(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts_before
 
 
-def test_streaming_cdc_upsert_folds_to_batch_merge(spark, tmp_path):
-    from ecommerce_event_pipeline_spark.operators.relational import cdc_merge
-    from ecommerce_event_pipeline_spark.sources import pyds
-    from pyspark.sql import functions as F
-
-    if not pyds.register(spark):
-        import pytest
-
-        pytest.skip("Python DataSource API unavailable")
-
-    streamed = jobs.run_streaming_cdc_upsert(
-        spark, str(tmp_path), batch_rows=200, max_rows=600
-    )
-    got = [tuple(r) for r in streamed.collect()]
-    assert len(got) > 0
-
-    # one-shot batch merge over the identical change set (associativity of
-    # latest-seq-wins folding across micro-batch boundaries)
-    all_rows = spark.read.format("synthetic_events").option("rows", 600).load()
-    changes = all_rows.select(
-        (F.col("user_id") % 50).alias("o_orderkey"),
-        F.col("event_type").alias("o_orderstatus"),
-        F.coalesce("value", F.lit(0.0)).alias("o_totalprice"),
-        F.when(F.col("event_type") == "purchase", F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-        F.col("event_id").alias("_seq"),
-    )
-    empty = spark.createDataFrame(
-        [], "o_orderkey bigint, o_orderstatus string, o_totalprice double"
-    )
-    want = [tuple(r) for r in cdc_merge(empty, changes).collect()]
-    assert got == want
-
-
 def test_split_gap_sessions_resume_across_batches():
     """The pure splitter must produce identical sessions whether events
     arrive in one batch or resume from carried state mid-session."""
@@ -240,50 +190,6 @@ def test_streaming_session_expiry_matches_batch_rule(spark, tmp_path):
         (1, base, 2),
         (1, base + dt.timedelta(minutes=120), 1),
     ]
-
-
-def test_streaming_user_state_tws_matches_batch(spark):
-    """Spark 4 transformWithState counter == batch groupBy. Skipped where
-    google.protobuf (the TWS state-server protocol dependency) is absent
-    — the import gate in the job raises up front."""
-    import pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        pytest.skip("google.protobuf not available in this environment")
-    from pyspark.sql import functions as F
-
-    from ecommerce_event_pipeline_spark.streaming import jobs
-
-    out = jobs.run_streaming_user_state_tws(spark, "/root/testdata/sf0.001")
-    batch = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("events_seen"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .orderBy("user_id")
-    )
-    assert [tuple(r) for r in out.collect()] == [tuple(r) for r in batch.collect()]
-
-
-def test_streaming_user_state_tws_gate_raises_without_protobuf():
-    """In protobuf-less environments the job must fail fast with a clear
-    ImportError, not a mid-query python worker crash."""
-    import pytest
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        pytest.skip("protobuf present; gate inactive")
-    except ImportError:
-        pass
-    from ecommerce_event_pipeline_spark.streaming import jobs
-
-    with pytest.raises(ImportError, match="google.protobuf"):
-        jobs.run_streaming_user_state_tws(None, "unused")
 
 
 def test_checkpoint_recovery_exactly_once(spark, tmp_path):

@@ -58,7 +58,7 @@ def test_doc_fingerprint_deterministic_and_distinct(spark):
         [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "delta epsilon")],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in text.doc_fingerprint(df).collect()}
+    out = {r["doc_id"]: r for r in text.doc_fingerprint_portable(df).collect()}
     assert out[1]["content_hash"] == out[2]["content_hash"]
     assert out[1]["rolling_hash"] == out[2]["rolling_hash"]
     assert out[1]["content_hash"] != out[3]["content_hash"]

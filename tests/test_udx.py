@@ -1,4 +1,4 @@
-"""UDAF/UDTF surface: vectorized median aggregate + bigram UDTF parity."""
+"""UDF surface: vectorized median aggregate + batch inference UDF."""
 
 from __future__ import annotations
 
@@ -16,29 +16,6 @@ def test_pandas_median_udaf_matches_exact_median(spark):
     assert out["a"]["median_value"] == 2.5  # interpolated even-n median
     assert out["b"]["median_value"] == 5.0
     assert out["a"]["n_values"] == 4
-
-
-def test_bigram_udtf_equals_native_posexplode(spark):
-    docs = spark.createDataFrame(
-        [(1, "The quick brown fox"), (2, "solo"), (3, ""), (4, "a b")],
-        "doc_id long, text string",
-    )
-    native = [tuple(r) for r in udx.bigrams_native(docs, max_tokens=30).collect()]
-    BigramUDTF = udx.make_bigram_udtf()
-    via_udtf = [
-        tuple(r)
-        for r in docs.select("doc_id", "text")
-        .lateralJoin(
-            BigramUDTF(
-                F.lit(30), F.col("doc_id").outer(), F.col("text").outer()
-            ).alias("g")
-        )
-        .select("g.doc_id", "g.pos", "g.bigram")
-        .orderBy("doc_id", "pos")
-        .collect()
-    ]
-    assert native == via_udtf
-    assert (1, 0, "the quick") in native
 
 
 def test_embedding_inference_plan_is_arrow_and_shuffle_free(spark):

@@ -1,9 +1,8 @@
-"""Writer semantics: idempotent per-date overwrite, dedup-on-append."""
+"""Writer semantics: idempotent per-date overwrite, observed writes."""
 
 from __future__ import annotations
 
 from ecommerce_event_pipeline_spark.sources.writers import (
-    append_dedup_by_key,
     write_partitioned_parquet,
 )
 
@@ -27,71 +26,6 @@ def test_dynamic_partition_overwrite_is_per_date(spark, tmp_path):
     assert out.count() == 3
     assert out.where("event_date = '2026-01-15'").count() == 1
     assert out.where("event_date = '2026-01-16'").count() == 2
-
-
-def test_append_dedup_by_key(spark):
-    batch = events_df(
-        spark,
-        [
-            make_event("page_view", event_id="e1"),
-            make_event("page_view", event_id="e1"),  # within-batch dup
-            make_event("page_view", event_id="e2"),
-        ],
-    )
-    existing = events_df(spark, [make_event("page_view", event_id="e2")])
-    out = append_dedup_by_key(batch, existing, "event_id")
-    assert [r["event_id"] for r in out.collect()] == ["e1"]
-
-
-def test_compact_partitions_reduces_file_count(spark, tmp_path):
-    from ecommerce_event_pipeline_spark.sources.writers import compact_partitions
-
-    # simulate a fragmented layout: many tiny appends into one partition
-    path = str(tmp_path / "fragmented")
-    for batch in range(6):
-        events_df(
-            spark,
-            [
-                make_event(
-                    "page_view",
-                    event_id=f"b{batch}-e{i}",
-                    timestamp=f"2026-01-15T10:{batch:02d}:{i:02d}",
-                )
-                for i in range(5)
-            ],
-        ).write.mode("append").partitionBy("event_date").parquet(path)
-
-    import glob
-
-    before = len(glob.glob(f"{path}/*/*.parquet"))
-    after = compact_partitions(
-        spark, path, "event_date", target_rows_per_file=100_000,
-        sort_cols=["user_id", "ts"],
-    )
-    assert after < before
-    assert after >= 1
-    compacted = spark.read.parquet(path + "__compacted")
-    assert compacted.count() == 30
-
-
-def test_orc_round_trip_partitioned(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from ecommerce_event_pipeline_spark.sources.writers import write_orc
-
-    df = spark.createDataFrame(
-        [(1, "2024-01-01", 3.5), (2, "2024-01-02", 4.5)],
-        "id long, event_date string, v double",
-    )
-    path = str(tmp_path / "orc")
-    write_orc(df, path, partition_col="event_date")
-    back = spark.read.orc(path)
-    assert sorted((r["id"], r["v"]) for r in back.collect()) == [(1, 3.5), (2, 4.5)]
-    # partition column survives as a directory key (read back with
-    # partition-type inference → dates)
-    assert {
-        str(v) for v in back.select("event_date").toPandas()["event_date"]
-    } == {"2024-01-01", "2024-01-02"}
 
 
 def test_write_observed_parquet_metrics_without_second_scan(spark, tmp_path):
