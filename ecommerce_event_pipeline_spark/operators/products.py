@@ -139,7 +139,7 @@ def product_daily(
     )
     if top_n is not None:
         return out.orderBy(F.desc("revenue"), "product_id").limit(top_n)
-    return out.orderBy("product_id", "event_date")
+    return out  # unsorted, like the daily marts (operators/marts.py)
 
 
 def orders_mart(events: DataFrame, purchase_type: str = "purchase") -> DataFrame:

@@ -98,7 +98,7 @@ def funnel_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         steps=("view", "click", "purchase"),
         group_cols=("event_date",),
         step_names=("step1_viewers", "step2_clickers", "step3_purchasers"),
-    )
+    ).orderBy("event_date")
 
 
 _HOURLY_ORACLE = """
@@ -119,7 +119,7 @@ def hourly_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events(spark, sf_dir)
     return marts.hourly_traffic(
         events, group_cols=("event_date", "event_hour"), session_col=None
-    )
+    ).orderBy("event_date", "event_hour")
 
 
 _USER_DAILY_ORACLE = """
@@ -151,7 +151,7 @@ def user_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         amount_type="purchase",
         amount_col="value",
         session_col=None,
-    )
+    ).orderBy("user_id", "event_date")
 
 
 _SESSION_PATTERNS_ORACLE = """

@@ -10,6 +10,28 @@ At cluster scale the same builder applies: AQE coalesces the post-shuffle
 partitions to match data volume, dynamic partition overwrite makes per-date
 mart writes idempotent (the reference's DELETE+INSERT contract), and ANSI
 mode stays off so ``x / 0`` yields NULL like the reference's non-ANSI jobs.
+
+JIT policy. ``get_spark`` launches the driver JVM with HotSpot's C1→C2
+promotion thresholds raised 10× over the JDK 17 defaults
+(``JIT_JAVA_OPTIONS``). A daily batch runs once in a fresh JVM, and there
+the JIT was the largest single cost: 42 of 61 CPU-s of a cold
+``run_for_date`` day (10k users, 4-core VM) went to HotSpot compilation,
+mostly C2 compiling lukewarm code (Catalyst planning, Janino, per-job
+generated classes, the streaming and Parquet-writer stacks) that ran too
+briefly to repay it. With the higher thresholds that code stays on C1,
+while truly hot loops, such as the similarity verify join, still reach
+C2. Only C1 (``-XX:TieredStopAtLevel=1``) made ``similarity`` far slower,
+and 3× thresholds changed nothing. The price is paid by long sessions:
+code that turns hot only after many queries reaches C2 later, so a
+229-query session runs a few percent longer on less CPU (CHANGES.md).
+
+The flags go in ``spark.driver.defaultJavaOptions``, which Spark puts in
+front of ``spark.driver.extraJavaOptions``, so a caller's
+``extra_conf={"spark.driver.extraJavaOptions": ...}`` is kept and its
+flags win. JVM options apply only when the JVM starts: the policy reaches
+only a driver JVM that ``get_spark`` launches. A session built by an
+outside driver, or one ``getOrCreate`` finds already running, keeps its
+own JIT settings, and so do cluster executors (docs/SCALING.md).
 """
 
 from __future__ import annotations
@@ -41,6 +63,15 @@ RUNTIME_CONF = {
     "spark.sql.shuffle.partitions": str(default_parallelism()),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
+
+
+#: HotSpot C1→C2 (tier 4) promotion thresholds, 10× the JDK 17 defaults
+#: (5000 / 600 / 15000 / 40000): lukewarm code stays on C1 instead of being
+#: compiled by C2 for a run too short to repay it (module docstring).
+JIT_JAVA_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
 
 
 def tune(
@@ -100,6 +131,9 @@ def get_spark(
         # (~62 MB at sf0.1) — the headroom is for churn, not storage.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
+        # read at JVM launch only; extraJavaOptions follows it, so a
+        # caller's flags are kept and win
+        .config("spark.driver.defaultJavaOptions", JIT_JAVA_OPTIONS)
     )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)

@@ -3,8 +3,6 @@ quality rules, shard assignment, semantic dedup."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 

@@ -9,7 +9,6 @@ from __future__ import annotations
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from ecommerce_event_pipeline_spark.queries.corpus_lm import (
     containment_pairs,

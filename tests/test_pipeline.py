@@ -58,6 +58,26 @@ def test_pipeline_success_path_writes_marts(spark, tmp_path):
         assert spark.read.parquet(res.outputs[name]).count() > 0
 
 
+def test_pipeline_day_job_budget_and_event_count(spark, tmp_path, count_jobs):
+    """One day fires a bounded number of jobs: ``event_count`` comes from
+    the quality aggregate, not a count job of its own, and the marts are
+    written unsorted. 27 jobs here (36 with the count job and the four
+    mart sorts)."""
+    ev = generate_events(spark, "2026-02-05", n_users=100)
+    n_rows = ev.count()
+    res = {}
+
+    def day():
+        res["r"] = pipeline.run_for_date(spark, "2026-02-05", str(tmp_path), events=ev)
+
+    jobs = count_jobs(day)
+    assert res["r"].status == "SUCCESS"
+    assert res["r"].event_count == n_rows
+    assert jobs <= 30
+    run_log = spark.read.parquet(res["r"].outputs["pipeline_run_log"]).collect()
+    assert [r["event_count"] for r in run_log] == [n_rows]
+
+
 def test_pipeline_quality_fail_branch_skips_marts(spark, tmp_path):
     # poison the data: every timestamp outside the valid year range
     bad = events_df(

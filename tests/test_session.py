@@ -1,10 +1,14 @@
-"""Session tuning: conf that ``tune()`` must set on a session it did not build."""
+"""Session construction and tuning: the JIT policy ``get_spark`` launches
+the driver JVM with, and conf that ``tune()`` must set on a session it did
+not build."""
 
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.sql import SparkSession
 
-from ecommerce_event_pipeline_spark.session import tune
+from ecommerce_event_pipeline_spark import session
+from ecommerce_event_pipeline_spark.session import JIT_JAVA_OPTIONS, get_spark, tune
 
 ARROW = "spark.sql.execution.arrow.pyspark.enabled"
 
@@ -27,3 +31,38 @@ def test_tune_turns_arrow_on_in_a_foreign_session(spark):
     rows = foreign.createDataFrame(pdf, "v long").collect()
     assert [r["v"] for r in rows] == [1, None]
     assert spark.conf.get(ARROW) == shared_before
+
+
+def test_driver_jvm_runs_the_jit_policy(spark):
+    """The suite's session is built by ``get_spark``, so its JVM must have
+    been launched with the four tier-4 thresholds: a conf that never
+    reaches the command line would leave the JDK defaults in force."""
+    args = list(
+        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+        .getInputArguments()
+    )
+    flags = JIT_JAVA_OPTIONS.split()
+    assert len(flags) == 4
+    for flag in flags:
+        assert flag in args
+
+
+def test_caller_java_options_survive_the_jit_policy(spark, monkeypatch):
+    """A caller's ``spark.driver.extraJavaOptions`` reaches the builder
+    untouched, beside the policy's own ``defaultJavaOptions`` (Spark puts
+    the default options first, so the caller's flags win). The builder is
+    captured instead of launched: the suite's JVM already runs."""
+    seen = {}
+
+    def capture(builder):
+        seen.update(builder._options)
+        return spark
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    monkeypatch.setattr(session, "tune", lambda s, overrides=None: s)
+    caller = "-XX:Tier4CompileThreshold=160000 -Dgraft.caller=1"
+
+    get_spark(extra_conf={"spark.driver.extraJavaOptions": caller})
+
+    assert seen["spark.driver.extraJavaOptions"] == caller
+    assert seen["spark.driver.defaultJavaOptions"] == JIT_JAVA_OPTIONS

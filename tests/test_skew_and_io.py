@@ -250,12 +250,17 @@ def test_aqe_skew_join_actually_splits(spark):
     the final adaptive plan must carry SortMergeJoin(skew=true) and an
     AQEShuffleRead marked `skewed`. Thresholds are restored afterwards
     — other tests share the session."""
+    splits = 4
     tuned = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "32KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "32KB",
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        # with coalescing off the join reads shuffle.partitions, which a
+        # registry query's tune() resets to the core count; at 2 the
+        # median partition is the skewed one and nothing counts as skewed
+        "spark.sql.shuffle.partitions": str(2 * splits),
     }
     saved = {}
     for k in tuned:
@@ -266,13 +271,16 @@ def test_aqe_skew_join_actually_splits(spark):
     try:
         for k, v in tuned.items():
             spark.conf.set(k, v)
-        big = spark.range(0, 300_000).select(
+        # the map split count is pinned too: AQE splits a skewed
+        # partition at map-output boundaries, so a local[1] session's
+        # single split leaves it nothing to split on
+        big = spark.range(0, 300_000, 1, splits).select(
             F.when(F.col("id") % 10 < 9, F.lit(0))
             .otherwise(F.col("id") % 50)
             .alias("k"),
             F.col("id").alias("payload"),
         )
-        small = spark.range(0, 50).select(
+        small = spark.range(0, 50, 1, splits).select(
             F.col("id").alias("k"), (F.col("id") * 2).alias("v")
         )
         out = big.join(small, "k").groupBy().agg(

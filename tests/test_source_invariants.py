@@ -25,6 +25,11 @@ class and constant must be reachable from the engine's roots — the
 ``@register``-ed queries, module-level statements (the pipeline CLI),
 ``__spark_entry__.py``, ``bench.py``, the DAG, ``tools/`` and
 ``perfbench/``.
+
+The import pin (``test_no_unused_test_imports``) fails on a module-level
+import under ``tests/`` that its module never uses. It stays out of the
+package on purpose: ``registry.py`` re-exports names and imports query
+modules for their registration side effects.
 """
 
 from __future__ import annotations
@@ -82,6 +87,10 @@ UNREACHED_OK = {
         "generated data module (tools/build_pq_codebooks.py): records "
         "the codebook shape beside M and SUB_DIM",
 }
+
+# (test module, imported name) -> why a test module imports a name it
+# never reads. Empty: pytest fixtures come from conftest.py, not imports.
+UNUSED_TEST_IMPORT_OK: dict[tuple[str, str], str] = {}
 
 #: files outside the package whose every reference is a root
 ROOT_GLOBS = (
@@ -387,3 +396,45 @@ def test_every_package_name_is_reachable():
     )
     stale = set(UNREACHED_OK) - unreached
     assert not stale, f"allowlist entries reachable or gone: {sorted(stale)}"
+
+
+def unused_imports(src: str) -> list[str]:
+    """Names bound by the module-level imports of ``src`` that nothing in
+    it reads (``import a.b`` binds ``a``; ``__future__`` is skipped)."""
+    tree = ast.parse(src)
+    bound = []
+    for node in tree.body:
+        if isinstance(node, ast.Import):
+            bound += [a.asname or a.name.split(".")[0] for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            bound += [a.asname or a.name for a in node.names if a.name != "*"]
+    read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return [name for name in bound if name not in read]
+
+
+def test_unused_import_scanner_flags_seeded_counterexamples():
+    src = (
+        "from __future__ import annotations\n"
+        "import math\n"
+        "import os.path\n"
+        "from pyspark.sql import functions as F, Window\n"
+        "def f(x: Window):\n"
+        "    return os.path.join(x)\n"
+    )
+    assert unused_imports(src) == ["math", "F"]
+
+
+def test_no_unused_test_imports():
+    unused = set()
+    for path in sorted(glob.glob(os.path.join(REPO, "tests", "*.py"))):
+        rel = os.path.basename(path)
+        with open(path) as f:
+            unused |= {(rel, name) for name in unused_imports(f.read())}
+    rogue = unused - set(UNUSED_TEST_IMPORT_OK)
+    assert not rogue, (
+        "test modules import names they never use — delete the import, "
+        "or justify it here: "
+        + ", ".join(f"{p}:{n}" for p, n in sorted(rogue))
+    )
+    stale = set(UNUSED_TEST_IMPORT_OK) - unused
+    assert not stale, f"allowlist entries used or gone: {sorted(stale)}"

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import functions as F
-
 from ecommerce_event_pipeline_spark.functions import curation
 from ecommerce_event_pipeline_spark.operators import olap, relational
 

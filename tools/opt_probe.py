@@ -5,7 +5,12 @@ methodology (`collect()` wall time, shared bases pre-warmed) — reporting
 cold + min-of-N warm seconds and the cold rep's Spark job counts per
 phase (``build_jobs``: the query function, ``exec_jobs``: its
 ``collect()``; each phase runs under its own job group and is counted
-from the status tracker), and optionally dumps
+from the status tracker). For the cold rep it also prints the JVM's JIT
+layer: ``jit_s``, the HotSpot compilation time the rep added
+(``CompilationMXBean``, summed over compiler threads), and
+``codegen_compiles``, the whole-stage/expression classes Janino compiled
+(``CodegenMetrics``); both are read over py4j and fire no job. It
+optionally dumps
 ``explain('formatted')`` per query to ``plans/<round>/<q>_<tag>.txt``.
 
 Usage:
@@ -68,10 +73,17 @@ def main() -> None:
 
     qs = registry.queries()
     sc = spark.sparkContext
+    jit = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    janino = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def jvm_layer() -> tuple[float, int]:
+        return jit.getTotalCompilationTime() / 1000.0, janino.getCount()
+
     out = {}
     for name in names:
         fn = qs[name]
         times = []
+        layer0 = jvm_layer()
         for i in range(max(1, args.reps)):
             t0 = time.perf_counter()
             sc.setJobGroup(f"opt_probe:{name}#{i}:build", f"build {name}")
@@ -79,15 +91,22 @@ def main() -> None:
             sc.setJobGroup(f"opt_probe:{name}#{i}:exec", f"execute {name}")
             df.collect()
             times.append(round(time.perf_counter() - t0, 3))
+            if i == 0:
+                layer1 = jvm_layer()
+                cold = {
+                    "jit_s": round(layer1[0] - layer0[0], 2),
+                    "codegen_compiles": layer1[1] - layer0[1],
+                }
         sc.setJobGroup(None, None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = {
             f"{phase}_jobs": len(sc.statusTracker().getJobIdsForGroup(f"opt_probe:{name}#0:{phase}"))
             for phase in ("build", "exec")
         }
-        out[name] = {"cold": times[0], "warm_min": min(times[1:] or times), **jobs}
+        out[name] = {"cold": times[0], "warm_min": min(times[1:] or times), **jobs, **cold}
         print(f"{name}: cold={times[0]:.2f} warm_min={out[name]['warm_min']:.2f} all={times} "
-              f"build_jobs={jobs['build_jobs']} exec_jobs={jobs['exec_jobs']}", flush=True)
+              f"build_jobs={jobs['build_jobs']} exec_jobs={jobs['exec_jobs']} "
+              f"jit_s={cold['jit_s']:.2f} codegen_compiles={cold['codegen_compiles']}", flush=True)
         if args.tag:
             plan_dir = os.path.join(REPO, "plans", args.round_dir)
             os.makedirs(plan_dir, exist_ok=True)
