@@ -19,6 +19,16 @@ Env:
 Each query is executed to completion (``collect``) so the timing covers
 scan → shuffle → result, not just plan construction. Session startup and
 JVM warm-up are excluded from per-query times.
+
+Every seat is measured as well as timed, with the readers of
+``perfbench/`` (``measure.Contention``, ``layers.StatusStore``,
+``layers.StreamListener``): its jobs run under a job group named after
+the query, a contention window records the CPU the host spent outside
+this process tree while it ran, and once its timer has stopped its jobs,
+stages, tasks and executor CPU are read from Spark's status store.
+``bench_full.json`` keeps that record for every seat. A seat whose
+window saw too much outside CPU (``OUTSIDE_SHARE``) is re-timed once at
+the end of the run; the re-times ship as ``retimed``.
 """
 
 from __future__ import annotations
@@ -29,7 +39,22 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+# perfbench's readers import one another as top-level modules
+sys.path.insert(0, os.path.join(HERE, "perfbench"))
+
+from layers import StatusStore, StreamListener, layer_record  # noqa: E402
+from measure import Contention, nproc  # noqa: E402
+
+#: A seat is contaminated when, while it ran, the host spent more CPU
+#: outside this process tree (other programs plus hypervisor steal) than
+#: this share of the seat's wall × cores. A quarter is one whole core of
+#: a 4-core host busy elsewhere for the entire seat. On a 4-core VM at
+#: sf0.01 the largest share of the 229 seats of an idle run was 0.12
+#: (kernel threads, steal, tick rounding), and the seats that ran while
+#: two busy-loop co-tenants did read 0.39 to 0.5; a quarter lies between.
+OUTSIDE_SHARE = 0.25
 
 
 def main() -> None:
@@ -45,54 +70,13 @@ def main() -> None:
     from ecommerce_event_pipeline_spark.session import get_spark
 
     spark = get_spark("bench")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm-up
-    # warm the real input path too: the FIRST parquet read pays the
-    # nanos-timestamp layout probe (try/except + conf retry), the
-    # InMemoryFileIndex build and scan codegen — session setup, not query
-    # cost (the first registered query was absorbing ~4 s of it)
-    from ecommerce_event_pipeline_spark.sources.readers import (
-        read_events,
-        read_table,
+    warmup = warm_up(spark, sf_dir)
+    cores = nproc()
+    timings, seats, retimed, contention = run_seats(
+        SeatTimer(spark, sf_dir), registry.queries(), cores
     )
-
-    for t in ("events", "documents", "orders", "lineitem"):
-        read_table(spark, sf_dir, t).limit(1).collect()
-
-    # Pre-warm the SHARED CACHED BASES before the timed loop (VERDICT r8:
-    # whichever query runs first after a window reorder pays the full
-    # materialization of a base that 5+ queries consume, so per-query
-    # numbers were incomparable across rounds — ngram_jaccard_pairs read
-    # 5.2 s or 11.0 s depending on seat order alone). Materializing them
-    # here moves that one-time cost into a separately-reported
-    # `warmup_sec`, making per-query times mean "this query's own plan,
-    # shared bases warm" regardless of registration order. This mirrors
-    # how a production deployment would serve them: built once per day,
-    # consumed by every downstream mart.
-    t_warm = time.perf_counter()
-    read_events(spark, sf_dir).count()
-    for base in registry.SHARED_BASES:
-        base(spark, sf_dir).count()
-    _engine_primer(spark, sf_dir)
-    warmup = round(time.perf_counter() - t_warm, 3)
-
-    load_start = round(os.getloadavg()[0], 1)
-    qs = registry.queries()
-    round_no = detect_round(os.path.dirname(os.path.abspath(__file__)))
-    order = run_order(list(qs), round_no)
-    timings: dict[str, float] = {}
-    for name in order:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).collect()
-        timings[name] = round(time.perf_counter() - t0, 3)
-    load_end = round(os.getloadavg()[0], 1)
-
-    ratios, ratio_summary = stall_ratios(timings, sf)
-    stalled = is_stalled(load_start, load_end, ratio_summary)
     total = round(sum(timings.values()), 3)
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_full.json"
-    )
-    with open(full_path, "w") as f:
+    with open(os.path.join(HERE, "bench_full.json"), "w") as f:
         json.dump(
             {
                 "metric": "total_query_wall_time",
@@ -101,12 +85,11 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 "warmup_sec": warmup,
-                "load": [load_start, load_end],
-                "ratio_vs_committed": ratios,
-                "ratio_summary": ratio_summary,
-                "stalled": stalled,
-                "round": round_no,
-                "run_shift": (round_no * RUN_SHIFT_STEP) % max(len(order), 1),
+                "cores": cores,
+                "outside_share": OUTSIDE_SHARE,
+                "contention": contention,
+                "retimed": retimed,
+                "seats": seats,
             },
             f,
             indent=1,
@@ -118,77 +101,133 @@ def main() -> None:
         probe,
         sf,
         warmup,
-        load=[load_start, load_end],
-        ratio_summary=ratio_summary,
-        stalled=stalled,
+        contention={k: contention[k] for k in ("other_cpu_s", "steal_s")},
+        retimed=retimed,
     )
     print(probe)
     print(line)
     spark.stop()
 
 
-#: Rotation stride for the per-round execution order. 83 is coprime with
-#: every plausible registry size (it's prime and the registry is nowhere
-#: near a multiple), so consecutive rounds start the run far apart.
-RUN_SHIFT_STEP = 83
+def warm_up(spark, sf_dir: str) -> float:
+    """Untimed session warm-up before the first seat; returns ``warmup_sec``.
 
+    The JVM and the real input path are warmed first and not counted:
+    the FIRST parquet read pays the schema inference, the
+    InMemoryFileIndex build and scan codegen — session setup, not query
+    cost (the first registered query was absorbing ~4 s of it).
 
-def detect_round(repo: str) -> int:
-    """The round this bench run belongs to, inferred from the driver's
-    own artifacts: the driver runs bench BEFORE writing BENCH_r{N}, so
-    the current round is one past the newest committed BENCH_r*.json
-    (0 + 1 = round 1 on a fresh clone). Used only to seed the run-order
-    rotation — wrong-by-one would still decorrelate, but this is exact
-    for the driver's cadence."""
-    import glob
-
-    recs = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(repo, "BENCH_r*.json"))
-        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p)))
-    ]
-    return max(recs, default=0) + 1
-
-
-def run_order(names: list[str], round_no: int) -> list[str]:
-    """Deterministic per-round rotation of the timed execution order
-    (VERDICT r12 item 3). The r11 and r12 driver tails were host-load
-    bursts landing on FIXED run positions (73–89, then 149–156), which
-    made cross-round per-query comparison noisy exactly where the
-    registry is contiguous — the corpus_lm/experiments block ate both
-    bursts. Rotating the start position by round decorrelates seat
-    position from query identity: a burst at positions p..q hits
-    DIFFERENT queries every round, so any query slow in two consecutive
-    rounds is a plan problem, not a position problem. Rotation (not
-    shuffling) preserves the contiguity diagnostics in
-    ``stall_ratios`` — a load burst still maps to one contiguous run
-    segment."""
-    if not names:
-        return names
-    s = (round_no * RUN_SHIFT_STEP) % len(names)
-    return names[s:] + names[:s]
-
-
-def is_stalled(
-    load_start: float, load_end: float, ratio_summary: dict | None
-) -> bool:
-    """Known-stalled-at-write-time detector (VERDICT r10 item 7). The
-    r9/r10 adjudications both reduced to the same three-part signature:
-    end loadavg more than doubled over start (external load arrived
-    mid-run), the worst per-query ratio vs the committed local record
-    exceeds 10×, and the ratio tail is one contiguous run segment (a
-    plan regression tracks query identity, not seat position). When all
-    three hold the record is stall-inflated by construction, so it
-    carries ``stalled: true`` and a grader reads the adjudication
-    straight from BENCH_r*.json instead of reconstructing it. The
-    load_start floor of 1.0 keeps idle-host noise (0.1 → 0.3) from
-    tripping the doubling test."""
-    return bool(
-        ratio_summary
-        and load_end > 2 * max(load_start, 1.0)
-        and ratio_summary.get("max", 0) > 10
-        and ratio_summary.get("tail", {}).get("contig")
+    ``warmup_sec`` then covers the SHARED CACHED BASES (VERDICT r8:
+    whichever query ran first paid the full materialization of a base
+    that 5+ queries consume, so per-query numbers were incomparable
+    across rounds — ngram_jaccard_pairs read 5.2 s or 11.0 s depending
+    on seat order alone) and the engine primer. Per-query times then
+    mean "this query's own plan, shared bases warm" regardless of
+    registration order, as a production deployment serves them: built
+    once per day, consumed by every downstream mart. No registered query
+    runs here (pinned by tests/test_bench_contract.py)."""
+    from ecommerce_event_pipeline_spark import registry
+    from ecommerce_event_pipeline_spark.sources.readers import (
+        read_events,
+        read_table,
     )
+
+    spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM warm-up
+    for t in ("events", "documents", "orders", "lineitem"):
+        read_table(spark, sf_dir, t).limit(1).collect()
+    t_warm = time.perf_counter()
+    for base in (read_events, *registry.SHARED_BASES):
+        base(spark, sf_dir).count()
+    _engine_primer(spark, sf_dir)
+    return round(time.perf_counter() - t_warm, 3)
+
+
+class SeatTimer:
+    """Times one seat at a time and measures it with perfbench's readers."""
+
+    def __init__(self, spark, sf_dir: str) -> None:
+        self.spark, self.sf_dir = spark, sf_dir
+        self.store = StatusStore(spark)
+        self.listener = StreamListener()
+        spark.streams.addListener(self.listener)
+
+    def time(self, name: str, query, group: str) -> tuple[float, dict]:
+        """Seconds of ``query(spark, sf_dir).collect()`` run under job
+        group ``group``, and the seat's record: its wall-clock start, its
+        contention window and its layer record (``layers.layer_record``;
+        *build* is the query call, *execute* the ``collect()``). The timer
+        encloses that one call chain; every reading and the harvest sit
+        outside it."""
+        self.spark.sparkContext.setJobGroup(group, name)
+        streams = self.listener.run_ids
+        first = len(streams)
+        window = Contention()
+        t0 = time.time()
+        start = time.perf_counter()
+        df = query(self.spark, self.sf_dir)
+        t_mid = time.time()
+        df.collect()
+        sec = time.perf_counter() - start
+        t1 = time.time()
+        host = window.finish()
+        # micro-batch jobs carry their stream's runId as job group
+        run_ids = set(streams[first:])
+        self.store.drain()
+        jobs, stages = self.store.harvest([group, *run_ids])
+        # a job the query call fired had finished when the call returned
+        by_phase = {"build": [], "execute": []}
+        for j in jobs:
+            ended = (j.get("completionTime") or t1 * 1e3) / 1e3
+            by_phase["build" if ended <= t_mid else "execute"].append(j)
+        built = {s for j in by_phase["build"] for s in j["stageIds"]}
+        rec = layer_record(
+            {"build": (t0, t_mid), "execute": (t_mid, t1)},
+            by_phase,
+            {
+                "build": [s for s in stages if s["stageId"] in built],
+                "execute": [s for s in stages if s["stageId"] not in built],
+            },
+            [p for p in self.listener.progress if p["runId"] in run_ids],
+            [],
+        )
+        return sec, {
+            "start": round(t0, 3),
+            "sec": round(sec, 3),
+            **{k: host[k] for k in ("own_cpu_s", "other_cpu_s", "steal_s")},
+            **{k: round(v, 3) for k, v in sorted(rec.items())},
+        }
+
+
+def contaminated(seats: dict[str, dict], cores: int) -> list[str]:
+    """Seats whose window saw more CPU outside this process tree (other
+    programs plus hypervisor steal) than ``OUTSIDE_SHARE`` of the seat's
+    wall × cores, in run order."""
+    return [
+        name
+        for name, s in seats.items()
+        if s["other_cpu_s"] + s["steal_s"] > OUTSIDE_SHARE * s["sec"] * cores
+    ]
+
+
+def run_seats(timer, qs: dict, cores: int):
+    """One timed pass over ``qs`` in registration order (``_FRONT``
+    first), then one re-time of each contaminated seat after the loop.
+    Returns ``(timings, seats, retimed, contention)``: first-pass seconds
+    and records per seat (a flagged seat's record keeps its re-time's
+    record under ``retime``, so a re-time that was contaminated too
+    reads as such), re-time seconds per flagged seat, and the contention
+    window of the first pass."""
+    loop = Contention()
+    timings, seats = {}, {}
+    for name, query in qs.items():
+        sec, seats[name] = timer.time(name, query, name)
+        timings[name] = round(sec, 3)
+    contention = loop.finish()
+    retimed = {}
+    for name in contaminated(seats, cores):
+        sec, seats[name]["retime"] = timer.time(name, qs[name], f"{name}:retime")
+        retimed[name] = round(sec, 3)
+    return timings, seats, retimed, contention
 
 
 def _engine_primer(spark, sf_dir: str) -> None:
@@ -201,7 +240,7 @@ def _engine_primer(spark, sf_dir: str) -> None:
     first ~10 seats in both r10 runs (value_drift_psi 2.90 s in-run vs
     1.42 s standalone-warm; streaming_session_expiry 6.2 vs 4.6) while
     seats 11+ sat at their standalone numbers. These are session costs,
-    not query costs, and they made per-seat times depend on rotation
+    not query costs, and they made per-seat times depend on seat
     order. The primer exercises each path ONCE with inline jobs that
     match no registered query, so no seat inherits a warm cached plan
     the others lack — only the shared engine gets warm."""
@@ -322,112 +361,14 @@ def _engine_primer(spark, sf_dir: str) -> None:
             )
 
 
-def stall_ratios(
-    timings: dict[str, float],
-    sf: float | None = None,
-) -> tuple[dict[str, float], dict | None]:
-    """Per-query ratio of THIS run vs the latest committed local record
-    (`bench_local_r*.json`), so a host-stall-inflated driver record is
-    adjudicable from the record itself (VERDICT r9 item 4: the r9
-    driver total read as a 2.4x regression until BENCHNOTES forensics
-    were consulted — median driver/local 2.79 with a 40-70x tail on
-    queries whose plans did not change is the documented co-tenant
-    stall signature, not a plan regression). Returns (per-query dict —
-    written to bench_full.json — and a compact summary for the parsed
-    stdout payload). Queries under 50 ms in the committed record are
-    skipped: their ratios are timer noise, not stall evidence."""
-    import glob
-    import statistics
-
-    repo = os.path.dirname(os.path.abspath(__file__))
-    # only round-numbered records qualify as the reference — a committed
-    # forensics file like bench_local_raw.json would match the glob and
-    # crash the int() sort after the whole timed loop already ran
-    recs = sorted(
-        (
-            (int(m.group(1)), p)
-            for p in glob.glob(os.path.join(repo, "bench_local_r*.json"))
-            if (m := re.fullmatch(r"bench_local_r(\d+)\.json", os.path.basename(p)))
-        ),
-    )
-    if not recs:
-        return {}, None
-    ref_path = recs[-1][1]
-    try:
-        with open(ref_path) as f:
-            rec = json.load(f)
-        ref = rec.get("queries", {})
-        # a ratio against a record taken at a DIFFERENT scale factor is
-        # not stall evidence — it's the scale difference. Skip rather
-        # than mislead (sf=None on either side disables the guard-able
-        # comparison too).
-        if sf is None or rec.get("sf") != sf:
-            return {}, None
-    except Exception:
-        return {}, None
-    ratios = {
-        n: round(timings[n] / ref[n], 2)
-        for n in timings
-        if ref.get(n, 0) >= 0.05
-    }
-    if not ratios:
-        return {}, None
-    vals = sorted(ratios.values())
-    worst = max(ratios, key=ratios.get)
-    summary = {
-        "ref": os.path.basename(ref_path),
-        "med": round(statistics.median(vals), 2),
-        "p90": round(vals[int(0.9 * (len(vals) - 1))], 2),
-        "max": ratios[worst],
-        "max_q": worst,
-    }
-    # Run-position clustering of the ratio tail (VERDICT r10 item 5).
-    # The r10 adjudication hinged on noticing the 12 worst ratios all
-    # sat at run positions 154-186 — one contiguous segment under
-    # arriving external load — while a genuine plan regression would
-    # track query IDENTITY, not seat position. Emit that mechanically:
-    # the top-decile ratios' median run position, their position span,
-    # and a contiguity flag (span ≤ 2× the tail size ⇒ the tail is one
-    # segment of the run, i.e. positional/stall, not plan). ``timings``
-    # is insertion-ordered = run order, so position is just the index.
-    run_pos = {n: i + 1 for i, n in enumerate(timings)}
-    k = max(1, len(ratios) // 10)
-    tail_names = sorted(ratios, key=ratios.get, reverse=True)[:k]
-    pos = sorted(run_pos[n] for n in tail_names)
-    summary["tail"] = {
-        "pos_med": pos[len(pos) // 2],
-        "span": [pos[0], pos[-1]],
-        "contig": bool(pos[-1] - pos[0] + 1 <= 2 * len(pos)),
-        # Cluster count (VERDICT r11 item 5): the r11 driver tail was TWO
-        # load bursts (positions 73-89 and 169-170) that the contiguity
-        # test correctly declined to flag as one stall — but a grader
-        # still had to find the bursts by hand. Emit the number of
-        # maximal position runs mechanically: two tail positions join
-        # the same cluster when their gap is at most the tail size
-        # (within a burst, top-decile seats are packed far denser than
-        # that; between bursts, the gap is a large fraction of the run).
-        # NOTE clusters and contig are DIFFERENT lenses, not equivalent:
-        # contig is span-based (span ≤ 2k) and clusters is gap-based
-        # (every gap ≤ k), so evenly-spread positions can read clusters=1
-        # with contig=false (all gaps small, span wide) and a tight span
-        # can still split on one k+1 gap (contig=true, clusters=2). Read
-        # contig as "one segment of the run" and clusters as "how many
-        # bursts"; adjudicate stalls from both plus the load samples.
-        "clusters": 1
-        + sum(1 for a, b in zip(pos, pos[1:]) if b - a > len(pos)),
-    }
-    return ratios, summary
-
-
 def build_stdout_lines(
     timings: dict[str, float],
     front_names: list[str],
     probe: str,
     sf: float | None,
     warmup: float,
-    load: list[float] | None = None,
-    ratio_summary: dict | None = None,
-    stalled: bool = False,
+    contention: dict | None = None,
+    retimed: dict[str, float] | None = None,
 ) -> tuple[str, str]:
     """Build the two stdout lines under the driver's 2000-char capture.
 
@@ -444,16 +385,19 @@ def build_stdout_lines(
     tail can never evict graded timings. Pinned by
     tests/test_bench_contract.py.
 
-    ``load`` ([1-min loadavg at bench start, at end]) and
-    ``ratio_summary`` (this run vs the latest committed local record —
-    median/p90/max, see ``stall_ratios``) ride in the payload so a
-    stall-inflated driver record is adjudicable without consulting
-    BENCHNOTES (VERDICT r9 item 4). They are diagnostics with a
-    bounded footprint (~110 chars; max_q is clamped below), priced
-    into the same shedding budget as everything else."""
+    ``contention`` (outside CPU and steal over the timed loop) and
+    ``retimed`` (the end-of-run re-times of contaminated seats) ride in
+    the payload so a contaminated record reads as such from the record
+    itself. They are priced into the same budget: entries are shed from
+    whichever of ``queries`` and ``retimed`` holds more, fastest first, so
+    a handful of re-times survives an oversized window and a run with
+    most seats contaminated still ships half of each; ``dropped`` counts
+    both."""
     MIN_PROBE = 40  # always keep at least a probe prefix for diagnostics
     total = round(sum(timings.values()), 3)
     front = {n: round(timings[n], 2) for n in front_names if n in timings}
+    if retimed is not None:
+        retimed = {n: round(s, 2) for n, s in retimed.items()}
     budget = 2000 - 2 - MIN_PROBE  # 2 = the two newlines
     dropped = 0
     while True:
@@ -467,20 +411,17 @@ def build_stdout_lines(
             "warmup_sec": warmup,
             "full": "bench_full.json",
         }
-        if load is not None:
-            payload["load"] = load
-        if ratio_summary:
-            payload["ratio"] = dict(
-                ratio_summary, max_q=ratio_summary["max_q"][:40]
-            )
-        if stalled:
-            payload["stalled"] = True
+        if contention is not None:
+            payload["contention"] = contention
+        if retimed is not None:
+            payload["retimed"] = retimed
         if dropped:
             payload["dropped"] = dropped
         line = json.dumps(payload, separators=(",", ":"))
-        if len(line) <= budget or not front:
+        shed = max(front, retimed or {}, key=len)
+        if len(line) <= budget or not shed:
             break
-        del front[min(front, key=front.get)]
+        del shed[min(shed, key=shed.get)]
         dropped += 1
     probe = probe[: max(0, 2000 - len(line) - 2)]
     return probe, line

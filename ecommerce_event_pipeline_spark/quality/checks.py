@@ -53,6 +53,28 @@ def _i(cond: F.Column) -> F.Column:
     return F.when(cond, F.lit(1)).otherwise(F.lit(0))
 
 
+def _with_rate_and_status(rows: DataFrame) -> DataFrame:
+    """Add ``pass_rate`` and ``status`` to rows carrying ``total_records``
+    and ``failed_records``."""
+    # denominator floored at 1 exactly like the reference — an empty check
+    # population (e.g. zero purchases for Q6) is a 100% pass, never a
+    # NULL-rate FAIL (reference: scripts/validate_quality.py:36-39
+    # `failed / max(total, 1)`)
+    denom = F.greatest(F.col("total_records"), F.lit(1)).cast("double")
+    rate = F.round((F.lit(1.0) - F.col("failed_records") / denom) * 100.0, 2)
+    return (
+        rows.withColumn("pass_rate", rate)
+        # status compares the ROUNDED rate, as the reference does
+        # (98.996 rounds to 99.0 → PASS)
+        .withColumn(
+            "status",
+            F.when(F.col("pass_rate") >= F.lit(PASS_THRESHOLD), F.lit("PASS")).otherwise(
+                F.lit("FAIL")
+            ),
+        )
+    )
+
+
 def _report_rows(
     agg: DataFrame,
     checks: list[tuple[str, str]],
@@ -84,29 +106,22 @@ def _report_rows(
             ]
         structs.append(F.struct(*fields))
     rows = agg.select(F.explode(F.array(*structs)).alias("r")).select("r.*")
-    # denominator floored at 1 exactly like the reference — an empty check
-    # population (e.g. zero purchases for Q6) is a 100% pass, never a
-    # NULL-rate FAIL (reference: scripts/validate_quality.py:36-39
-    # `failed / max(total, 1)`)
-    denom = F.greatest(F.col("total_records"), F.lit(1)).cast("double")
-    rate = F.round((F.lit(1.0) - F.col("failed_records") / denom) * 100.0, 2)
-    return (
-        rows.withColumn("pass_rate", rate)
-        # status compares the ROUNDED rate, as the reference does
-        # (98.996 rounds to 99.0 → PASS)
-        .withColumn(
-            "status",
-            F.when(F.col("pass_rate") >= F.lit(PASS_THRESHOLD), F.lit("PASS")).otherwise(
-                F.lit("FAIL")
-            ),
-        )
-        .orderBy("check_name")
-    )
+    return _with_rate_and_status(rows).orderBy("check_name")
 
 
-def fixture_quality_report(events: DataFrame) -> DataFrame:
-    """Quality report for the driver fixture ``events`` table — the Q1/Q2/
-    Q3/Q5 analogs computed in one aggregation pass."""
+#: The Q1/Q2/Q3/Q5 analogs on the fixture ``events`` table, in
+#: report order: (check_name, failed-count column of ``_fixture_aggs``).
+_FIXTURE_CHECKS = [
+    ("null_required_fields", "null_failed"),
+    ("duplicate_event_id", "dup_failed"),
+    ("value_range", "range_failed"),
+    ("timestamp_validity", "ts_failed"),
+]
+
+
+def _fixture_aggs() -> list[F.Column]:
+    """``total`` and the failure count of every ``_FIXTURE_CHECKS`` entry,
+    as aggregate expressions over the fixture ``events`` table."""
     null_failed = sum(
         F.sum(_i(F.col(c).isNull())) for c in ("event_id", "event_type", "user_id", "ts")
     )
@@ -118,22 +133,19 @@ def fixture_quality_report(events: DataFrame) -> DataFrame:
         | ~F.col("event_type").isin("view", "click", "purchase", "signup", "error")
     )
     ts_bad = F.col("ts").isNull() | (F.year("ts") < 2020) | (F.year("ts") > 2030)
-    agg = events.agg(
+    return [
         F.count(F.lit(1)).alias("total"),
         null_failed.alias("null_failed"),
         (F.count(F.lit(1)) - F.count_distinct("event_id")).alias("dup_failed"),
         F.sum(_i(range_bad)).alias("range_failed"),
         F.sum(_i(ts_bad)).alias("ts_failed"),
-    )
-    return _report_rows(
-        agg,
-        [
-            ("null_required_fields", "null_failed"),
-            ("duplicate_event_id", "dup_failed"),
-            ("value_range", "range_failed"),
-            ("timestamp_validity", "ts_failed"),
-        ],
-    )
+    ]
+
+
+def fixture_quality_report(events: DataFrame) -> DataFrame:
+    """Quality report for the driver fixture ``events`` table — the Q1/Q2/
+    Q3/Q5 analogs computed in one aggregation pass."""
+    return _report_rows(events.agg(*_fixture_aggs()), _FIXTURE_CHECKS)
 
 
 def fixture_quality_trend(events: DataFrame, days: int = 7) -> DataFrame:
@@ -145,17 +157,6 @@ def fixture_quality_trend(events: DataFrame, days: int = 7) -> DataFrame:
 
     The date bound is a 1-row aggregate broadcast back onto the scan —
     at 100 TB the filter prunes date partitions before the group-by."""
-    null_failed = sum(
-        F.sum(_i(F.col(c).isNull())) for c in ("event_id", "event_type", "user_id", "ts")
-    )
-    range_bad = (
-        F.col("value").isNull()
-        | (F.col("value") < 0)
-        | (F.col("value") > 100000000)
-        | F.col("event_type").isNull()
-        | ~F.col("event_type").isin("view", "click", "purchase", "signup", "error")
-    )
-    ts_bad = F.col("ts").isNull() | (F.year("ts") < 2020) | (F.year("ts") > 2030)
     bounds = events.agg(F.max("event_date").alias("_maxd"))
     # a NULL ts has no event_date; dropping it would make the
     # timestamp_validity (and null-field) trend blind to its primary
@@ -167,20 +168,8 @@ def fixture_quality_trend(events: DataFrame, days: int = 7) -> DataFrame:
         events.crossJoin(F.broadcast(bounds))
         .where(F.datediff(F.col("_maxd"), bucket_date) < days)
         .groupBy(bucket_date.alias("check_date"))
-        .agg(
-            F.count(F.lit(1)).alias("total"),
-            null_failed.alias("null_failed"),
-            (F.count(F.lit(1)) - F.count_distinct("event_id")).alias("dup_failed"),
-            F.sum(_i(range_bad)).alias("range_failed"),
-            F.sum(_i(ts_bad)).alias("ts_failed"),
-        )
+        .agg(*_fixture_aggs())
     )
-    checks = [
-        ("null_required_fields", "null_failed"),
-        ("duplicate_event_id", "dup_failed"),
-        ("value_range", "range_failed"),
-        ("timestamp_validity", "ts_failed"),
-    ]
     rows = per_day.select(
         "check_date",
         F.col("total").cast("long").alias("total_records"),
@@ -191,23 +180,12 @@ def fixture_quality_trend(events: DataFrame, days: int = 7) -> DataFrame:
                         F.lit(name).alias("check_name"),
                         F.col(col).cast("long").alias("failed_records"),
                     )
-                    for name, col in checks
+                    for name, col in _FIXTURE_CHECKS
                 ]
             )
         ).alias("r"),
     ).select("check_date", "r.check_name", "total_records", "r.failed_records")
-    denom = F.greatest(F.col("total_records"), F.lit(1)).cast("double")
-    rate = F.round((F.lit(1.0) - F.col("failed_records") / denom) * 100.0, 2)
-    return (
-        rows.withColumn("pass_rate", rate)
-        .withColumn(
-            "status",
-            F.when(
-                F.col("pass_rate") >= F.lit(PASS_THRESHOLD), F.lit("PASS")
-            ).otherwise(F.lit("FAIL")),
-        )
-        .orderBy("check_date", "check_name")
-    )
+    return _with_rate_and_status(rows).orderBy("check_date", "check_name")
 
 
 class QualityValidator:

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from .operators import marts, relational
 from .functions import curation, dedup, similarity, text
-from .session import tune
 from .sources.readers import memo, read_events, read_table, shared_base
 
 # The registry machinery lives in registry_core so the queries/
@@ -2502,7 +2501,6 @@ def large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drop) — a user session's own view names are never clobbered."""
     import uuid
 
-    tune(spark)
     tag = uuid.uuid4().hex[:10]
     names = {t: f"_{t}_{tag}" for t in ("lineitem", "orders", "customer")}
     for table, view in names.items():

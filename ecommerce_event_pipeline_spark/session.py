@@ -46,13 +46,12 @@ def default_parallelism() -> int:
 
 
 #: Conf that is safe (and required for oracle parity) to set at runtime on
-#: any externally provided session. shuffle.partitions is pinned to the
-#: machine because stateful streaming ops (applyInPandasWithState,
-#: dropDuplicatesWithinWatermark) get NO AQE coalescing — under an external
-#: session's 200-partition default a 150-user stateful op fans out over 200
-#: Python workers (the round-2 streaming_user_state 7x regression). Arrow
-#: is on so ``toPandas``/``createDataFrame(pandas)`` convert the same way
-#: in a session we did not build as in one ``get_spark`` built.
+#: any externally provided session. Arrow is on so
+#: ``toPandas``/``createDataFrame(pandas)`` convert the same way in a
+#: session we did not build as in one ``get_spark`` built.
+#: ``spark.sql.shuffle.partitions`` is not here: ``tune`` keeps a count
+#: the session already holds and fills in the machine's only where none
+#: is set.
 RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.ansi.enabled": "false",
@@ -60,7 +59,6 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.sources.partitionOverwriteMode": "dynamic",
-    "spark.sql.shuffle.partitions": str(default_parallelism()),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
@@ -84,8 +82,22 @@ def tune(
     ``overrides`` win over ``RUNTIME_CONF`` — callers that explicitly
     request a setting (e.g. ``get_spark(shuffle_partitions=4)`` in tests)
     must not have it silently clobbered by the defaults.
+
+    ``spark.sql.shuffle.partitions`` keeps the count the session holds,
+    so a registry query run in a ``get_spark(shuffle_partitions=4)``
+    session leaves it at 4. A session with none set (one built outside
+    this package, whose Spark default is 200) gets the machine's parallelism: stateful
+    streaming ops (applyInPandasWithState, dropDuplicatesWithinWatermark)
+    size their state stores from it and get NO AQE coalescing, so at 200
+    a 150-user stateful op fanned out over 200 Python workers (the
+    round-2 streaming_user_state 7x regression).
     """
     merged = {**RUNTIME_CONF, **(overrides or {})}
+    shuffle_key = "spark.sql.shuffle.partitions"
+    if shuffle_key not in merged:
+        merged[shuffle_key] = spark.conf.get(shuffle_key, None) or str(
+            default_parallelism()
+        )
     # Shuffles START wide and AQE coalesces them down to data volume —
     # the standard cluster sizing pattern, and the piece a fixed
     # shuffle.partitions misses as data grows: at 10× sf0.1 the exact-
@@ -94,16 +106,9 @@ def tune(
     # exactly linear, the blowup was per-partition size). Keyed off the
     # effective shuffle.partitions so test sessions (4) stay small, and
     # left out of RUNTIME_CONF so an explicit override always wins.
-    # shuffle.partitions itself stays at machine parallelism because
-    # stateful STREAMING ops size their state stores from it and get no
-    # AQE coalescing (the round-2 streaming_user_state 7× regression).
     init_key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
     if init_key not in merged:
-        try:
-            base = int(merged["spark.sql.shuffle.partitions"])
-        except (KeyError, ValueError):  # pragma: no cover
-            base = default_parallelism()
-        merged[init_key] = str(8 * base)
+        merged[init_key] = str(8 * int(merged[shuffle_key]))
     for key, value in merged.items():
         try:
             spark.conf.set(key, value)

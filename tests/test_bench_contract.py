@@ -2,7 +2,8 @@
 BENCH_r04/r05 arrived ``parsed: null`` when the full query dict blew past
 that. These tests pin the shedding contract in bench.build_stdout_lines
 so a future window/probe change can't silently regress the one artifact
-the driver grades."""
+the driver grades, and the per-seat measurement behind ``retimed``: the
+flag rule, the end-of-run re-time, the seat record and the warm-up."""
 
 from __future__ import annotations
 
@@ -13,14 +14,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
-
-RATIO = {
-    "ref": "bench_local_r09.json",
-    "med": 2.79,
-    "p90": 41.2,
-    "max": 70.21,
-    "max_q": "user_lifetime_incremental",
-}
 
 
 def _lines(n_front=50, name_len=24, probe="PROBE x=OK", n_total=186, **kw):
@@ -75,77 +68,122 @@ def test_probe_budget_reserve_matches_shedding_budget():
     assert len(json.loads(line)["queries"]) == 50
 
 
-def test_load_and_ratio_ride_in_the_parsed_payload():
-    """VERDICT r9 item 4: loadavg samples + the driver/committed-local
-    ratio summary must land in the driver-parsed JSON line so a
-    stall-inflated record is adjudicable from the record itself."""
-    probe, line = _lines(load=[8.8, 2.1], ratio_summary=RATIO)
+CONTENTION = {"other_cpu_s": 61.4, "steal_s": 2.3}
+RETIMED = {"item_similarity_topk": 3.77, "semantic_dedup": 1.2}
+
+
+def test_contention_and_retimed_ride_in_the_parsed_payload():
+    """The timed loop's measured contention and the end-of-run re-times
+    land in the parsed results line, so a contaminated record reads as
+    such from the record itself; a clean run says so with an empty
+    ``retimed``."""
+    probe, line = _lines(name_len=16, contention=CONTENTION, retimed=RETIMED)
     assert len(probe) + len(line) + 2 <= 2000
     payload = json.loads(line)
-    assert payload["load"] == [8.8, 2.1]
-    assert payload["ratio"]["med"] == 2.79
-    assert payload["ratio"]["max_q"] == "user_lifetime_incremental"
-    assert payload["ratio"]["ref"] == "bench_local_r09.json"
+    assert payload["contention"] == CONTENTION
+    assert payload["retimed"] == RETIMED
+    assert "dropped" not in payload
+    _, line = _lines(contention=CONTENTION, retimed={})
+    assert json.loads(line)["retimed"] == {}
 
 
 def test_new_fields_are_priced_into_the_shedding_budget():
-    """With the diagnostics present, an oversized window still sheds
-    loudly and the line stays parseable — the new fields must never
-    push the contract line past the driver's capture."""
-    probe, line = _lines(
-        name_len=120, load=[1.0, 1.0], ratio_summary=RATIO
-    )
+    """With contention and re-times present, an oversized window still
+    sheds loudly and the line stays parseable; the shedding takes from
+    the larger window, so both diagnostics survive intact."""
+    probe, line = _lines(name_len=120, contention=CONTENTION, retimed=RETIMED)
     assert len(probe) + len(line) + 2 <= 2000
     payload = json.loads(line)
     assert payload["dropped"] > 0
-    assert "load" in payload and "ratio" in payload
+    assert len(payload["queries"]) + payload["dropped"] == 50
+    assert payload["contention"] == CONTENTION
+    assert payload["retimed"] == RETIMED
 
 
-def test_pathological_ratio_query_name_is_clamped():
-    """A 200-char max_q name must not eat the graded timings: it is
-    clamped to 40 chars before pricing."""
-    r = dict(RATIO, max_q="q" * 200)
-    probe, line = _lines(load=[1.0, 1.0], ratio_summary=r)
+def test_runaway_retimed_set_shares_the_budget_with_the_window():
+    """A run with most seats contaminated re-times more than fits. Entries
+    are shed from the larger of the two dicts, fastest first: the line
+    still parses inside the capture and keeps about as many graded front
+    entries as re-times, the slowest re-times among them."""
+    retimed = {f"q{'r' * 24}{i:03d}": 1.0 + i / 100 for i in range(150)}
+    probe, line = _lines(contention=CONTENTION, retimed=retimed)
+    assert len(probe) + len(line) + 2 <= 2000
     payload = json.loads(line)
-    assert payload["ratio"]["max_q"] == "q" * 40
-    assert len(payload["queries"]) + payload.get("dropped", 0) == 50
+    front, kept = payload["queries"], payload["retimed"]
+    assert 0 < len(kept) < 50 and abs(len(front) - len(kept)) <= 1
+    assert payload["dropped"] == 50 + 150 - len(front) - len(kept)
+    assert sorted(kept) == sorted(retimed)[-len(kept):]
 
 
-def test_stall_ratios_skips_unknown_names_and_foreign_sf():
-    """stall_ratios must only compare apples: names missing from the
-    committed record (or with sub-50 ms committed times) are skipped,
-    and a run at a DIFFERENT scale factor than the committed record
-    yields no ratios at all — a cross-sf ratio is scale difference,
-    not stall evidence."""
-    # committed records are at sf0.1; synthetic names absent from them
-    ratios, summary = bench.stall_ratios(
-        {"a": 1.0, "b": 2.0, "c": 9.0}, sf=0.1
+def _seat(sec, other, steal=0.0):
+    return {"sec": sec, "own_cpu_s": sec, "other_cpu_s": other, "steal_s": steal}
+
+
+def test_flag_rule_compares_outside_cpu_with_the_seat_share():
+    """A seat is flagged when the CPU its window saw outside the bench
+    (other + steal) exceeds OUTSIDE_SHARE of its wall × cores: a reading
+    of the seat itself, with no reference record, load average or run
+    position involved."""
+    limit = bench.OUTSIDE_SHARE * 2.0 * 4  # a 2 s seat on 4 cores
+    seats = {
+        "idle": _seat(2.0, 0.05),
+        "cotenant": _seat(2.0, 2 * 2.0),  # two busy loops for the whole seat
+        "stolen": _seat(2.0, 0.0, steal=limit + 0.1),
+        "at_limit": _seat(2.0, limit),  # equal is not above
+        "split": _seat(2.0, limit / 2 + 0.01, steal=limit / 2),
+    }
+    assert bench.contaminated(seats, cores=4) == ["cotenant", "stolen", "split"]
+    # the same outside CPU is a smaller share of a larger host
+    assert bench.contaminated({"x": _seat(2.0, 2.5)}, cores=4) == ["x"]
+    assert bench.contaminated({"x": _seat(2.0, 2.5)}, cores=8) == []
+
+
+def test_flagged_seats_are_the_burst_seats_wherever_they_sit():
+    """Co-tenant bursts at the start, middle and end of a run flag
+    exactly the seats they overlapped."""
+    names = [f"q{i:03d}" for i in range(30)]
+    burst = [0, 1, 14, 28, 29]
+    seats = {n: _seat(1.0, 2.0 if i in burst else 0.02) for i, n in enumerate(names)}
+    assert bench.contaminated(seats, cores=4) == [names[i] for i in burst]
+
+
+class _ScriptedTimer:
+    """Stands in for ``bench.SeatTimer``: scripted readings, logged calls."""
+
+    def __init__(self, readings):
+        self.readings, self.calls = readings, []
+
+    def time(self, name, query, group):
+        self.calls.append((name, group))
+        sec, other = self.readings[name].pop(0)
+        return sec, _seat(sec, other)
+
+
+def test_contaminated_seats_are_retimed_once_after_the_loop():
+    """Seats run once each in registration order; after the loop each
+    flagged seat runs once more under its own job group. ``retimed``
+    holds those re-times; ``timings`` (whose sum is ``value``) keeps the
+    first pass."""
+    timer = _ScriptedTimer(
+        {
+            "a": [(1.0, 0.0)],
+            "b": [(3.0, 6.0), (1.2, 0.0)],
+            "c": [(0.5, 0.01)],
+            "d": [(2.0, 4.0), (1.9, 0.0)],
+        }
     )
-    assert ratios == {} and summary is None
-    # real names, but a foreign sf: guard must refuse the comparison.
-    # Pick the reference with the SAME numeric-round key stall_ratios
-    # uses — a lexicographic sort diverges once r100 (or an unpadded r9)
-    # exists and the test would validate against the wrong file.
-    import glob
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest = max(
-        (
-            (int(m.group(1)), p)
-            for p in glob.glob(os.path.join(repo, "bench_local_r*.json"))
-            if (m := re.fullmatch(r"bench_local_r(\d+)\.json", os.path.basename(p)))
-        )
-    )[1]
-    rec = json.load(open(latest))
-    real = dict(
-        [(n, t) for n, t in rec["queries"].items() if t >= 0.1][:3]
-    )
-    ratios, summary = bench.stall_ratios(real, sf=0.01)
-    assert ratios == {} and summary is None
-    # same sf and real names: ratios of the record against itself are 1
-    ratios, summary = bench.stall_ratios(real, sf=rec["sf"])
-    assert summary is not None and summary["med"] == 1.0
+    qs = dict.fromkeys("abcd")
+    timings, seats, retimed, contention = bench.run_seats(timer, qs, cores=4)
+    assert timer.calls == [
+        ("a", "a"), ("b", "b"), ("c", "c"), ("d", "d"),
+        ("b", "b:retime"), ("d", "d:retime"),
+    ]
+    assert timings == {"a": 1.0, "b": 3.0, "c": 0.5, "d": 2.0}
+    assert retimed == {"b": 1.2, "d": 1.9}
+    assert list(seats) == list(qs)
+    assert [n for n in qs if "retime" in seats[n]] == ["b", "d"]
+    assert seats["b"]["sec"] == 3.0 and seats["b"]["retime"]["sec"] == 1.2
+    assert {"own_cpu_s", "other_cpu_s", "steal_s"} <= set(contention)
 
 
 def test_engine_primer_runs_on_a_live_session(spark):
@@ -159,144 +197,76 @@ def test_engine_primer_runs_on_a_live_session(spark):
     )
 
 
-def test_tail_position_clustering_in_summary():
-    """VERDICT r10 item 5: the ratio summary must carry the top-decile
-    tail's run-position median, span, and contiguity flag so "the tail
-    is positional" reads straight from the record. Build a 30-query run
-    (run order = dict order) whose 3 worst ratios sit contiguously at
-    positions 20-22."""
-    import glob
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest = max(
-        (
-            (int(m.group(1)), p)
-            for p in glob.glob(os.path.join(repo, "bench_local_r*.json"))
-            if (m := re.fullmatch(r"bench_local_r(\d+)\.json", os.path.basename(p)))
-        )
-    )[1]
-    rec = json.load(open(latest))
-    names = [n for n, t in rec["queries"].items() if t >= 0.1][:30]
-    assert len(names) == 30
-    timings = {}
-    for i, n in enumerate(names):
-        mult = 20.0 if i in (19, 20, 21) else 1.0
-        timings[n] = rec["queries"][n] * mult
-    ratios, summary = bench.stall_ratios(timings, sf=rec["sf"])
-    tail = summary["tail"]
-    assert tail["span"] == [20, 22]
-    assert tail["pos_med"] == 21
-    assert tail["contig"] is True
-    assert tail["clusters"] == 1  # one contiguous burst
-    # scattered tail: same worst ratios at positions 1, 15, 30
-    timings2 = {}
-    for i, n in enumerate(names):
-        mult = 20.0 if i in (0, 14, 29) else 1.0
-        timings2[n] = rec["queries"][n] * mult
-    _, summary2 = bench.stall_ratios(timings2, sf=rec["sf"])
-    assert summary2["tail"]["contig"] is False
-    assert summary2["tail"]["clusters"] == 3  # gaps 14 and 15 both > k=3
 
 
-def test_tail_cluster_count_reads_two_bursts():
-    """VERDICT r11 item 5: the r11 driver tail was two load bursts
-    (positions 73-89 and 169-170) that the contiguity test correctly
-    declined to flag — the cluster count must make "two bursts" readable
-    straight from the record. Reproduce the shape at 30-query scale:
-    worst ratios at positions 5-6 and 25 → two clusters, contig False."""
-    import glob
-    import re
+def test_seat_record_counts_jobs_of_a_batch_and_a_streaming_seat(spark):
+    """The per-seat record is harvested from Spark's status store: a
+    batch query's jobs through its job group, a streaming query's
+    micro-batch jobs through the stream listener's run ids."""
+    from ecommerce_event_pipeline_spark import registry
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest = max(
-        (
-            (int(m.group(1)), p)
-            for p in glob.glob(os.path.join(repo, "bench_local_r*.json"))
-            if (m := re.fullmatch(r"bench_local_r(\d+)\.json", os.path.basename(p)))
-        )
-    )[1]
-    rec = json.load(open(latest))
-    names = [n for n, t in rec["queries"].items() if t >= 0.1][:30]
-    timings = {}
-    for i, n in enumerate(names):
-        mult = 20.0 if i in (4, 5, 24) else 1.0
-        timings[n] = rec["queries"][n] * mult
-    _, summary = bench.stall_ratios(timings, sf=rec["sf"])
-    tail = summary["tail"]
-    assert tail["contig"] is False
-    assert tail["clusters"] == 2  # 5-6 packed (gap 1 ≤ k=3), 25 separate
-
-
-def test_stalled_marker_requires_all_three_signals():
-    """VERDICT r10 item 7: the stalled marker fires only on the full
-    signature — load doubling AND >10x max ratio AND a contiguous
-    tail — so a fast quiet run or a genuine plan regression is never
-    mislabeled as a stall."""
-    contig = {"max": 16.9, "tail": {"contig": True}}
-    scattered = {"max": 16.9, "tail": {"contig": False}}
-    mild = {"max": 3.0, "tail": {"contig": True}}
-    assert bench.is_stalled(3.4, 7.6, contig) is True  # the r10 signature
-    assert bench.is_stalled(3.4, 7.6, scattered) is False  # plan-shaped
-    assert bench.is_stalled(3.4, 7.6, mild) is False  # no stall-grade tail
-    assert bench.is_stalled(3.4, 3.5, contig) is False  # no load wave
-    assert bench.is_stalled(0.1, 0.9, contig) is False  # idle-host floor
-    assert bench.is_stalled(1.0, 5.0, None) is False  # no committed ref
-
-
-def test_stalled_flag_rides_in_the_payload_and_is_priced():
-    """stalled=true must land in the parsed line and participate in the
-    shedding budget like every other diagnostic."""
-    r = dict(RATIO, tail={"pos_med": 170, "span": [154, 186], "contig": True})
-    probe, line = _lines(load=[3.4, 7.6], ratio_summary=r, stalled=True)
-    assert len(probe) + len(line) + 2 <= 2000
-    payload = json.loads(line)
-    assert payload["stalled"] is True
-    assert payload["ratio"]["tail"]["contig"] is True
-    # oversized window: still parseable with the new fields present
-    probe, line = _lines(
-        name_len=120, load=[3.4, 7.6], ratio_summary=r, stalled=True
+    qs = registry.queries()
+    timer = bench.SeatTimer(spark, "/root/testdata/sf0.001")
+    recs = {}
+    try:
+        for name in ("hourly_traffic", "streaming_hourly_traffic"):
+            sec, recs[name] = timer.time(name, qs[name], f"contract:{name}")
+            assert recs[name]["sec"] == round(sec, 3) > 0
+    finally:
+        spark.streams.removeListener(timer.listener)
+        spark.sparkContext.setJobGroup(None, None)
+    for name, rec in recs.items():
+        assert rec["build.jobs"] + rec["execute.jobs"] > 0, name
+        assert rec["execute.tasks"] > 0, name
+        assert {"own_cpu_s", "other_cpu_s", "steal_s"} <= set(rec), name
+    assert "streaming.batches" not in recs["hourly_traffic"]
+    stream = recs["streaming_hourly_traffic"]
+    assert stream["streaming.batches"] > 0
+    # its micro-batch jobs ran under the stream's runId, not the seat's group
+    own_group = spark.sparkContext.statusTracker().getJobIdsForGroup(
+        "contract:streaming_hourly_traffic"
     )
-    payload = json.loads(line)
-    assert payload["dropped"] > 0 and payload["stalled"] is True
+    assert stream["build.jobs"] + stream["execute.jobs"] > len(own_group)
 
 
-def test_run_order_rotates_by_round_and_is_a_permutation(tmp_path):
-    """VERDICT r12 item 3: the timed execution order must rotate
-    deterministically by round so a host-load burst at fixed run
-    positions stops mapping to the same queries every round, while
-    staying a rotation (not a shuffle) so the contiguity/cluster
-    diagnostics in stall_ratios keep their meaning."""
-    names = [f"q{i:03d}" for i in range(228)]
-    orders = {r: bench.run_order(names, r) for r in (12, 13, 14)}
-    for r, order in orders.items():
-        assert sorted(order) == sorted(names), r  # permutation
-        assert order == bench.run_order(names, r), r  # deterministic
-        # a rotation: some split point reassembles the original list
-        s = names.index(order[0])
-        assert order == names[s:] + names[:s], r
-    # consecutive rounds start far apart (the whole point)
-    starts = {names.index(o[0]) for o in orders.values()}
-    assert len(starts) == 3
-    gaps = sorted(starts)
-    assert min(
-        (b - a) % len(names) for a, b in zip(gaps, gaps[1:])
-    ) >= 20
-    # degenerate inputs stay safe
-    assert bench.run_order([], 13) == []
-    assert bench.run_order(["only"], 13) == ["only"]
+def test_warm_up_runs_no_query_and_materializes_the_shared_bases(spark, monkeypatch):
+    """``warmup_sec`` covers the shared cached bases and the engine
+    primer, nothing else: with every registered query function replaced
+    by one that raises, warm-up completes, and the frames it materializes
+    are ``read_events`` and exactly ``registry.SHARED_BASES``."""
+    from ecommerce_event_pipeline_spark import registry, registry_core
+    from ecommerce_event_pipeline_spark.sources import readers
 
+    def _raise(spark, sf_dir):
+        raise AssertionError("warm-up ran a registered query")
 
-def test_detect_round_reads_driver_artifacts(tmp_path, monkeypatch):
-    """Round = newest committed BENCH_r*.json + 1 (the driver runs bench
-    before writing its record); fresh clone ⇒ round 1; decoy files that
-    match the glob but not the exact name pattern are ignored."""
-    assert bench.detect_round(str(tmp_path)) == 1
-    (tmp_path / "BENCH_r03.json").write_text("{}")
-    (tmp_path / "BENCH_r11.json").write_text("{}")
-    (tmp_path / "BENCH_raw.json").write_text("{}")  # decoy
-    assert bench.detect_round(str(tmp_path)) == 12
-    # the repo itself: rotation shift recorded this round must match
-    repo = os.path.dirname(os.path.abspath(bench.__file__))
-    rnd = bench.detect_round(repo)
-    assert rnd >= 13
+    registered = {id(e.fn) for e in registry_core._REGISTRY.values()}
+    for mod_name, mod in list(sys.modules.items()):
+        if mod_name.startswith("ecommerce_event_pipeline_spark"):
+            for attr, val in list(vars(mod).items()):
+                if id(val) in registered:
+                    monkeypatch.setattr(mod, attr, _raise)
+    for name, e in list(registry_core._REGISTRY.items()):
+        monkeypatch.setitem(registry_core._REGISTRY, name, registry_core.Entry(_raise, e.oracle))
+
+    materialized = []
+
+    class _Counted:
+        def __init__(self, label, df):
+            self._label, self._df = label, df
+
+        def count(self):
+            materialized.append(self._label)
+            return self._df.count()
+
+        def __getattr__(self, attr):
+            return getattr(self._df, attr)
+
+    def _recording(build):
+        return lambda spark, sf_dir: _Counted(build.__name__, build(spark, sf_dir))
+
+    bases = registry.SHARED_BASES
+    monkeypatch.setattr(readers, "read_events", _recording(readers.read_events))
+    monkeypatch.setattr(registry, "SHARED_BASES", tuple(map(_recording, bases)))
+    assert bench.warm_up(spark, "/root/testdata/sf0.001") > 0
+    assert materialized == ["read_events", *(b.__name__ for b in bases)]

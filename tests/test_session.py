@@ -11,6 +11,7 @@ from ecommerce_event_pipeline_spark import session
 from ecommerce_event_pipeline_spark.session import JIT_JAVA_OPTIONS, get_spark, tune
 
 ARROW = "spark.sql.execution.arrow.pyspark.enabled"
+SHUFFLE = "spark.sql.shuffle.partitions"
 
 
 def test_tune_turns_arrow_on_in_a_foreign_session(spark):
@@ -31,6 +32,41 @@ def test_tune_turns_arrow_on_in_a_foreign_session(spark):
     rows = foreign.createDataFrame(pdf, "v long").collect()
     assert [r["v"] for r in rows] == [1, None]
     assert spark.conf.get(ARROW) == shared_before
+
+
+def test_registry_query_keeps_the_session_shuffle_partition_count(spark):
+    """Every registry query re-tunes the session it is given. A shuffle
+    partition count the session holds must survive that, while the
+    timezone, ANSI mode and Arrow are still forced; a session with no
+    count set still gets the machine's parallelism, not Spark's 200. The
+    held count differs from ``default_parallelism()`` at any core count."""
+    from ecommerce_event_pipeline_spark import registry
+
+    query = registry.queries()["hourly_traffic"]
+    held = str(session.default_parallelism() + 3)
+    own = spark.newSession()
+    for key, value in (
+        (SHUFFLE, held),
+        ("spark.sql.session.timeZone", "Asia/Seoul"),
+        ("spark.sql.ansi.enabled", "true"),
+        (ARROW, "false"),
+    ):
+        own.conf.set(key, value)
+
+    query(own, "/root/testdata/sf0.001")
+
+    assert own.conf.get(SHUFFLE) == held
+    initial = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    assert own.conf.get(initial) == str(8 * int(held))
+    assert own.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert own.conf.get("spark.sql.ansi.enabled") == "false"
+    assert own.conf.get(ARROW) == "true"
+
+    unset = spark.newSession()
+    unset.conf.unset(SHUFFLE)
+    assert unset.conf.get(SHUFFLE, None) is None
+    query(unset, "/root/testdata/sf0.001")
+    assert unset.conf.get(SHUFFLE) == str(session.default_parallelism())
 
 
 def test_driver_jvm_runs_the_jit_policy(spark):

@@ -2,10 +2,11 @@
 
 Usage: python tools/bench_compare.py OLD.json NEW.json [top_n]
 
-Accepts either a raw `bench.py` output line (``{"metric": ..., "queries":
-{...}}``) or a driver ``BENCH_r*.json`` wrapper (``{"tail": "..."}`` whose
-tail embeds — possibly truncated at the front — the same JSON line; query
-timings are regex-recovered from whatever survived).
+Accepts a raw `bench.py` output line or ``bench_full.json``
+(``{"metric": ..., "queries": {...}}``), or a ``BENCH_r*.json`` round
+record: its ``parsed`` payload when there is one, else its ``tail``, the
+last stdout characters, whose results line may be cut at the front; the
+timings are then recovered from what survived of its ``queries`` object.
 
 The median ratio is the host-noise discriminator on this machine: a
 uniform shift across unrelated queries is load, not code (timings here
@@ -24,16 +25,16 @@ import sys
 def load_queries(path: str) -> dict[str, float]:
     with open(path) as fh:
         d = json.load(fh)
-    if "queries" in d and isinstance(d["queries"], dict):
+    d = d.get("parsed") or d
+    if isinstance(d.get("queries"), dict):
         return {k: float(v) for k, v in d["queries"].items()}
     if "tail" in d:
-        found = {
-            m.group(1): float(m.group(2))
-            for m in re.finditer(r'"([a-z_0-9]+)": ([0-9.]+)', d["tail"])
-        }
-        for meta in ("value", "sf", "n", "rc", "cpus"):
-            found.pop(meta, None)
-        return found
+        line = d["tail"].rstrip().splitlines()[-1]
+        # the "queries" object, or what is left of it when the line was
+        # cut inside it; "sf" is the key bench.py prints right after it
+        body = re.search(r'(?:"queries":\s*\{|^)([^{}]*)\},\s*"sf"', line)
+        pairs = re.findall(r'"([a-z_0-9]+)":\s*([0-9.]+)', body.group(1) if body else "")
+        return {k: float(v) for k, v in pairs}
     raise SystemExit(f"{path}: no 'queries' map or 'tail' found")
 
 
