@@ -21,8 +21,8 @@ pipeline: ## run the daily pipeline for today into ./data
 	python -m ecommerce_event_pipeline_spark.pipeline \
 		--date $$(date +%Y-%m-%d) --output data --users 500
 
-plans: ## regenerate PLANS.md (formatted physical plans)
-	python tools/explain_audit.py
+plans: ## rewrite tests/plan_fingerprints.json (checked by tests/test_plans.py)
+	python tools/plan_fingerprints.py
 
 ledger: ## regenerate COVERAGE.md (query -> driver-grade ledger)
 	python tools/make_ledger.py

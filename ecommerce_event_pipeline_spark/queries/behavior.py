@@ -875,10 +875,12 @@ def daily_topn_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-day top-5 is the ``row_number <= k`` idiom, which Spark
     compiles to Partial+Final WindowGroupLimit: at most 5 rows per day
     per input partition ever reach the shuffle, so a day with a hundred
-    million active parts costs the same as one with fifty (the plan
-    snapshot pins the node). Membership diffs are two anti-joins on the
-    tiny (days × 5) board table. Sparse calendars work unchanged: a day
-    with no prior-day board simply enters all five seats."""
+    million active parts costs the same as one with fifty. The node sits
+    in the plan of the board's pin, and the query's ``build_plans``
+    counts in ``tests/plan_fingerprints.json`` pin it. Membership diffs
+    are two anti-joins on the tiny (days × 5) board table. Sparse
+    calendars work unchanged: a day with no prior-day board simply
+    enters all five seats."""
     from pyspark.sql import Window
 
     li = read_table(spark, sf_dir, "lineitem")

@@ -405,8 +405,7 @@ def test_boundary_pid_handles_nulls_like_window_defaults(spark):
 def test_boundary_variant_is_lazy_and_fallback_triggers(spark):
     """Construction + .explain() of every fan-out operator under the
     default variant must run ZERO Spark jobs (the checkpoint variant's
-    build-time job was the ADVICE r12 storage/cost finding; plan-only
-    consumers like tools/explain_audit.py must stay free). Also pins
+    build-time job was the ADVICE r12 storage/cost finding). Also pins
     method dispatch: strings/floats can't be negated, so descending
     specs on them fall back to the checkpoint variant under 'auto' and
     raise under method='boundaries'."""

@@ -1,17 +1,32 @@
 """Physical-plan assertions — the scale properties, not just the results.
 
 These tests pin the plan shapes that matter at 100 TB: filters and column
-pruning reaching the parquet scan, small dimensions broadcast, top-k as
-TakeOrderedAndProject (never a global sort), and map-side partial
-aggregation before every exchange. A regression here is a performance bug
-even while results stay correct.
+pruning reaching the parquet scan, map-side partial aggregation before
+every exchange, keyed windows. Every non-streaming registered query's
+plan fingerprint (join strategies, top-k nodes, Python boundaries,
+shuffles, job counts) is checked against ``tests/plan_fingerprints.json``
+(``make plans`` rewrites it), and no query outside a reviewed allowlist
+may plan a single-partition window. A regression here is a performance
+bug even while results stay correct.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import re
+import sys
+
+import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 from ecommerce_event_pipeline_spark import registry
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
+
+import plan_fingerprints  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -38,19 +53,6 @@ def test_column_pruning_on_wide_scan(spark):
     assert "event_type" in m.group(1)
 
 
-def test_small_dims_are_broadcast(spark):
-    plan = plan_of("local_supplier_volume", spark)
-    assert "BroadcastHashJoin" in plan
-    plan2 = plan_of("customer_nation_rollup", spark)
-    assert "BroadcastHashJoin" in plan2
-
-
-def test_topk_is_take_ordered_not_global_sort(spark):
-    for name in ("shipping_priority", "top_parts_by_revenue"):
-        plan = plan_of(name, spark)
-        assert "TakeOrderedAndProject" in plan, f"{name} lost its top-k plan"
-
-
 def test_aggregates_have_mapside_partials(spark):
     plan = plan_of("pricing_summary", spark)
     assert "partial_sum" in plan  # partial (map-side) before the exchange
@@ -59,19 +61,6 @@ def test_aggregates_have_mapside_partials(spark):
 def test_semi_join_for_exists(spark):
     plan = plan_of("order_priority_counts", spark)
     assert "LeftSemi" in plan
-
-
-def test_no_python_udf_in_relational_paths(spark):
-    # every reference-parity operator stays JVM-side; Python appears only in
-    # the explicitly-vectorized ANN/multimodal operators
-    for name in (
-        "funnel_daily", "user_daily", "session_patterns", "pricing_summary",
-        "quality_report", "doc_token_stats", "minhash_near_dupes",
-        "simhash_fingerprints", "embedding_topk",
-    ):
-        plan = plan_of(name, spark)
-        assert "BatchEvalPython" not in plan, f"{name} fell back to row-Python"
-        assert "ArrowEvalPython" not in plan, f"{name} uses a UDF it shouldn't"
 
 
 def test_orders_mart_bounds_driver_transfer(spark):
@@ -248,3 +237,72 @@ def test_span_stats_explodes_the_corpus_once(spark):
     # and the window is keyed — partitioned by the span digest, not global
     m = re.search(r"Window.*\[span_h", plan)
     assert m or "windowspecdefinition(span_h" in plan, plan[:2000]
+
+
+@pytest.fixture(scope="module")
+def fingerprints(spark):
+    """The recorded fingerprints, and the measured ones with each query's
+    unpartitioned window lines. A query above its recorded job ceiling
+    is run again, up to six runs, before it counts as drifted."""
+    with open(plan_fingerprints.RECORD) as f:
+        recorded = json.load(f)
+    ceilings = {name: r["exec_jobs"] for name, r in recorded.items()}
+    return recorded, *plan_fingerprints.fingerprint(spark, ceilings, tries=6)
+
+
+def test_plan_fingerprints_match_the_record(fingerprints):
+    """Any change in a query's plan-feature counts (its own or build-time
+    plans) or build jobs, or more execute jobs than recorded, fails until
+    the record is rewritten with the change explained."""
+    recorded, measured, _ = fingerprints
+    drift = []
+    for name in sorted(set(measured) | set(recorded)):
+        new, old = measured.get(name), recorded.get(name)
+        if new is None or old is None:
+            drift.append(f"{name}: {'not recorded' if old is None else 'gone'}")
+            continue
+        for plans in ("plan", "build_plans"):
+            for feature in sorted(set(new[plans]) | set(old[plans])):
+                was, now = old[plans].get(feature, 0), new[plans].get(feature, 0)
+                if was != now:
+                    drift.append(f"{name}: {plans} {feature} {was} -> {now}")
+        was, now = old["build_jobs"], new["build_jobs"]
+        if was != now:
+            drift.append(f"{name}: build_jobs {was} -> {now}")
+        was, now = old["exec_jobs"], new["exec_jobs"]
+        if now > was:
+            drift.append(f"{name}: exec_jobs {now} above the recorded {was}")
+    assert not drift, (
+        "plans drifted from tests/plan_fingerprints.json; if intended, rewrite"
+        " it with `make plans` and explain each change:\n" + "\n".join(drift)
+    )
+
+
+def test_unpartitioned_windows_only_in_allowlisted_queries(fingerprints):
+    """A WindowExec with an order but no partition spec moves every row
+    to one task; only the allowlisted bounded-grain queries may plan one,
+    in their own or build-time plans, and every allowlist entry must
+    still plan one."""
+    _, _, windows = fingerprints
+    allowed = plan_fingerprints.GLOBAL_WINDOW_ALLOWLIST
+    offenders = [
+        f"{name}: {line[:140]}"
+        for name, lines in windows.items()
+        if name not in allowed
+        for line in lines
+    ]
+    assert not offenders, "single-partition windows:\n" + "\n".join(offenders)
+    stale = set(allowed) - {name for name, lines in windows.items() if lines}
+    assert not stale, f"allowlist entries that plan no such window: {sorted(stale)}"
+
+
+def test_unpartitioned_window_lines_flags_only_the_global_order(spark):
+    df = spark.range(100).select((F.col("id") % 3).alias("g"), F.col("id").alias("v"))
+
+    def lines(w):
+        plan = df.select(F.sum("v").over(w))._jdf.queryExecution().executedPlan()
+        return plan_fingerprints.unpartitioned_window_lines(plan.toString())
+
+    assert len(lines(Window.orderBy("v"))) == 1
+    assert lines(Window.partitionBy("g").orderBy("v")) == []
+    assert lines(Window.partitionBy("g")) == []

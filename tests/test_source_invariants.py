@@ -72,9 +72,6 @@ BARE_FIRST_LAST_OK = {
 # (relative path, top-level name) -> why the package keeps a name that
 # no root reaches.
 UNREACHED_OK = {
-    ("sources/readers.py", "clear_memo"):
-        "the documented memo API: a caller that rewrites an input path "
-        "inside one session must drop the memoized schema first",
     ("functions/sketch.py", "hll_estimate_value"):
         "reference HLL decoder; tests/test_analytics_marts.py checks the "
         "registered HLL queries against it",

@@ -37,7 +37,8 @@ def main() -> None:
         "(`registry._FRONT`); every row has a DuckDB oracle twin",
         "(`__spark_entry__.oracle_sql()`), checked locally by",
         "`tools/check_oracle.py`. See COVERAGE.md for the per-round",
-        "grading ledger and PLANS.md for physical-plan audits.",
+        "grading ledger and tests/plan_fingerprints.json for each",
+        "query's checked plan fingerprint.",
         "",
         "| # | query | defined in | summary |",
         "|---|---|---|---|",

@@ -9,12 +9,10 @@ from the status tracker). For the cold rep it also prints the JVM's JIT
 layer: ``jit_s``, the HotSpot compilation time the rep added
 (``CompilationMXBean``, summed over compiler threads), and
 ``codegen_compiles``, the whole-stage/expression classes Janino compiled
-(``CodegenMetrics``); both are read over py4j and fire no job. It
-optionally dumps
-``explain('formatted')`` per query to ``plans/<round>/<q>_<tag>.txt``.
+(``CodegenMetrics``); both are read over py4j and fire no job.
 
 Usage:
-    python tools/opt_probe.py [--tag before] [--round r14] [--reps 3] q1 q2 ...
+    python tools/opt_probe.py [--reps 3] q1 q2 ...
     python tools/opt_probe.py --top 30          # slowest from the record
 """
 
@@ -34,9 +32,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
-    ap.add_argument("--tag", default=None, help="plans/<round>/<q>_<tag>.txt")
-    ap.add_argument("--round", dest="round_dir", default="r14",
-                    help="plan-dump subdirectory under plans/ (default r14)")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--top", type=int, default=0)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -107,14 +102,6 @@ def main() -> None:
         print(f"{name}: cold={times[0]:.2f} warm_min={out[name]['warm_min']:.2f} all={times} "
               f"build_jobs={jobs['build_jobs']} exec_jobs={jobs['exec_jobs']} "
               f"jit_s={cold['jit_s']:.2f} codegen_compiles={cold['codegen_compiles']}", flush=True)
-        if args.tag:
-            plan_dir = os.path.join(REPO, "plans", args.round_dir)
-            os.makedirs(plan_dir, exist_ok=True)
-            df = fn(spark, args.sf_dir)
-            with open(os.path.join(plan_dir, f"{name}_{args.tag}.txt"), "w") as f:
-                f.write(df._jdf.queryExecution().explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-                ))
     print(json.dumps(out, indent=1))
     spark.stop()
 
