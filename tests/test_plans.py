@@ -53,6 +53,19 @@ def test_column_pruning_on_wide_scan(spark):
     assert "event_type" in m.group(1)
 
 
+def test_small_dims_are_broadcast(spark):
+    plan = plan_of("local_supplier_volume", spark)
+    assert "BroadcastHashJoin" in plan
+    plan2 = plan_of("customer_nation_rollup", spark)
+    assert "BroadcastHashJoin" in plan2
+
+
+def test_topk_is_take_ordered_not_global_sort(spark):
+    for name in ("shipping_priority", "top_parts_by_revenue"):
+        plan = plan_of(name, spark)
+        assert "TakeOrderedAndProject" in plan, f"{name} lost its top-k plan"
+
+
 def test_aggregates_have_mapside_partials(spark):
     plan = plan_of("pricing_summary", spark)
     assert "partial_sum" in plan  # partial (map-side) before the exchange
@@ -61,6 +74,19 @@ def test_aggregates_have_mapside_partials(spark):
 def test_semi_join_for_exists(spark):
     plan = plan_of("order_priority_counts", spark)
     assert "LeftSemi" in plan
+
+
+def test_no_python_udf_in_relational_paths(spark):
+    # every reference-parity operator stays JVM-side; Python appears only in
+    # the explicitly-vectorized ANN/multimodal operators
+    for name in (
+        "funnel_daily", "user_daily", "session_patterns", "pricing_summary",
+        "quality_report", "doc_token_stats", "minhash_near_dupes",
+        "simhash_fingerprints", "embedding_topk",
+    ):
+        plan = plan_of(name, spark)
+        assert "BatchEvalPython" not in plan, f"{name} fell back to row-Python"
+        assert "ArrowEvalPython" not in plan, f"{name} uses a UDF it shouldn't"
 
 
 def test_orders_mart_bounds_driver_transfer(spark):
