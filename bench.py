@@ -25,10 +25,11 @@ Every seat is measured as well as timed, with the readers of
 ``layers.StreamListener``): its jobs run under a job group named after
 the query, a contention window records the CPU the host spent outside
 this process tree while it ran, and once its timer has stopped its jobs,
-stages, tasks and executor CPU are read from Spark's status store.
-``bench_full.json`` keeps that record for every seat. A seat whose
-window saw too much outside CPU (``OUTSIDE_SHARE``) is re-timed once at
-the end of the run; the re-times ship as ``retimed``.
+stages, tasks and executor CPU are read from Spark's status store, and
+its JVM warm-up layer from the JVM (``jit_reader``). ``bench_full.json``
+keeps that record for every seat. A seat whose window saw too much
+outside CPU (``OUTSIDE_SHARE``) is re-timed once at the end of the run;
+the re-times ship as ``retimed``.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ import os
 import re
 import sys
 import time
+from collections.abc import Callable
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
@@ -125,7 +127,13 @@ def warm_up(spark, sf_dir: str) -> float:
     mean "this query's own plan, shared bases warm" regardless of
     registration order, as a production deployment serves them: built
     once per day, consumed by every downstream mart. No registered query
-    runs here (pinned by tests/test_bench_contract.py)."""
+    runs here (pinned by tests/test_bench_contract.py).
+
+    The classes Janino compiles here stay in the session's generated-code
+    cache, which ``get_spark`` sizes above the whole registry's working
+    set (``session.CODEGEN_CACHE_ENTRIES``), so a seat whose code matches
+    warm-up code does not compile it again. Under Spark's default
+    100-entry cache they were evicted within the first few seats."""
     from ecommerce_event_pipeline_spark import registry
     from ecommerce_event_pipeline_spark.sources.readers import (
         read_events,
@@ -142,11 +150,25 @@ def warm_up(spark, sf_dir: str) -> float:
     return round(time.perf_counter() - t_warm, 3)
 
 
+def jit_reader(spark) -> Callable[[], tuple[float, int]]:
+    """A reader of the JVM warm-up layer's two running totals, read over
+    py4j without a job: ``read() -> (jit_s, codegen_compiles)``, the
+    seconds HotSpot has spent compiling (``CompilationMXBean``, summed
+    over compiler threads) and the classes Janino has compiled
+    (``CodegenMetrics``). A Janino compile while work that already ran
+    runs again is a generated-code cache miss."""
+    jvm = spark._jvm
+    hotspot = jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    janino = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    return lambda: (hotspot.getTotalCompilationTime() / 1000.0, janino.getCount())
+
+
 class SeatTimer:
     """Times one seat at a time and measures it with perfbench's readers."""
 
     def __init__(self, spark, sf_dir: str) -> None:
         self.spark, self.sf_dir = spark, sf_dir
+        self.jit = jit_reader(spark)
         self.store = StatusStore(spark)
         self.listener = StreamListener()
         spark.streams.addListener(self.listener)
@@ -154,13 +176,15 @@ class SeatTimer:
     def time(self, name: str, query, group: str) -> tuple[float, dict]:
         """Seconds of ``query(spark, sf_dir).collect()`` run under job
         group ``group``, and the seat's record: its wall-clock start, its
-        contention window and its layer record (``layers.layer_record``;
-        *build* is the query call, *execute* the ``collect()``). The timer
-        encloses that one call chain; every reading and the harvest sit
-        outside it."""
+        contention window, its layer record (``layers.layer_record``;
+        *build* is the query call, *execute* the ``collect()``) and its
+        JVM warm-up layer (``jit.jit_s``, ``jit.codegen_compiles``). The
+        timer encloses that one call chain; every reading and the harvest
+        sit outside it."""
         self.spark.sparkContext.setJobGroup(group, name)
         streams = self.listener.run_ids
         first = len(streams)
+        jit0 = self.jit()
         window = Contention()
         t0 = time.time()
         start = time.perf_counter()
@@ -170,6 +194,7 @@ class SeatTimer:
         sec = time.perf_counter() - start
         t1 = time.time()
         host = window.finish()
+        jit1 = self.jit()
         # micro-batch jobs carry their stream's runId as job group
         run_ids = set(streams[first:])
         self.store.drain()
@@ -190,6 +215,8 @@ class SeatTimer:
             [p for p in self.listener.progress if p["runId"] in run_ids],
             [],
         )
+        rec["jit.jit_s"] = jit1[0] - jit0[0]
+        rec["jit.codegen_compiles"] = jit1[1] - jit0[1]
         return sec, {
             "start": round(t0, 3),
             "sec": round(sec, 3),
@@ -243,7 +270,9 @@ def _engine_primer(spark, sf_dir: str) -> None:
     not query costs, and they made per-seat times depend on seat
     order. The primer exercises each path ONCE with inline jobs that
     match no registered query, so no seat inherits a warm cached plan
-    the others lack — only the shared engine gets warm."""
+    the others lack — only the shared engine gets warm. Its generated
+    classes survive into the seats: ``get_spark``'s generated-code cache
+    holds them for the whole run."""
     import tempfile
 
     from pyspark.sql import Window

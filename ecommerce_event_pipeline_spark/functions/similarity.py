@@ -26,6 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.readers import literal_frame
+
 
 def _as_double(col) -> F.Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -63,8 +65,8 @@ def _require_single_query(query: DataFrame) -> DataFrame:
             "expected exactly one query row, got "
             + (">=2" if len(rows) > 1 else "0")
         )
-    return query.sparkSession.createDataFrame(
-        [(rows[0]["emb"],)], "embedding array<double>"
+    return literal_frame(
+        query.sparkSession, [(rows[0]["emb"],)], "embedding array<double>"
     )
 
 
@@ -539,7 +541,8 @@ def static_centroid_assign(embeddings: DataFrame) -> DataFrame:
     from .ivf_centroids import CENTROIDS
 
     spark = embeddings.sparkSession
-    cents = spark.createDataFrame(
+    cents = literal_frame(
+        spark,
         [(i, list(c)) for i, c in enumerate(CENTROIDS)],
         "centroid_id int, cvec array<double>",
     )
@@ -586,7 +589,8 @@ def ivf_topk_static(
     from .ivf_centroids import CENTROIDS
 
     spark = embeddings.sparkSession
-    cents = spark.createDataFrame(
+    cents = literal_frame(
+        spark,
         [(i, list(c)) for i, c in enumerate(CENTROIDS)],
         "centroid_id int, cvec array<double>",
     )
@@ -648,8 +652,8 @@ def pq_encode_static(embeddings: DataFrame) -> DataFrame:
             for v in cvec:  # sequential Python fold → one shared literal
                 hn += v * v
             rows.append((m, k, list(cvec), hn / 2.0))
-    cb = spark.createDataFrame(
-        rows, "m int, code int, cvec array<double>, hn double"
+    cb = literal_frame(
+        spark, rows, "m int, code int, cvec array<double>, hn double"
     )
     e = embeddings.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
@@ -721,8 +725,8 @@ def pq_adc_topk(
             for v in cvec:
                 hn += v * v
             rows.append((m, kk, list(cvec), hn / 2.0))
-    cb = spark.createDataFrame(
-        rows, "m int, code int, cvec array<double>, hn double"
+    cb = literal_frame(
+        spark, rows, "m int, code int, cvec array<double>, hn double"
     )
     sub = F.slice(F.col("emb"), F.col("m") * SUB_DIM + 1, SUB_DIM)
     dot = F.aggregate(
@@ -807,7 +811,8 @@ def ivf_pq_topk(
     query = _require_single_query(query)
 
     # ---- tier 1: coarse probe --------------------------------------
-    cents = spark.createDataFrame(
+    cents = literal_frame(
+        spark,
         [(i, list(c)) for i, c in enumerate(CENTROIDS)],
         "centroid_id int, cvec array<double>",
     )
@@ -835,8 +840,8 @@ def ivf_pq_topk(
             for v in cvec:
                 hn += v * v
             rows.append((m, kk, list(cvec), hn / 2.0))
-    cb = spark.createDataFrame(
-        rows, "m int, code int, cvec array<double>, hn double"
+    cb = literal_frame(
+        spark, rows, "m int, code int, cvec array<double>, hn double"
     )
     sub = F.slice(F.col("emb"), F.col("m") * SUB_DIM + 1, SUB_DIM)
     dot = F.aggregate(

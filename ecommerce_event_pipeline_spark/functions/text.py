@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.readers import literal_frame
+
 #: BPE-ish word/number/punctuation token pattern — same regex dialect subset
 #: works in Java (Spark) and RE2-like engines (DuckDB re2).
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -138,7 +140,7 @@ def language_id_ngram(docs: DataFrame, profiles: DataFrame | None = None) -> Dat
             for lang in sorted(PROFILES)
             for gram in PROFILES[lang]
         ]
-        profiles = docs.sparkSession.createDataFrame(rows, "lang string, gram string")
+        profiles = literal_frame(docs.sparkSession, rows, "lang string, gram string")
         langs = sorted(PROFILES)
     else:
         langs = sorted(r.lang for r in profiles.select("lang").distinct().collect())

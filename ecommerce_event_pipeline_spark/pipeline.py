@@ -31,6 +31,7 @@ from .operators import marts, products
 from .quality.checks import QualityValidator
 from .schemas import EVENT_TYPES, FUNNEL_STEPS
 from .sources.generator import generate_events
+from .sources.readers import literal_frame
 from .sources.writers import write_partitioned_parquet
 
 
@@ -120,7 +121,7 @@ def run_for_date(
     # rows instead of appending duplicates (idempotent retries/backfills).
     # Rebuilt from the already-collected rows — writing report_df directly
     # would re-run both aggregation passes over the events.
-    spark.createDataFrame(report_rows, report_df.schema).write.mode(
+    literal_frame(spark, report_rows, report_df.schema).write.mode(
         "overwrite"
     ).partitionBy("check_date").parquet(f"{out}/quality_check_log")
     result.outputs["quality_check_log"] = f"{out}/quality_check_log"
@@ -140,7 +141,8 @@ def run_for_date(
     # BEFORE any fail_on_quality raise so failed runs are recorded too (the
     # runs an operator most needs to see in the log)
     result.elapsed_s = round(time.time() - t0, 2)
-    run_log = spark.createDataFrame(
+    run_log = literal_frame(
+        spark,
         [(ds, result.status, event_count, result.elapsed_s)],
         "ds string, status string, event_count long, elapsed_s double",
     )

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ..sources.readers import read_events, read_table
+from ..sources.readers import literal_frame, read_events, read_table
 from ..operators.windows import pin_frame
 from ..registry_core import register
 
@@ -171,7 +171,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("active_user"),
         F.col("event_date").alias("d"),
     ).distinct()
-    offsets = spark.createDataFrame([(0,), (1,), (3,), (7,)], "day_offset int")
+    offsets = literal_frame(spark, [(0,), (1,), (3,), (7,)], "day_offset int")
     sizes = firsts.groupBy("cohort_date").agg(
         F.count("*").alias("cohort_users")
     )
@@ -769,7 +769,7 @@ def value_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.range(10)
         .select(F.col("id").cast("int").alias("bin"))
         .crossJoin(
-            spark.createDataFrame([("a",), ("b",)], "half string")
+            literal_frame(spark, [("a",), ("b",)], "half string")
         )
     )
     c = (

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry_core import register
-from ..sources.readers import read_events, read_table
+from ..sources.readers import literal_frame, read_events, read_table
 
 # ---------------------------------------------------------------------------
 # T123 — Kaplan-Meier repeat-purchase survival per market segment
@@ -727,7 +727,8 @@ def _stationary_parts(events: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     spark = events.sparkSession
     cnt = spark.createDataFrame(counts, "a string, b string, c long")
     v = [None] * len(states) if pi is None else pi.tolist()
-    pi = spark.createDataFrame(
+    pi = literal_frame(
+        spark,
         list(zip(states.tolist(), r.tolist(), v)), "s string, r long, v long"
     )
     return cnt, pi, n_states

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ..sources.readers import read_events, read_table
+from ..sources.readers import literal_frame, read_events, read_table
 from ..operators.windows import pin_frame
 from ..registry_core import register
 
@@ -264,7 +264,8 @@ def benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     comes from the exact-cents integer's decimal string, not the float.
     One narrow scan → 9-group aggregate → broadcast against a 9-row
     literal grid; nothing here grows with data volume except the scan."""
-    grid = spark.createDataFrame(
+    grid = literal_frame(
+        spark,
         [
             (1, 301030),
             (2, 176091),

@@ -229,6 +229,29 @@ def test_seat_record_counts_jobs_of_a_batch_and_a_streaming_seat(spark):
     assert stream["build.jobs"] + stream["execute.jobs"] > len(own_group)
 
 
+def test_seat_record_carries_the_jvm_warm_up_layer(spark):
+    """Every seat record carries its JIT layer, read outside the timer: a
+    seat whose code the session has not generated yet compiles classes,
+    and its repeat compiles none (the generated-code cache holds them).
+    The literal makes the generated code new to the session."""
+    import uuid
+
+    salt = uuid.uuid4().int % 1_000_003
+
+    def query(spark, sf_dir):
+        return spark.range(100).selectExpr(f"sum(id * {salt}) AS s")
+
+    timer = bench.SeatTimer(spark, "/root/testdata/sf0.001")
+    try:
+        recs = [timer.time("jit", query, "contract:jit")[1] for _ in range(2)]
+    finally:
+        spark.streams.removeListener(timer.listener)
+        spark.sparkContext.setJobGroup(None, None)
+    assert recs[0]["jit.codegen_compiles"] > 0
+    assert recs[1]["jit.codegen_compiles"] == 0
+    assert all(r["jit.jit_s"] >= 0 for r in recs)
+
+
 def test_warm_up_runs_no_query_and_materializes_the_shared_bases(spark, monkeypatch):
     """``warmup_sec`` covers the shared cached bases and the engine
     primer, nothing else: with every registered query function replaced

@@ -78,6 +78,49 @@ def test_pipeline_day_job_budget_and_event_count(spark, tmp_path, count_jobs):
     assert [r["event_count"] for r in run_log] == [n_rows]
 
 
+def test_warm_pipeline_days_compile_no_classes(spark, tmp_path):
+    """Repeats of one day reuse every class Janino generated for the first:
+    the session's generated-code cache holds a day's working set (about
+    180 classes; Spark's default cache keeps 100 and recompiled all of
+    them on every run)."""
+    janino = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ev = generate_events(spark, "2026-02-06", n_users=100)
+    compiles = []
+    for _ in range(3):
+        before = janino.getCount()
+        res = pipeline.run_for_date(spark, "2026-02-06", str(tmp_path), events=ev)
+        assert res.status == "SUCCESS"
+        compiles.append(janino.getCount() - before)
+    assert compiles[1:] == [0, 0], compiles
+
+
+def test_pipeline_day_scans_no_python_rdd(spark, tmp_path):
+    """The day's log frames are built on the driver as local relations:
+    no SQL execution of the day scans an ``ExistingRDD``, whose PythonRDD
+    starts Python worker tasks only to unpickle a few rows. Plans are read
+    from the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id() -> int:
+        executions = store.executionsList()
+        n = executions.size()
+        return executions.apply(n - 1).executionId() if n else -1
+
+    bus.waitUntilEmpty()
+    first = last_id() + 1
+    pipeline.run_for_date(spark, "2026-02-07", str(tmp_path), n_users=100)
+    bus.waitUntilEmpty()
+    executions = store.executionsList()
+    plans = [
+        executions.apply(i).physicalPlanDescription()
+        for i in range(executions.size())
+        if executions.apply(i).executionId() >= first
+    ]
+    assert len(plans) >= 7  # the log writes and the marts' writes
+    assert not [p for p in plans if "ExistingRDD" in p]
+
+
 def test_pipeline_quality_fail_branch_skips_marts(spark, tmp_path):
     # poison the data: every timestamp outside the valid year range
     bad = events_df(

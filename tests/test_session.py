@@ -1,6 +1,6 @@
 """Session construction and tuning: the JIT policy ``get_spark`` launches
-the driver JVM with, and conf that ``tune()`` must set on a session it did
-not build."""
+the driver JVM with, the generated-code cache size it sets, and conf that
+``tune()`` must set on a session it did not build."""
 
 from __future__ import annotations
 
@@ -8,7 +8,12 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from ecommerce_event_pipeline_spark import session
-from ecommerce_event_pipeline_spark.session import JIT_JAVA_OPTIONS, get_spark, tune
+from ecommerce_event_pipeline_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
+    JIT_JAVA_OPTIONS,
+    get_spark,
+    tune,
+)
 
 ARROW = "spark.sql.execution.arrow.pyspark.enabled"
 SHUFFLE = "spark.sql.shuffle.partitions"
@@ -81,6 +86,14 @@ def test_driver_jvm_runs_the_jit_policy(spark):
     assert len(flags) == 4
     for flag in flags:
         assert flag in args
+
+
+def test_driver_jvm_sizes_the_codegen_cache(spark):
+    """The suite's session is built by ``get_spark``, so its static
+    ``spark.sql.codegen.cache.maxEntries`` must hold the package's size,
+    not Spark's default of 100, which a single pipeline day overflows."""
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)
 
 
 def test_caller_java_options_survive_the_jit_policy(spark, monkeypatch):

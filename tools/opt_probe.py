@@ -9,7 +9,10 @@ from the status tracker). For the cold rep it also prints the JVM's JIT
 layer: ``jit_s``, the HotSpot compilation time the rep added
 (``CompilationMXBean``, summed over compiler threads), and
 ``codegen_compiles``, the whole-stage/expression classes Janino compiled
-(``CodegenMetrics``); both are read over py4j and fire no job.
+(``CodegenMetrics``); both are read over py4j and fire no job
+(``bench.jit_reader``). ``warm_compiles`` counts the classes Janino
+compiled over the warm reps: each is a generated-code cache miss, since a
+warm rep runs code the cold rep already generated.
 
 Usage:
     python tools/opt_probe.py [--reps 3] q1 q2 ...
@@ -38,6 +41,7 @@ def main() -> None:
     args = ap.parse_args()
 
     os.environ.setdefault("SPARK_GRAFT_CACHE_EVENTS", "1")
+    from bench import jit_reader
     from ecommerce_event_pipeline_spark import registry
     from ecommerce_event_pipeline_spark.session import get_spark
     from ecommerce_event_pipeline_spark.sources.readers import read_events, read_table
@@ -68,11 +72,7 @@ def main() -> None:
 
     qs = registry.queries()
     sc = spark.sparkContext
-    jit = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
-    janino = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
-
-    def jvm_layer() -> tuple[float, int]:
-        return jit.getTotalCompilationTime() / 1000.0, janino.getCount()
+    jvm_layer = jit_reader(spark)
 
     out = {}
     for name in names:
@@ -92,16 +92,19 @@ def main() -> None:
                     "jit_s": round(layer1[0] - layer0[0], 2),
                     "codegen_compiles": layer1[1] - layer0[1],
                 }
+        warm_compiles = jvm_layer()[1] - layer1[1]
         sc.setJobGroup(None, None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = {
             f"{phase}_jobs": len(sc.statusTracker().getJobIdsForGroup(f"opt_probe:{name}#0:{phase}"))
             for phase in ("build", "exec")
         }
-        out[name] = {"cold": times[0], "warm_min": min(times[1:] or times), **jobs, **cold}
+        out[name] = {"cold": times[0], "warm_min": min(times[1:] or times), **jobs, **cold,
+                     "warm_compiles": warm_compiles}
         print(f"{name}: cold={times[0]:.2f} warm_min={out[name]['warm_min']:.2f} all={times} "
               f"build_jobs={jobs['build_jobs']} exec_jobs={jobs['exec_jobs']} "
-              f"jit_s={cold['jit_s']:.2f} codegen_compiles={cold['codegen_compiles']}", flush=True)
+              f"jit_s={cold['jit_s']:.2f} codegen_compiles={cold['codegen_compiles']} "
+              f"warm_compiles={warm_compiles}", flush=True)
     print(json.dumps(out, indent=1))
     spark.stop()
 
