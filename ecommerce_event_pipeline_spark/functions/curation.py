@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
 from .dedup import shingle_sets, word_kgrams
 
 
@@ -81,7 +82,7 @@ def contamination_check(
             ).alias("containment"),
         )
         .withColumn("is_contaminated", F.col("containment") >= F.lit(threshold))
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 
@@ -114,7 +115,7 @@ def doc_chunks(
             F.concat_ws(" ", chunk).alias("chunk_text"),
             F.size(chunk).alias("n_tokens"),
         )
-        .orderBy("doc_id", "chunk_index")
+        .transform(sort_result, "doc_id", "chunk_index")
     )
 
 
@@ -191,7 +192,7 @@ def pack_sequences(
                 f" - start_offset div {b} + 1"
             ).alias("bins_spanned"),
         )
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 
@@ -251,7 +252,7 @@ def pii_scrub(docs: DataFrame) -> DataFrame:
         # md5 (not xxhash64): both engines implement it identically, so the
         # scrubbed text itself stays value-hash-checkable via the oracle
         F.md5(scrubbed).alias("scrubbed_md5"),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 #: (name, failure predicate builder) — C4/Gopher-style heuristic filters.
@@ -299,7 +300,7 @@ def quality_flags(docs: DataFrame) -> DataFrame:
     return (
         flagged.withColumn("n_failed", n_failed)
         .withColumn("keep", F.col("n_failed") == 0)
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 
@@ -327,7 +328,7 @@ def training_shards(docs: DataFrame, n_shards: int = 16, seed: int = 7) -> DataF
     return (
         assigned.withColumn("shard_pos", F.row_number().over(pos))
         .select("doc_id", "shard_id", "shard_pos")
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 
@@ -348,7 +349,7 @@ def dataset_split(
     bucket, split = split_exprs(F.col("doc_id"), fractions, seed)
     return docs.select(
         "doc_id", "lang", bucket.cast("int").alias("bucket"), split.alias("split")
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 def split_exprs(
@@ -416,7 +417,7 @@ def language_mix_weights(
             .cast("long")
             .alias("expected_docs"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -461,7 +462,7 @@ def semantic_dedup(
             F.col("duplicate_of").isNull().alias("keep"),
             "duplicate_of",
         )
-        .orderBy("vec_id")
+        .transform(sort_result, "vec_id")
     )
 
 
@@ -484,7 +485,7 @@ def doc_repetition(docs: DataFrame, k: int = 3) -> DataFrame:
         F.round(
             (total - distinct).cast("double") / total.cast("double"), 6
         ).alias("rep_fraction"),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 def semantic_dedup_static(
@@ -518,7 +519,7 @@ def semantic_dedup_static(
             F.col("duplicate_of").isNull().alias("keep"),
             "duplicate_of",
         )
-        .orderBy("vec_id")
+        .transform(sort_result, "vec_id")
     )
 
 

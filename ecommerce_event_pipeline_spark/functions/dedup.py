@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
+
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact duplicate groups by md5(content). One shuffle on the hash."""
@@ -35,7 +37,7 @@ def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.min("doc_id").alias("canonical_doc_id"),
             F.count("*").alias("doc_count"),
         )
-        .orderBy("text_hash")
+        .transform(sort_result, "text_hash")
     )
 
 
@@ -312,7 +314,7 @@ def jaccard_prefix_pairs(
             "common",
             F.round(jaccard, 6).alias("jaccard"),
         )
-        .orderBy("doc_id_1", "doc_id_2")
+        .transform(sort_result, "doc_id_1", "doc_id_2")
     )
 
 
@@ -484,7 +486,7 @@ def minhash_near_dupes(
         joined.withColumn("jaccard", F.round(jaccard, 6))
         .where(F.col("jaccard") >= threshold)
         .select("doc_id_1", "doc_id_2", "jaccard")
-        .orderBy("doc_id_1", "doc_id_2")
+        .transform(sort_result, "doc_id_1", "doc_id_2")
     )
 
 
@@ -636,7 +638,7 @@ def simhash_dupes(
         pairs.withColumn("hamming", hamming)
         .where(F.col("hamming") <= max_hamming)
         .select("doc_id_1", "doc_id_2", "hamming")
-        .orderBy("doc_id_1", "doc_id_2")
+        .transform(sort_result, "doc_id_1", "doc_id_2")
     )
 
 
@@ -842,7 +844,7 @@ def cross_doc_span_stats(
                 6,
             ).alias("shared_fraction"),
         )
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )
 
 
@@ -865,5 +867,5 @@ def triangle_counts(pairs: DataFrame) -> DataFrame:
     return (
         member.groupBy("doc_id")
         .agg(F.count("*").alias("triangles"))
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
+
 
 def z_value(x: F.Column, y: F.Column, bits: int = 16) -> F.Column:
     """Morton/Z interleave of the low ``bits`` of two non-negative ints:
@@ -81,5 +83,5 @@ def zorder_box_stats(events: DataFrame, prefix_shift: int = 14) -> DataFrame:
             F.min("minute_of_day").alias("minute_lo"),
             F.max("minute_of_day").alias("minute_hi"),
         )
-        .orderBy("z_prefix")
+        .transform(sort_result, "z_prefix")
     )

@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
 from ..sources.readers import literal_frame
 
 
@@ -249,9 +250,7 @@ def blocked_cosine_pairs(
     out = _exact_pair_cosine(embeddings, cands, threshold).join(
         F.broadcast(blocks), "vec_id_1"
     )
-    return out.select(
-        "vec_id_1", "vec_id_2", block_col, "cosine_sim"
-    ).orderBy("vec_id_1", "vec_id_2")
+    return out.select("vec_id_1", "vec_id_2", block_col, "cosine_sim")
 
 
 def contrastive_shortlist(
@@ -336,7 +335,7 @@ def lsh_cosine_pairs(
     )
     return _exact_pair_cosine(embeddings, cands, threshold).select(
         "vec_id_1", "vec_id_2", "cosine_sim"
-    ).orderBy("vec_id_1", "vec_id_2")
+    ).transform(sort_result, "vec_id_1", "vec_id_2")
 
 
 def _nearest_udf(cents: np.ndarray):
@@ -693,7 +692,7 @@ def pq_encode_static(embeddings: DataFrame) -> DataFrame:
             F.transform(F.col("_codes"), lambda s: s["code"].cast("string")), ","
         ).alias("pq_codes"),
         F.round(recon_err, 6).alias("recon_err"),
-    ).orderBy("vec_id")
+    ).transform(sort_result, "vec_id")
 
 
 def pq_adc_topk(

@@ -27,6 +27,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
 from .hashing import md5_prefix_long
 
 
@@ -177,7 +178,7 @@ def heavy_hitters(tokens: DataFrame, k: int = 200) -> DataFrame:
                 "share_pct"
             ),
         )
-        .orderBy(F.desc("freq"), "token")
+        .transform(sort_result, F.desc("freq"), "token")
     )
 
 

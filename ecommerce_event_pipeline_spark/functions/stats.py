@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
+
 
 def grouped_exact_percentiles(
     df: DataFrame,
@@ -297,7 +299,7 @@ def value_percentiles(events: DataFrame) -> DataFrame:
     return (
         totals.join(pct.drop("_n"), "event_type", "left")
         .select("event_type", "event_count", "p50", "p90", "p99")
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -357,7 +359,7 @@ def user_purchase_trend(events: DataFrame, min_purchases: int = 3) -> DataFrame:
         "n_purchases",
         F.round(slope, 6).alias("slope_per_day"),
         (half_up_cents.cast("double") / F.lit(100.0)).alias("intercept"),
-    ).orderBy("user_id")
+    ).transform(sort_result, "user_id")
 
 
 def ewma_daily_counts(events: DataFrame, alpha: float = 0.2) -> DataFrame:
@@ -411,5 +413,5 @@ def ewma_daily_counts(events: DataFrame, alpha: float = 0.2) -> DataFrame:
             F.element_at("vals", d).cast("long").alias("event_count"),
             F.round(ewma, 4).alias("ewma"),
         )
-        .orderBy("event_type", "event_date")
+        .transform(sort_result, "event_type", "event_date")
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
 from ..sources.readers import literal_frame
 
 #: BPE-ish word/number/punctuation token pattern — same regex dialect subset
@@ -42,7 +43,7 @@ def doc_token_stats(docs: DataFrame) -> DataFrame:
         F.round(
             unique_tokens.cast("double") / token_count.cast("double"), 4
         ).alias("distinct_ratio"),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 def lang_source_stats(docs: DataFrame) -> DataFrame:
@@ -55,7 +56,7 @@ def lang_source_stats(docs: DataFrame) -> DataFrame:
             F.avg(F.col("n_chars").cast("double")).alias("avg_chars"),
             F.avg(F.size(_tokens()).cast("double")).alias("avg_tokens"),
         )
-        .orderBy("lang", "source")
+        .transform(sort_result, "lang", "source")
     )
 
 
@@ -66,7 +67,7 @@ def regex_token_count(docs: DataFrame, pattern: str = TOKEN_PATTERN) -> DataFram
         "doc_id",
         F.size(toks).alias("regex_token_count"),
         F.size(F.array_distinct(toks)).alias("regex_unique_tokens"),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 def quality_score(docs: DataFrame) -> DataFrame:
@@ -94,7 +95,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
         F.round((length_c + diversity_c + stop_c) / F.lit(3.0), 4).alias(
             "quality_score"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 def token_frequencies(docs: DataFrame, top_n: int = 100) -> DataFrame:
@@ -171,15 +172,11 @@ def language_id_ngram(docs: DataFrame, profiles: DataFrame | None = None) -> Dat
             for x in (F.lit(lang), F.lit(len(langs) - i))
         ]
     )
-    return (
-        scored.groupBy("doc_id", "lang")
-        .agg(
-            F.max_by(
-                "candidate_lang",
-                F.struct(F.col("overlap"), rank[F.col("candidate_lang")]),
-            ).alias("predicted_lang")
-        )
-        .orderBy("doc_id")
+    return scored.groupBy("doc_id", "lang").agg(
+        F.max_by(
+            "candidate_lang",
+            F.struct(F.col("overlap"), rank[F.col("candidate_lang")]),
+        ).alias("predicted_lang")
     )
 
 
@@ -208,7 +205,7 @@ def doc_fingerprint_portable(docs: DataFrame) -> DataFrame:
         "doc_id",
         _h(F.lower(F.col("text"))).alias("content_hash"),
         folded.alias("rolling_hash"),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 def bm25_search(
@@ -325,7 +322,7 @@ def lang_distinctive_terms(
     return (
         ranked.where(F.col("rk") <= top_k)
         .select("lang", "token", "a", F.round("z", 4).alias("z_score"))
-        .orderBy("lang", F.desc("z_score"), "token")
+        .transform(sort_result, "lang", F.desc("z_score"), "token")
     )
 
 
@@ -383,5 +380,5 @@ def doc_surprisal(docs: DataFrame, round_to: int = 4) -> DataFrame:
             "n_tokens",
             F.round(surprisal, round_to).alias("surprisal"),
         )
-        .orderBy("doc_id")
+        .transform(sort_result, "doc_id")
     )

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..operators.windows import sort_result
+
 
 def _median_agg():
     # built lazily: pandas_udf resolves its DDL return type against the
@@ -50,7 +52,7 @@ def value_median_by_type(events: DataFrame) -> DataFrame:
         _median_agg()(F.col("value")).alias("median_value")
     )
     counts = vals.groupBy("event_type").agg(F.count("*").alias("n_values"))
-    return medians.join(counts, "event_type").orderBy("event_type")
+    return medians.join(counts, "event_type").transform(sort_result, "event_type")
 
 
 #: Deterministic "model" weights for the batch-inference demo: a fixed
@@ -118,4 +120,4 @@ def embedding_inference(embeddings: DataFrame) -> DataFrame:
         # thresholded on the RAW score: rounding first could flip a
         # boundary case differently than the oracle
         (F.col("_raw") > 0.0).alias("positive"),
-    ).orderBy("vec_id")
+    )

@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .windows import sort_result
+
 
 def _cdist(event_type: str, col: str, approximate: bool = False) -> F.Column:
     """COUNT(DISTINCT CASE WHEN event_type = step THEN col END)."""
@@ -206,7 +208,7 @@ def pattern_frequency(sessions: DataFrame, min_count: int = 1) -> DataFrame:
         )
         .where(F.col("session_count") >= min_count)
     )
-    return out.orderBy(F.desc("session_count"), "event_sequence")
+    return out.transform(sort_result, F.desc("session_count"), "event_sequence")
 
 
 def user_lifetime_partials(events: DataFrame) -> DataFrame:
@@ -244,5 +246,5 @@ def user_lifetime_rollup(partials: DataFrame) -> DataFrame:
             F.min("first_ts").alias("first_seen"),
             F.max("last_ts").alias("last_seen"),
         )
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )

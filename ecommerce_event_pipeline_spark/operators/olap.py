@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .windows import sort_result
+
 
 def traffic_cube(events: DataFrame) -> DataFrame:
     """CUBE(event_date, event_type): counts + distinct users for every
@@ -24,7 +26,8 @@ def traffic_cube(events: DataFrame) -> DataFrame:
             F.count("*").alias("event_count"),
             F.count_distinct("user_id").alias("unique_users"),
         )
-        .orderBy(
+        .transform(
+            sort_result,
             F.col("event_date").asc_nulls_first(),
             F.col("event_type").asc_nulls_first(),
         )
@@ -45,7 +48,8 @@ def traffic_rollup(events: DataFrame) -> DataFrame:
             F.grouping_id().cast("long").alias("gid"),
             F.count("*").alias("event_count"),
         )
-        .orderBy(
+        .transform(
+            sort_result,
             "gid",
             F.col("event_date").asc_nulls_first(),
             F.col("event_type").asc_nulls_first(),
@@ -65,7 +69,7 @@ def type_hour_pivot(events: DataFrame, event_types: list[str]) -> DataFrame:
     # stable column order + bigint type for every pivoted column
     return out.select(
         "event_hour", *[F.col(t).cast("bigint").alias(t) for t in event_types]
-    ).orderBy("event_hour")
+    )
 
 
 def overall_stats(events: DataFrame) -> DataFrame:
@@ -105,7 +109,7 @@ def orders_projection(orders: DataFrame) -> DataFrame:
             F.month("o_orderdate").cast("int").alias("order_month"),
             F.col("o_orderpriority").alias("priority"),
         )
-        .orderBy("o_orderkey")
+        .transform(sort_result, "o_orderkey")
     )
 
 
@@ -132,7 +136,7 @@ def union_activity(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
             # dependent, the rounded sum is deterministic
             F.round(F.sum("amount"), 2).alias("total_amount"),
         )
-        .orderBy("kind")
+        .transform(sort_result, "kind")
     )
 
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .windows import sort_result
+
 
 def pricing_summary(lineitem: DataFrame, ship_cutoff: str = "1998-09-02") -> DataFrame:
     """TPC-H Q1-shaped pricing summary: 2-key groupBy, 8 aggregates.
@@ -40,7 +42,7 @@ def pricing_summary(lineitem: DataFrame, ship_cutoff: str = "1998-09-02") -> Dat
             F.avg("l_discount").alias("avg_disc"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
+        .transform(sort_result, "l_returnflag", "l_linestatus")
     )
 
 
@@ -122,7 +124,7 @@ def local_supplier_volume(
                 F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
             ).alias("revenue")
         )
-        .orderBy(F.desc("revenue"), "n_name")
+        .transform(sort_result, F.desc("revenue"), "n_name")
     )
 
 
@@ -149,7 +151,7 @@ def top_parts_by_revenue(lineitem: DataFrame, part: DataFrame, top_n: int = 20) 
         .select(
             "l_partkey", "p_name", "p_brand", "revenue", "units", "line_count"
         )
-        .orderBy(F.desc("revenue"), "l_partkey")
+        .transform(sort_result, F.desc("revenue"), "l_partkey")
     )
 
 
@@ -169,7 +171,7 @@ def market_segment_summary(customer: DataFrame, orders: DataFrame) -> DataFrame:
             F.round(F.avg("o_totalprice"), 2).alias("avg_order_value"),
             F.max("o_totalprice").alias("max_order_value"),
         )
-        .orderBy("c_mktsegment")
+        .transform(sort_result, "c_mktsegment")
     )
 
 
@@ -196,7 +198,7 @@ def order_priority_counts(
     return (
         has_line.groupBy("o_orderpriority")
         .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
+        .transform(sort_result, "o_orderpriority")
     )
 
 
@@ -215,7 +217,7 @@ def customer_nation_rollup(
             F.sum("c_acctbal").alias("total_acctbal"),
             F.avg("c_acctbal").alias("avg_acctbal"),
         )
-        .orderBy("r_name", "n_name")
+        .transform(sort_result, "r_name", "n_name")
     )
 
 
@@ -246,7 +248,7 @@ def cheapest_part_per_brand(part: DataFrame) -> DataFrame:
             F.min("p_partkey").alias("cheapest_partkey"),  # tie-break: lowest key
             F.min("price").alias("price"),
         )
-        .orderBy("brand")
+        .transform(sort_result, "brand")
     )
 
 
@@ -290,7 +292,7 @@ def volume_shipping(
             "supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("ship_year")
         )
         .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"))
-        .orderBy("supp_nation", "cust_nation", "ship_year")
+        .transform(sort_result, "supp_nation", "cust_nation", "ship_year")
     )
 
 
@@ -311,7 +313,7 @@ def promo_revenue_share(lineitem: DataFrame, part: DataFrame) -> DataFrame:
             "promo_share_pct",
             F.round(F.col("promo_revenue") * 100.0 / F.col("total_revenue"), 4),
         )
-        .orderBy("ship_year")
+        .transform(sort_result, "ship_year")
     )
 
 
@@ -342,7 +344,7 @@ def rich_idle_customers(
             F.count("*").alias("customer_count"),
             F.round(F.sum("c_acctbal"), 2).alias("total_balance"),
         )
-        .orderBy("c_mktsegment")
+        .transform(sort_result, "c_mktsegment")
     )
 
 
@@ -364,7 +366,7 @@ def shipping_lag_buckets(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
             F.count("*").alias("line_count"),
             F.sum("l_extendedprice").alias("total_price"),
         )
-        .orderBy("o_orderpriority", "ship_lag_bucket")
+        .transform(sort_result, "o_orderpriority", "ship_lag_bucket")
     )
 
 
@@ -407,7 +409,7 @@ def interval_activity_join(
             F.count("*").alias("prior_events"),
             F.round(F.sum("value"), 2).alias("prior_value"),
         )
-        .orderBy("anchor_id")
+        .transform(sort_result, "anchor_id")
     )
 
 
@@ -456,7 +458,7 @@ def cdc_merge(base: DataFrame, changes: DataFrame) -> DataFrame:
                 / 100.0
             ).alias("o_totalprice"),
         )
-        .orderBy("o_orderkey")
+        .transform(sort_result, "o_orderkey")
     )
 
 

@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .windows import sort_result
+
 
 def salted_sum_count(
     df: DataFrame,
@@ -56,7 +58,7 @@ def salted_sum_count(
             F.max("_max").alias("max_value"),
             (F.sum("_sum") / F.sum("_cnt")).alias("avg_value"),
         )
-        .orderBy(*group_cols)
+        .transform(sort_result, *group_cols)
     )
 
 

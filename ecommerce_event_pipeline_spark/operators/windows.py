@@ -67,7 +67,7 @@ def inferred_session_stats(
                 "duration_seconds"
             ),
         )
-        .orderBy(user_col, "session_seq")
+        .transform(sort_result, user_col, "session_seq")
     )
 
 
@@ -126,6 +126,23 @@ def pin_frame(df: DataFrame) -> DataFrame:
     persist-when-reused trade), so the branches scan its rows instead of
     each re-running the subtree that builds them."""
     return df.localCheckpoint()
+
+
+def sort_result(df: DataFrame, *cols) -> DataFrame:
+    """``df`` ordered by ``cols`` (``orderBy`` arguments), sorted in one
+    task: ``Exchange SinglePartition``, then a local sort.
+
+    ``orderBy`` plans ``Exchange rangepartitioning``, whose partitioner
+    first runs a sampling job over the sort's input to pick range
+    bounds, so the query's whole last stage runs twice: once for the
+    sample, once in the exchange's map stage. One partition needs no
+    bounds, and the last stage runs once.
+
+    Scale rule: use it only for a result the caller collects, whose rows
+    all reach the driver anyway. An output that is written keeps
+    ``orderBy`` (a parallel sort) or no sort; a top-k keeps
+    ``orderBy(...).limit(n)``, which plans ``TakeOrderedAndProject``."""
+    return df.repartition(1).sortWithinPartitions(*cols)
 
 
 #: Cap on the deterministic boundary sample (rows held in one array on

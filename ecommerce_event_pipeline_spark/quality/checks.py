@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
 from ..schemas import EVENT_TYPES, PLATFORM_DEVICE_RULES
 
 PASS_THRESHOLD = 99.0
@@ -185,7 +186,9 @@ def fixture_quality_trend(events: DataFrame, days: int = 7) -> DataFrame:
             )
         ).alias("r"),
     ).select("check_date", "r.check_name", "total_records", "r.failed_records")
-    return _with_rate_and_status(rows).orderBy("check_date", "check_name")
+    return _with_rate_and_status(rows).transform(
+        sort_result, "check_date", "check_name"
+    )
 
 
 class QualityValidator:

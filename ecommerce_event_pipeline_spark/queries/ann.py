@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..functions import curation, similarity
+from ..operators.windows import sort_result
 from ..sources.readers import read_table, spread_small_scan
 from ..registry_core import register
 
@@ -448,7 +449,9 @@ def embedding_inference_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     entire pass is oracle-checked end to end."""
     from ..functions import udx
 
-    return udx.embedding_inference(read_table(spark, sf_dir, "embeddings"))
+    return udx.embedding_inference(read_table(spark, sf_dir, "embeddings")).transform(
+        sort_result, "vec_id"
+    )
 
 
 _MATRYOSHKA_ORACLE = """
@@ -561,7 +564,7 @@ def matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("top1_in_trunc10"),
         )
-        .orderBy("query_id")
+        .transform(sort_result, "query_id")
     )
 
 
@@ -639,5 +642,5 @@ def embedding_health_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("percentile(nrm, 0.5D)").alias("p50_norm"),
             F.round(F.max("nrm"), 6).alias("max_norm"),
         )
-        .orderBy("label")
+        .transform(sort_result, "label")
     )

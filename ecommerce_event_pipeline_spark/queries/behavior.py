@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..sources.readers import literal_frame, read_events, read_table
-from ..operators.windows import pin_frame
+from ..operators.windows import pin_frame, sort_result
 from ..registry_core import register
 
 
@@ -119,7 +119,7 @@ def daily_volume_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
                 | (F.col("event_count") * 2 < F.col("_med").cast("long"))
             ).alias("is_anomaly"),
         )
-        .orderBy("event_type", "event_date")
+        .transform(sort_result, "event_type", "event_date")
     )
 
 
@@ -201,7 +201,7 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("retention_pct"),
         )
-        .orderBy("cohort_date", "day_offset")
+        .transform(sort_result, "cohort_date", "day_offset")
     )
 
 
@@ -273,7 +273,7 @@ def first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lag_minutes"),
             F.round("value", 2).alias("purchase_value"),
         )
-        .orderBy("user_id", "purchase_ts")
+        .transform(sort_result, "user_id", "purchase_ts")
     )
 
 
@@ -363,7 +363,7 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("lift"),
         )
-        .orderBy(F.desc("support"), "part_1", "part_2")
+        .transform(sort_result, F.desc("support"), "part_1", "part_2")
     )
 
 
@@ -459,7 +459,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("f_score").cast("string"),
             F.col("m_score").cast("string"),
         ).alias("rfm_segment"),
-    ).orderBy("user_id")
+    ).transform(sort_result, "user_id")
 
 
 _LINEAR_ATTR_ORACLE = """
@@ -573,7 +573,7 @@ def linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("p_id").alias("conversions"),
             F.sum("is_touch").alias("touches"),
         )
-        .orderBy("channel")
+        .transform(sort_result, "channel")
     )
 
 
@@ -624,7 +624,7 @@ def value_quartiles_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "min_value",
         "max_value",
-    ).orderBy("event_type", "quartile")
+    ).transform(sort_result, "event_type", "quartile")
 
 
 _ROLLING_ACTIVE_ORACLE = """
@@ -696,7 +696,7 @@ def rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             "wau",
             F.expr("dau * 1000000 div wau").alias("stickiness_ppm"),
         )
-        .orderBy("window_end")
+        .transform(sort_result, "window_end")
     )
 
 
@@ -938,7 +938,7 @@ def daily_topn_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("exited", F.lit(0)).alias("exited"),
             (F.lit(5) - F.coalesce("entered", F.lit(0))).alias("stayed"),
         )
-        .orderBy("day")
+        .transform(sort_result, "day")
     )
 
 
@@ -1178,7 +1178,7 @@ def item_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("_cos", 6).alias("cosine"),
             F.col("rk").cast("int").alias("rk"),
         )
-        .orderBy("part_id", "rk")
+        .transform(sort_result, "part_id", "rk")
     )
 
 
@@ -1253,7 +1253,7 @@ def peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "user_days_started"
             ),
         )
-        .orderBy("day")
+        .transform(sort_result, "day")
     )
 
 
@@ -1278,7 +1278,7 @@ def viewers_also_purchased(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     viewers = events.where(F.col("event_type") == "view").select("user_id")
     buyers = events.where(F.col("event_type") == "purchase").select("user_id")
-    return viewers.intersect(buyers).orderBy("user_id")
+    return viewers.intersect(buyers).transform(sort_result, "user_id")
 
 
 _SEQ_FUNNEL_ORACLE = """
@@ -1528,7 +1528,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cum_cents",
             F.expr("cum_cents div cohort_users").alias("ltv_cents_per_user"),
         )
-        .orderBy("cohort_week", "age_weeks")
+        .transform(sort_result, "cohort_week", "age_weeks")
     )
 
 
@@ -1871,7 +1871,7 @@ def budget_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("fill_ppm"),
         )
-        .orderBy("source")
+        .transform(sort_result, "source")
     )
 
 
@@ -2017,7 +2017,7 @@ def behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n_types") > 1, F.round(h / F.log(k_d), 6)
             ).alias("evenness"),
         )
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -2164,7 +2164,7 @@ def time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("p_id").alias("conversions"),
             F.sum("is_touch").cast("long").alias("touches"),
         )
-        .orderBy("channel")
+        .transform(sort_result, "channel")
     )
 
 
@@ -2421,7 +2421,7 @@ def position_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("p_id").alias("conversions"),
             F.sum("is_touch").cast("long").alias("touches"),
         )
-        .orderBy("channel")
+        .transform(sort_result, "channel")
     )
 
 

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..functions import dedup, text
+from ..operators.windows import sort_result
 from ..sources.readers import read_table
 from ..registry_core import register
 from ..shared_bases import (  # shared dedup bases (no registry import)
@@ -195,9 +196,9 @@ def dup_chain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT s AS doc_id,
                COUNT(DISTINCT n) AS reachable,
                CAST(MAX(d) AS BIGINT) AS max_depth
-        FROM reach GROUP BY s ORDER BY s
+        FROM reach GROUP BY s
         """
-    )
+    ).transform(sort_result, "doc_id")
 
 
 _LOG_ODDS_ORACLE = """
@@ -621,7 +622,7 @@ def near_dup_edit_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length("_t1").cast("long").alias("len_1"),
             F.length("_t2").cast("long").alias("len_2"),
         )
-        .orderBy("doc_id_1", "doc_id_2")
+        .transform(sort_result, "doc_id_1", "doc_id_2")
     )
 
 
@@ -762,7 +763,7 @@ def rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_words",
             F.col("rk").cast("int").alias("rk"),
         )
-        .orderBy("doc_id", "rk")
+        .transform(sort_result, "doc_id", "rk")
     )
 
 

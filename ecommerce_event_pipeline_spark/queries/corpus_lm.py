@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..functions import dedup
 from ..functions.text import TOKEN_PATTERN
+from ..operators.windows import sort_result
 from ..registry_core import register
 from ..shared_bases import _shingle_sets_shared
 from ..sources.readers import read_table
@@ -100,7 +101,7 @@ def containment_pairs(
             F.round(containment, 6).alias("containment"),
         )
         .where(F.col("containment") >= threshold)
-        .orderBy(F.desc("containment"), "doc_id_1", "doc_id_2")
+        .transform(sort_result, F.desc("containment"), "doc_id_1", "doc_id_2")
     )
 
 
@@ -234,7 +235,7 @@ def doc_bigram_surprisal(docs: DataFrame, round_to: int = 4) -> DataFrame:
         F.round(-F.col("_sl") / F.col("n_bigrams").cast("double"), round_to).alias(
             "bigram_surprisal"
         ),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 @register("doc_bigram_surprisal", _BIGRAM_ORACLE)
@@ -314,7 +315,7 @@ def lang_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("chars_per_token"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -552,7 +553,7 @@ def zipf_lang_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").alias("n_ranks"),
         F.round(slope, 4).alias("zipf_slope"),
         F.round(intercept, 4).alias("intercept"),
-    ).orderBy("lang")
+    ).transform(sort_result, "lang")
 
 
 # ---------------------------------------------------------------------------
@@ -655,7 +656,7 @@ def doc_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("shingle_count").cast("double"),
             6,
         ).alias("boilerplate_fraction"),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -870,7 +871,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .alias("is_correct"),
         )
-        .orderBy("lang", "predicted_lang")
+        .transform(sort_result, "lang", "predicted_lang")
     )
 
 
@@ -953,4 +954,4 @@ def doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(flesch >= 30.0, "standard")
         .otherwise("difficult")
         .alias("band"),
-    ).orderBy("doc_id")
+    ).transform(sort_result, "doc_id")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
 from ..registry_core import register
 from ..sources.readers import read_events
 
@@ -264,7 +265,7 @@ def ucb_arm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(mean, 6).alias("mean_reward"),
             F.round(mean + bonus, 6).alias("ucb_score"),
         )
-        .orderBy(F.desc("ucb_score"), "arm")
+        .transform(sort_result, F.desc("ucb_score"), "arm")
     )
 
 
@@ -344,7 +345,7 @@ def error_rate_pchart(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .alias("out_of_control"),
         )
-        .orderBy("event_date")
+        .transform(sort_result, "event_date")
     )
 
 
@@ -633,7 +634,7 @@ def score_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.round(o - p, 6) + F.lit(0.0)).alias("gap"),
             F.round(p * p - F.lit(2.0) * p * o + o, 6).alias("brier_h"),
         )
-        .orderBy("event_hour")
+        .transform(sort_result, "event_hour")
     )
 
 
@@ -785,7 +786,7 @@ def feature_information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             (F.col("h0") - F.col("cond")).alias("_raw"),
         )
-        .orderBy(F.desc("_raw"), "feature")
+        .transform(sort_result, F.desc("_raw"), "feature")
         .drop("_raw")
     )
 
@@ -856,5 +857,5 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(neg, 6).alias("loo_rate_negative"),
             F.round(neg - pos, 6).alias("loo_leakage_gap"),
         )
-        .orderBy("product_k")
+        .transform(sort_result, "product_k")
     )

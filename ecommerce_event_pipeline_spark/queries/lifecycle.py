@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
 from ..registry_core import register
 from ..sources.readers import literal_frame, read_events, read_table
 
@@ -170,7 +171,7 @@ def kaplan_meier(durations: DataFrame, interval_days: int = 30) -> DataFrame:
             F.element_at("cs", i).alias("censored"),
             F.round(survival, 6).alias("survival"),
         )
-        .orderBy("segment", "period")
+        .transform(sort_result, "segment", "period")
     )
 
 
@@ -409,7 +410,7 @@ def pagerank_fixed_point(
                 "pagerank"
             ),
         )
-        .orderBy(F.desc("pagerank_fp"), "product_id")
+        .transform(sort_result, F.desc("pagerank_fp"), "product_id")
     )
 
 
@@ -557,7 +558,7 @@ def hits_fixed_point(
                 "authority"
             ),
         )
-        .orderBy(F.desc("authority_fp"), F.desc("hub_fp"), "product_id")
+        .transform(sort_result, F.desc("authority_fp"), F.desc("hub_fp"), "product_id")
     )
 
 
@@ -755,7 +756,7 @@ def transition_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("r").alias("out_transitions"),
         F.col("v").alias("stationary_ppb"),
         F.round(F.col("v").cast("double") / _STAT_SCALE, 6).alias("stationary"),
-    ).orderBy("event_type")
+    ).transform(sort_result, "event_type")
 
 
 # ---------------------------------------------------------------------------

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
 from ..registry_core import register
 
 _MEDIA_N = 500  # same synthetic catalog size as multimodal_features
@@ -130,5 +131,5 @@ def media_phash_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(0)
             .alias("planted"),
         )
-        .orderBy("media_id_1", "media_id_2")
+        .transform(sort_result, "media_id_1", "media_id_2")
     )

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..sources.readers import literal_frame, read_events, read_table
-from ..operators.windows import pin_frame
+from ..operators.windows import pin_frame, sort_result
 from ..registry_core import register
 
 
@@ -60,7 +60,7 @@ def lineitem_stats_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.stddev_pop("l_extendedprice"), 2).alias("price_stddev"),
             F.round(F.var_pop("l_quantity"), 4).alias("qty_var"),
         )
-        .orderBy("l_returnflag")
+        .transform(sort_result, "l_returnflag")
     )
 
 
@@ -314,7 +314,7 @@ def benford_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " div exp_ppm"
             ).alias("chi_ppm"),
         )
-        .orderBy("digit")
+        .transform(sort_result, "digit")
     )
 
 
@@ -421,7 +421,7 @@ def abc_inventory_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_cents",
             "max_cents",
         )
-        .orderBy("abc_class")
+        .transform(sort_result, "abc_class")
     )
 
 
@@ -637,7 +637,7 @@ def weekday_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " * 1000000 >= CAST(150000 AS DECIMAL(38,0)) * wd_med_x2"
             ).alias("is_anomaly"),
         )
-        .orderBy("day")
+        .transform(sort_result, "day")
     )
 
 
@@ -738,7 +738,7 @@ def mad_outlier_days(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " >= 44478 * CAST(mad_x4 AS DECIMAL(38,0))"
             ).alias("is_outlier"),
         )
-        .orderBy("day")
+        .transform(sort_result, "day")
     )
 
 
@@ -822,7 +822,7 @@ def supplier_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_delay_days",
             "max_delay_days",
         )
-        .orderBy(F.desc("late_ppm"), "s_suppkey")
+        .transform(sort_result, F.desc("late_ppm"), "s_suppkey")
     )
 
 
@@ -934,9 +934,8 @@ def latest_order_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
           LIMIT 1
         ) o
         WHERE c.c_custkey <= 200
-        ORDER BY c.c_custkey
         """
-    )
+    ).transform(sort_result, "c_custkey")
 
 
 _GROUPING_SETS_ORACLE = """
@@ -973,9 +972,8 @@ def grouping_sets_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
                COUNT(DISTINCT user_id) AS users
         FROM _gs_events
         GROUP BY GROUPING SETS ((event_date), (event_type), ())
-        ORDER BY gid, event_date, event_type
         """
-    )
+    ).transform(sort_result, "gid", "event_date", "event_type")
 
 
 _NATION_SHARE_ORACLE = """
@@ -1045,7 +1043,7 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             " div sum(CAST(cents AS DECIMAL(38,0)))"
             " OVER (PARTITION BY region) AS BIGINT)"
         ).alias("share_ppm"),
-    ).orderBy("region", F.desc("share_ppm"), "nation")
+    ).transform(sort_result, "region", F.desc("share_ppm"), "nation")
 
 
 _RANGE_FRAME_ORACLE = """
@@ -1100,7 +1098,7 @@ def trailing_hour_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         F.sum("_c").over(w).alias("trailing_1h_cents"),
         F.count("*").over(w).alias("trailing_1h_events"),
-    ).orderBy("user_id", "event_id")
+    ).transform(sort_result, "user_id", "event_id")
 
 
 _ORDERS_PROFILE_ORACLE = """
@@ -1321,4 +1319,4 @@ def price_quantity_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.nullif(F.col("var_y_num"), F.lit(0.0))
             )
         ).alias("r2"),
-    ).orderBy("p_brand")
+    ).transform(sort_result, "p_brand")

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
 from ..registry_core import register
 from ..sources.readers import read_events
 
@@ -161,4 +162,4 @@ def dp_noisy_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "released_count"
         ),
         F.round(F.abs("noise"), 4).alias("abs_err"),
-    ).orderBy("event_date")
+    ).transform(sort_result, "event_date")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..functions import curation, similarity
+from ..operators.windows import sort_result
 from ..sources.readers import read_events, read_table
 from ..registry_core import register
 from ..shared_bases import (  # shared dedup bases (no registry import)
@@ -131,7 +132,7 @@ def stratified_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.withColumn("_rk", rk)
         .where(F.col("_rk") <= 10)
         .select("doc_id", "lang")
-        .orderBy("lang", "doc_id")
+        .transform(sort_result, "lang", "doc_id")
     )
 
 
@@ -217,7 +218,7 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dup_pairs",
             (F.col("split_a") != F.col("split_b")).alias("is_leakage"),
         )
-        .orderBy("split_a", "split_b")
+        .transform(sort_result, "split_a", "split_b")
     )
 
 
@@ -346,7 +347,7 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c").alias("cosine_sim"),
         "role",
         F.col("rk").cast("int").alias("rk"),
-    ).orderBy("anchor_id", F.desc("role"), "rk")
+    ).transform(sort_result, "anchor_id", F.desc("role"), "rk")
 
 
 _TEMPERATURE_MIX_ORACLE = """
@@ -411,7 +412,7 @@ def temperature_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(w, 6).alias("weight"),
             F.round(w / prop, 4).alias("boost"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -563,7 +564,7 @@ def neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("alloc_n"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 

@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.windows import sort_result
 from ..sources.readers import read_events
 from ..registry_core import register
 
@@ -169,7 +171,7 @@ def hll_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         exact.join(est, "event_date")
         .select("event_date", "exact_users", "v_zero", "sum_scaled")
-        .orderBy("event_date")
+        .transform(sort_result, "event_date")
     )
 
 
@@ -246,7 +248,7 @@ def hll_weekly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         exact.join(est, "week_start")
         .select("week_start", "exact_users", "v_zero", "sum_scaled")
-        .orderBy("week_start")
+        .transform(sort_result, "week_start")
     )
 
 
@@ -379,7 +381,7 @@ def histogram_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "exact_p95_cents",
             "exact_p99_cents",
         )
-        .orderBy("week_start")
+        .transform(sort_result, "week_start")
     )
 
 
@@ -684,7 +686,7 @@ def kmv_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("err_ppm"),
         )
-        .orderBy("event_date")
+        .transform(sort_result, "event_date")
     )
 
 
@@ -1067,5 +1069,5 @@ def ddsketch_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "exact_p90_cents",
             "exact_p99_cents",
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..operators import marts, relational
+from ..operators.windows import sort_result
 from ..sources.readers import read_events, read_table
 from ..registry_core import register
 
@@ -349,7 +350,7 @@ def daily_reconciliation_full_outer(spark: SparkSession, sf_dir: str) -> DataFra
                 "in_both"
             ),
         )
-        .orderBy("day")
+        .transform(sort_result, "day")
     )
 
 
@@ -414,7 +415,7 @@ def bloom_pruned_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue"),
             F.count("*").alias("line_count"),
         )
-        .orderBy("p_partkey")
+        .transform(sort_result, "p_partkey")
     )
 
 
@@ -460,7 +461,7 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("_v"), 2).alias("v_sum"),
             F.max("_id").alias("id_max"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -512,9 +513,8 @@ def sql_udf_funnel_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM ev_sqludf
           GROUP BY event_date
         )
-        ORDER BY event_date
         """
-    )
+    ).transform(sort_result, "event_date")
 
 
 _TRY_ARITH_ORACLE = """
@@ -559,7 +559,7 @@ def try_arithmetic_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "div_by_zero_rows"
             ),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -597,7 +597,7 @@ def join_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_keys"),
             F.sum("cnt").alias("rows_covered"),
         )
-        .orderBy("log2_bucket")
+        .transform(sort_result, "log2_bucket")
     )
 
 
@@ -662,7 +662,7 @@ def skew_salted_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("event_count"),
             (F.sum("cents") / F.lit(100.0)).alias("total_value"),
         )
-        .orderBy("n_name")
+        .transform(sort_result, "n_name")
     )
 
 
@@ -733,7 +733,7 @@ def scd2_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("o_custkey").alias("min_custkey"),
             F.max("o_custkey").alias("max_custkey"),
         )
-        .orderBy("value_band")
+        .transform(sort_result, "value_band")
     )
 
 
@@ -890,7 +890,7 @@ def duplicate_payment_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cents_2",
             (F.col("_sec2") - F.col("_sec1")).alias("gap_seconds"),
         )
-        .orderBy("user_id", "event_id_1", "event_id_2")
+        .transform(sort_result, "user_id", "event_id_1", "event_id_2")
     )
 
 
@@ -1027,4 +1027,4 @@ def monthly_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sqrt(F.col("laspeyres") * F.col("paasche")), 6).alias(
             "fisher"
         ),
-    ).orderBy("month")
+    ).transform(sort_result, "month")

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from .operators import marts, relational
 from .functions import curation, dedup, similarity, text
+from .operators.windows import sort_result
 from .sources.readers import memo, read_events, read_table, shared_base
 
 # The registry machinery lives in registry_core so the queries/
@@ -97,7 +98,7 @@ def funnel_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         steps=("view", "click", "purchase"),
         group_cols=("event_date",),
         step_names=("step1_viewers", "step2_clickers", "step3_purchasers"),
-    ).orderBy("event_date")
+    ).transform(sort_result, "event_date")
 
 
 _HOURLY_ORACLE = """
@@ -118,7 +119,7 @@ def hourly_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events(spark, sf_dir)
     return marts.hourly_traffic(
         events, group_cols=("event_date", "event_hour"), session_col=None
-    ).orderBy("event_date", "event_hour")
+    ).transform(sort_result, "event_date", "event_hour")
 
 
 _USER_DAILY_ORACLE = """
@@ -150,7 +151,7 @@ def user_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         amount_type="purchase",
         amount_col="value",
         session_col=None,
-    ).orderBy("user_id", "event_date")
+    ).transform(sort_result, "user_id", "event_date")
 
 
 _SESSION_PATTERNS_ORACLE = """
@@ -248,7 +249,7 @@ def props_key_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("k").alias("min_k"),
             F.max("k").alias("max_k"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -633,7 +634,7 @@ def embedding_near_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
     but non-empty at every SF."""
     return similarity.blocked_cosine_pairs(
         read_table(spark, sf_dir, "embeddings"), block_col="label", threshold=0.35
-    )
+    ).transform(sort_result, "vec_id_1", "vec_id_2")
 
 
 def _lsh_sigs_cte(dim: int, bits: int, tables: int) -> str:
@@ -809,7 +810,7 @@ def top_spenders_per_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return windows.top_k_per_group(
         daily, ["event_date"], "daily_spend", 3, tiebreak_col="user_id"
-    ).orderBy("event_date", "rank_in_group")
+    ).transform(sort_result, "event_date", "rank_in_group")
 
 
 # ---------------------------------------------------------------------------
@@ -856,7 +857,7 @@ def type_hour_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return olap.type_hour_pivot(
         read_events(spark, sf_dir), list(FIXTURE_EVENT_TYPES)
-    )
+    ).transform(sort_result, "event_hour")
 
 
 _OVERALL_ORACLE = """
@@ -976,7 +977,9 @@ ORDER BY doc_id
 @register("doc_quality_score", _QUALITY_SCORE_ORACLE)
 def doc_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality scoring (length / diversity / stopword density)."""
-    return text.quality_score(read_table(spark, sf_dir, "documents"))
+    return text.quality_score(read_table(spark, sf_dir, "documents")).transform(
+        sort_result, "doc_id"
+    )
 
 
 _TOKEN_FREQ_ORACLE = """
@@ -1039,8 +1042,8 @@ ORDER BY doc_id_1, doc_id_2
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard over the df≤50 shingle universe (stop-shingle
     cap bounds every join bucket; never all-pairs)."""
-    return _ngram_pairs_shared(spark, sf_dir).orderBy(
-        "doc_id_1", "doc_id_2"
+    return _ngram_pairs_shared(spark, sf_dir).transform(
+        sort_result, "doc_id_1", "doc_id_2"
     )
 
 
@@ -1208,7 +1211,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash per document as two 32-bit halves — md5-derived
     token bits (engine-portable), so the fingerprints themselves are
     oracle-checked bit-for-bit."""
-    return _simhash_shared(spark, sf_dir).orderBy("doc_id")
+    return _simhash_shared(spark, sf_dir).transform(sort_result, "doc_id")
 
 
 @register("simhash_near_dupes", _SIMHASH_PAIRS_ORACLE)
@@ -1327,7 +1330,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return text.language_id_ngram(
         spread_small_scan(read_table(spark, sf_dir, "documents"))
-    )
+    ).transform(sort_result, "doc_id")
 
 
 def _ann_topk_oracle(dim: int = 64, bits: int = 4, tables: int = 16) -> str:
@@ -1437,7 +1440,7 @@ def json_order_items(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("item_count"),
             F.count_distinct("l_orderkey").alias("order_count"),
         )
-        .orderBy("product_id")
+        .transform(sort_result, "product_id")
     )
 
 
@@ -1752,7 +1755,7 @@ def order_amount_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("failure_rate"),
         )
-        .orderBy("platform")
+        .transform(sort_result, "platform")
     )
 
 
@@ -1812,7 +1815,7 @@ def platform_device_rule_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                 2,
             ).alias("failure_rate"),
         )
-        .orderBy("platform")
+        .transform(sort_result, "platform")
     )
 
 
@@ -1972,7 +1975,7 @@ def funnel_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(violating) * 100.0 / F.count("*").cast("double"), 2
             ).alias("violation_rate"),
         )
-        .orderBy("event_date")
+        .transform(sort_result, "event_date")
     )
 
 
@@ -2102,7 +2105,7 @@ def approx_distinct_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 <= F.col("exact_users").cast("double") * 0.04
             ).alias("approx_within_2rsd"),
         )
-        .orderBy("event_date")
+        .transform(sort_result, "event_date")
     )
 
 
@@ -2132,7 +2135,7 @@ def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .select("c_custkey", "c_name", "c_mktsegment", "c_acctbal")
-        .orderBy("c_custkey")
+        .transform(sort_result, "c_custkey")
     )
 
 
@@ -2157,7 +2160,7 @@ def viewers_never_purchased(spark: SparkSession, sf_dir: str) -> DataFrame:
     buyers = events.where(F.col("event_type") == "purchase").select("user_id")
     # subtract == EXCEPT DISTINCT (exceptAll would only cancel one view row
     # per buyer row — bag semantics, the wrong operator here)
-    return viewers.subtract(buyers).orderBy("user_id")
+    return viewers.subtract(buyers).transform(sort_result, "user_id")
 
 
 _PCT_ORACLE = """
@@ -2216,7 +2219,7 @@ def scalar_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderdate", F.lit("1995-01-01").cast("timestamp")
         ).cast("bigint").alias("days_since_epoch"),
         F.round(F.col("o_totalprice") / 1000.0, 1).alias("price_k"),
-    ).orderBy("o_orderkey")
+    ).transform(sort_result, "o_orderkey")
 
 
 _TREND_ORACLE = """
@@ -2367,8 +2370,8 @@ def daily_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     reporting layer's implementation with the fixture amount column."""
     from .reports import daily_kpis as kpis_impl
 
-    return kpis_impl(read_events(spark, sf_dir), amount_col="value").orderBy(
-        "event_date"
+    return kpis_impl(read_events(spark, sf_dir), amount_col="value").transform(
+        sort_result, "event_date"
     )
 
 
@@ -2393,7 +2396,11 @@ def repeat_buyers_two_days(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("event_type") == "purchase") & (F.col("event_date") == F.lit(day))
         ).select("user_id")
 
-    return buyers("2024-01-01").intersect(buyers("2024-01-02")).orderBy("user_id")
+    return (
+        buyers("2024-01-01")
+        .intersect(buyers("2024-01-02"))
+        .transform(sort_result, "user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2681,7 +2688,7 @@ def dedup_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("docs_dropped"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -2830,7 +2837,7 @@ def curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(half_up).cast("double") / F.lit(10000.0),
         )
         .drop("_qsum")
-        .orderBy("lang", "source")
+        .transform(sort_result, "lang", "source")
     )
 
 
@@ -2890,7 +2897,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("tfidf", 6).alias("tfidf"),
             "term_rank",
         )
-        .orderBy("doc_id", "term_rank")
+        .transform(sort_result, "doc_id", "term_rank")
     )
 
 
@@ -2926,7 +2933,7 @@ def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("next_type").alias("to_type"),
         )
         .agg(F.count("*").alias("transition_count"))
-        .orderBy("from_type", "to_type")
+        .transform(sort_result, "from_type", "to_type")
     )
 
 
@@ -2974,7 +2981,7 @@ def customer_balance_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum(F.round(F.col("c_acctbal") * 100).cast("long")) / F.lit(100.0))
             .alias("total_bal"),
         )
-        .orderBy("decile")
+        .transform(sort_result, "decile")
     )
 
 
@@ -3005,7 +3012,7 @@ def type_hour_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         wide.selectExpr("event_hour", stack_expr)
         .where(F.col("event_count") > 0)
-        .orderBy("event_hour", "event_type")
+        .transform(sort_result, "event_hour", "event_type")
     )
 
 
@@ -3037,7 +3044,7 @@ def sampled_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(sampled) * 100.0 / F.count("*").cast("double"), 2
             ).alias("sample_pct"),
         )
-        .orderBy("lang")
+        .transform(sort_result, "lang")
     )
 
 
@@ -3087,7 +3094,7 @@ def funnel_completion_time(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.avg(secs.cast("double")).alias("avg_seconds"),
             F.max(secs).cast("bigint").alias("max_seconds"),
         )
-        .orderBy("event_date")
+        .transform(sort_result, "event_date")
     )
 
 
@@ -3135,7 +3142,7 @@ def value_outliers_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("value").alias("outlier_floor"),
             F.max("value").alias("outlier_max"),
         )
-        .orderBy("event_type")
+        .transform(sort_result, "event_type")
     )
 
 
@@ -3202,7 +3209,9 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     floats bit-for-bit."""
     from .functions.multimodal import extract_features, synthetic_media
 
-    return extract_features(synthetic_media(spark, _MEDIA_N)).orderBy("media_id")
+    return extract_features(synthetic_media(spark, _MEDIA_N)).transform(
+        sort_result, "media_id"
+    )
 
 
 _MULTIMODAL_FRAMES_ORACLE = f"""
@@ -3231,8 +3240,8 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-frame byte addressing."""
     from .functions.multimodal import sample_frames, synthetic_media
 
-    return sample_frames(synthetic_media(spark, _MEDIA_N), every_ms=250).orderBy(
-        "media_id", "frame_index"
+    return sample_frames(synthetic_media(spark, _MEDIA_N), every_ms=250).transform(
+        sort_result, "media_id", "frame_index"
     )
 
 
@@ -3281,7 +3290,7 @@ def session_platform_flips_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("order_id").cast("long").alias("event_id"),
         "platform",
     )
-    return platform_flip_sessions(purchases).orderBy("session")
+    return platform_flip_sessions(purchases).transform(sort_result, "session")
 
 
 _STREAM_ATTRIBUTION_ORACLE = """
@@ -3578,7 +3587,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "resized_csv"
         ),
         "resized_sum",
-    ).orderBy("media_id")
+    ).transform(sort_result, "media_id")
 
 
 _QUANTIZE_ORACLE = """
@@ -3627,7 +3636,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_codes_csv"
         ),
         "q_sum",
-    ).orderBy("vec_id")
+    ).transform(sort_result, "vec_id")
 
 
 _DOC_REPETITION_ORACLE = """

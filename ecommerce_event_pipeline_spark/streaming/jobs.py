@@ -25,6 +25,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.windows import sort_result
+
 
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``readStream`` over the fixture events parquet.
@@ -93,12 +95,19 @@ def _bounded_state_partitions(spark: SparkSession, cap: int = 8):
         spark.conf.set(key, old)
 
 
-def _run_to_memory(agg: DataFrame, mode: str = "complete") -> str:
+def _run_to_memory(agg: DataFrame, mode: str = "complete") -> DataFrame:
     """Drive a streaming aggregate to completion against a memory sink
     (state partitions bounded — see ``_bounded_state_partitions``);
-    returns the sink table name."""
+    returns the sink's rows as a ``literal_frame``.
+
+    The sink's rows already sit on the driver, so copying them out costs
+    no job, and the sink's table is dropped: a kept ``stream_<id>`` view
+    would hold every run's rows in the session catalog."""
+    from ..sources.readers import literal_frame
+
+    spark = agg.sparkSession
     name = f"stream_{uuid.uuid4().hex[:12]}"
-    with _bounded_state_partitions(agg.sparkSession):
+    with _bounded_state_partitions(spark):
         q = (
             agg.writeStream.outputMode(mode)
             .format("memory")
@@ -109,7 +118,11 @@ def _run_to_memory(agg: DataFrame, mode: str = "complete") -> str:
             q.processAllAvailable()
         finally:
             q.stop()  # a sink failure must not leak a running query
-    return name
+    try:
+        sink = spark.table(name)
+        return literal_frame(spark, sink.collect(), sink.schema)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def run_streaming_hourly_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -130,8 +143,7 @@ def run_streaming_hourly_traffic(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    table = _run_to_memory(agg, "complete")
-    return spark.table(table).orderBy("window_start")
+    return _run_to_memory(agg, "complete").transform(sort_result, "window_start")
 
 
 def run_streaming_session_windows(
@@ -159,8 +171,9 @@ def run_streaming_session_windows(
             "purchase_value",
         )
     )
-    table = _run_to_memory(agg, "complete")
-    return spark.table(table).orderBy("user_id", "session_start")
+    return _run_to_memory(agg, "complete").transform(
+        sort_result, "user_id", "session_start"
+    )
 
 
 def run_streaming_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,18 +209,17 @@ def run_streaming_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    table = _run_to_memory(updated, "update")
     # update mode emits one row per (user, batch); events_seen is strictly
     # increasing per user, so the final state row is the max_by — a plain
     # hash aggregate, no window pass over the sink needed
     return (
-        spark.table(table)
+        _run_to_memory(updated, "update")
         .groupBy("user_id")
         .agg(
             F.max("events_seen").alias("events_seen"),
             F.max_by("total_value", "events_seen").alias("total_value"),
         )
-        .orderBy("user_id")
+        .transform(sort_result, "user_id")
     )
 
 
@@ -229,12 +241,11 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = events.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    table = _run_to_memory(deduped, "append")
     return (
-        spark.table(table)
+        _run_to_memory(deduped, "append")
         .groupBy(F.to_date("ts").alias("event_date"))
         .agg(F.count("*").alias("deduped_events"))
-        .orderBy("event_date")
+        .transform(sort_result, "event_date")
     )
 
 
@@ -263,8 +274,7 @@ def run_streaming_enriched_traffic(spark: SparkSession, sf_dir: str) -> DataFram
             F.round(F.sum("value"), 2).alias("total_value"),
         )
     )
-    table = _run_to_memory(agg, "complete")
-    return spark.table(table).orderBy("nation")
+    return _run_to_memory(agg, "complete").transform(sort_result, "nation")
 
 
 def run_streaming_attribution_join(
@@ -320,8 +330,9 @@ def run_streaming_attribution_join(
         .cast("long")
         .alias("lag_minutes"),
     )
-    table = _run_to_memory(joined, "append")
-    return spark.table(table).orderBy("user_id", "view_ts", "purchase_ts")
+    return _run_to_memory(joined, "append").transform(
+        sort_result, "user_id", "view_ts", "purchase_ts"
+    )
 
 
 def split_gap_sessions(
@@ -435,8 +446,9 @@ def run_streaming_session_expiry(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    table = _run_to_memory(sessions, "append")
-    return spark.table(table).orderBy("user_id", "session_start")
+    return _run_to_memory(sessions, "append").transform(
+        sort_result, "user_id", "session_start"
+    )
 
 
 def run_streaming_sliding_traffic(
@@ -465,8 +477,7 @@ def run_streaming_sliding_traffic(
             "event_count",
         )
     )
-    table = _run_to_memory(agg, "complete")
-    return spark.table(table).orderBy("window_start")
+    return _run_to_memory(agg, "complete").transform(sort_result, "window_start")
 
 
 def run_streaming_histogram_quantiles(
@@ -496,8 +507,7 @@ def run_streaming_histogram_quantiles(
         )
         .agg(F.count("*").alias("cnt"))
     )
-    table = _run_to_memory(agg, "complete")
-    regs = spark.table(table).select(
+    regs = _run_to_memory(agg, "complete").select(
         F.col("w.start").cast("date").alias("day"), "bin", "cnt"
     )
     wcum = (
@@ -524,5 +534,5 @@ def run_streaming_histogram_quantiles(
     return (
         cum.groupBy("day")
         .agg(F.max("total").alias("n_events"), _est(50), _est(95), _est(99))
-        .orderBy("day")
+        .transform(sort_result, "day")
     )

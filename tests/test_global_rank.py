@@ -1,4 +1,5 @@
-"""Distributed exact global ranking (operators/windows.py).
+"""Distributed exact global ranking and the one-task result sort
+(operators/windows.py).
 
 ``global_row_number`` / ``global_ntile`` must be BIT-IDENTICAL to the SQL
 window functions over a total order — they exist purely to replace the
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 from ecommerce_event_pipeline_spark.operators.windows import (
     global_ntile,
     global_row_number,
+    sort_result,
 )
 
 
@@ -24,6 +26,31 @@ def _frame(spark, n: int):
     return spark.range(n).select(
         (F.col("id") * 7919 % 1000).alias("k"), F.col("id").alias("uid")
     )
+
+
+def test_sort_result_matches_order_by_without_a_range_exchange(spark):
+    # seven input splits, nullable keys in both directions, ties between
+    # them broken by the unique uid
+    df = (
+        _frame(spark, 500)
+        .select(
+            F.when(F.col("k") % 11 == 0, None).otherwise(F.col("k") % 13).alias("a"),
+            F.when(F.col("uid") % 7 == 0, None)
+            .otherwise((F.col("k") % 5).cast("double"))
+            .alias("b"),
+            "uid",
+        )
+        .repartition(7)
+    )
+    for keys in (
+        ("a", F.desc("b"), "uid"),
+        (F.asc_nulls_last("a"), F.desc_nulls_first("b"), F.desc("uid")),
+    ):
+        got = sort_result(df, *keys)
+        assert got.collect() == df.orderBy(*keys).collect()
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "rangepartitioning" not in plan, plan
+        assert "SinglePartition" in plan, plan
 
 
 def test_global_row_number_matches_window(spark):

@@ -36,6 +36,17 @@ def plan_of(name: str, spark) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+#: execute jobs of ``jaccard_prefix_pairs``' collect at sf0.001 in the
+#: plan-fingerprint record while its final sort was an ``orderBy``: the
+#: range exchange's sampling job ran the candidate-and-verify stage twice
+ORDER_BY_JACCARD_PREFIX_JOBS = 8
+
+
+def test_jaccard_prefix_pairs_sorts_without_a_sampling_job(spark, count_jobs):
+    df = registry.queries()["jaccard_prefix_pairs"](spark, SF_DIR)
+    assert count_jobs(df.collect) <= ORDER_BY_JACCARD_PREFIX_JOBS - 1
+
+
 def test_filter_pushdown_reaches_parquet_scan(spark):
     plan = plan_of("orders_projection", spark)
     assert "PushedFilters" in plan
@@ -146,8 +157,8 @@ def test_pair_queries_evaluate_the_shingle_transform_once(spark, monkeypatch):
 
 def test_doc_chunks_is_shuffle_free(spark):
     # chunking is a pure 1→N projection: the only allowed exchange is the
-    # final presentation orderBy's range partitioning — no hash shuffle,
-    # no aggregation pass anywhere
+    # final presentation sort's single partition — no hash shuffle, no
+    # aggregation pass anywhere
     plan = plan_of("doc_chunks", spark)
     assert "hashpartitioning" not in plan, plan[:2000]
     assert "HashAggregate" not in plan
@@ -269,11 +280,12 @@ def test_span_stats_explodes_the_corpus_once(spark):
 def fingerprints(spark):
     """The recorded fingerprints, and the measured ones with each query's
     unpartitioned window lines. A query above its recorded job ceiling
-    is run again, up to six runs, before it counts as drifted."""
+    is run again, up to ``plan_fingerprints.TRIES`` runs (as many as the
+    record's ceiling is the most of), before it counts as drifted."""
     with open(plan_fingerprints.RECORD) as f:
         recorded = json.load(f)
     ceilings = {name: r["exec_jobs"] for name, r in recorded.items()}
-    return recorded, *plan_fingerprints.fingerprint(spark, ceilings, tries=6)
+    return recorded, *plan_fingerprints.fingerprint(spark, ceilings)
 
 
 def test_plan_fingerprints_match_the_record(fingerprints):

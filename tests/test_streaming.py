@@ -24,6 +24,17 @@ def test_streaming_hourly_equals_batch(spark):
     assert s == b
 
 
+def test_streaming_queries_leave_no_sink_table(spark):
+    # the registry path: each run drains a memory sink named stream_<id>
+    from ecommerce_event_pipeline_spark import registry
+
+    query = registry.queries()["streaming_hourly_traffic"]
+    for _ in range(2):
+        assert query(spark, SF_DIR).count() > 0
+    left = [t.name for t in spark.catalog.listTables() if t.name.startswith("stream_")]
+    assert left == []
+
+
 def test_streaming_session_windows_match_batch_sessionization(spark):
     stream = jobs.run_streaming_session_windows(spark, SF_DIR, gap="30 minutes")
     batch = windows.inferred_session_stats(

@@ -15,7 +15,8 @@ cleared, the shared bases warmed by ``bench.warm_up``. Per query:
   fixed-point and refit collects), read from Spark's SQL status store;
 - ``build_jobs``: the jobs the query call fired;
 - ``exec_jobs``: the most jobs its ``collect()`` fired in ``TRIES`` runs,
-  a ceiling.
+  a ceiling. ``tests/test_plans.py`` takes up to ``TRIES`` runs too, so a
+  rewrite records the most of as many runs as the check may need.
 
 The chosen plan is an adaptive plan's initial plan. Its final plan is
 re-planned as stage statistics arrive, and which stage finishes first is
@@ -39,15 +40,23 @@ sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.001"
 RECORD = os.path.join(REPO, "tests", "plan_fingerprints.json")
-#: runs per query whose most jobs are recorded (module docstring)
-TRIES = 3
+#: runs per query: the record keeps the most jobs of this many, and the
+#: check re-runs a query above its ceiling up to this many times
+TRIES = 6
+#: driver heap of the sweep's own session (``SPARK_DRIVER_MEMORY`` wins):
+#: sf0.001 needs little, and ``get_spark``'s 48g default let one sweep
+#: grow to about 10 GB resident
+DRIVER_MEMORY = "4g"
 
 # Plan features worth pinning per query. Shuffle count and join strategy
 # are the two knobs that silently regress (a dim outgrowing the broadcast
 # threshold turns a map-side join into a full shuffle; a lost bucketing
 # spec adds an Exchange); the rest mark the JSON parse, the Python
-# boundary and the checkpointed-frame fan-out. Counted as substring hits
-# on the physical plan.
+# boundary and the checkpointed-frame fan-out; ``rangepartitioning`` marks
+# a global sort, whose exchange first runs its input once more to sample
+# range bounds (a presentation sort goes through
+# ``operators.windows.sort_result`` instead). Counted as substring hits on
+# the physical plan.
 PLAN_FEATURES = (
     "Exchange",
     "BroadcastHashJoin",
@@ -63,6 +72,7 @@ PLAN_FEATURES = (
     "MapInPandas",
     "FlatMapGroupsInPandas",
     "ExistingRDD",
+    "rangepartitioning",
 )
 
 # Global (unpartitioned) windows tolerated because their input is bounded
@@ -230,6 +240,7 @@ def fingerprint(
 
 
 def main() -> None:
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", DRIVER_MEMORY)
     from ecommerce_event_pipeline_spark.session import get_spark
 
     spark = get_spark("plan-fingerprints", shuffle_partitions=4)
